@@ -362,7 +362,7 @@ class ChiCSClassifier(override val uid: String)
                     lit(0).cast(DecimalType(38, 12))).as("w_match"),
            sum(col("__w")).as("w_all"))
 
-    // 6dp-rounded decimal → exact double cast (see ChiMl.ruleBase note).
+    // 6dp-rounded decimal → exact double cast (see ChiMl.ruleBaseFrom note).
     val withRw = sums.filter(col("w_all") > 0)
       .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
                         round(col("w_all"), 6).cast(DoubleType))

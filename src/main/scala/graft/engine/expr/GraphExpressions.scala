@@ -50,80 +50,6 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `intersect_count(a, b)` — |set(a) ∩ set(b)| for two `array<string>`
-  * columns in ARBITRARY order, as a count-only hash probe: one hash set
-  * over the SMALLER side, remove-probes from the larger (distinct-count
-  * semantics fall out of the removal), no output array. Candidate
-  * replacement for `size(array_intersect(sha, shb))` in the dedup
-  * exact-Jaccard confirms, where the shingle arrays are in
-  * first-occurrence order (NOT sorted — [[SortedIntersectCount]] does not
-  * apply) and a near-duplicate pair's materialized intersection is nearly
-  * a full array copy per candidate pair.
-  *
-  * MEASURED NEUTRAL, deliberately NOT wired into the product confirms
-  * (round 16): examples/X08ConfirmProbe on the real x08 banded candidates
-  * at sf0.1 — 762 pairs, outputs identical, legs 0.24–0.41 s with deltas
-  * inside run noise. The confirm stage is candidate-bounded by
-  * construction (that is the point of banding/prefix-filtering), so the
-  * per-pair allocation never accumulates into a measurable cost the way
-  * x119's per-EDGE intersect does; swapping the expression would touch
-  * five oracle-checked keys for no demonstrated gain. Kept registered
-  * (with the probe as evidence) for a future corpus whose confirm mass is
-  * genuinely hot.
-  *
-  * Semantics replicated exactly: duplicates count once (set removal), a
-  * null element matches iff BOTH arrays contain one (counted once) —
-  * |set ∩| is symmetric, so probing from either side is the same number.
-  */
-case class IntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(org.apache.spark.sql.types.StringType),
-        ArrayType(org.apache.spark.sql.types.StringType))
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "intersect_count"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    IntersectCount.compute(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.engine.expr.IntersectCount.compute($a, $b);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object IntersectCount {
-  /** Shared by interpreted eval and generated code. */
-  def compute(x: ArrayData, y: ArrayData): Long = {
-    // build the set over the smaller side; |set(a) ∩ set(b)| is symmetric
-    val (s, l) = if (x.numElements() <= y.numElements()) (x, y) else (y, x)
-    val ns = s.numElements()
-    val set = new java.util.HashSet[org.apache.spark.unsafe.types.UTF8String](
-      ns * 2)
-    var sNull = false
-    var i = 0
-    while (i < ns) {
-      if (s.isNullAt(i)) sNull = true else set.add(s.getUTF8String(i))
-      i += 1
-    }
-    var cnt = 0L
-    var nullCounted = false
-    val nl = l.numElements()
-    var j = 0
-    while (j < nl) {
-      if (l.isNullAt(j)) {
-        if (sNull && !nullCounted) { cnt += 1L; nullCounted = true }
-      } else if (set.remove(l.getUTF8String(j))) cnt += 1L
-      j += 1
-    }
-    cnt
-  }
-}
-
 object SortedIntersectCount {
   /** Shared by interpreted eval and generated code. */
   def compute(a: ArrayData, b: ArrayData): Long = {

@@ -123,7 +123,6 @@ object FreqSketch {
   /** `freq_sketch(key, capacity)` builder for FunctionRegistry injection —
     * capacity must be a foldable integer literal. */
   def fromArgs(args: Seq[Expression]): FreqSketch = {
-    require(args.length == 2, "freq_sketch(key, capacity)")
     require(args(1).foldable && args(1).dataType == IntegerType,
       "freq_sketch capacity must be an integer literal")
     FreqSketch(args(0), args(1).eval().asInstanceOf[Int])

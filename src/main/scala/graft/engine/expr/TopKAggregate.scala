@@ -139,7 +139,6 @@ object TopKPairs {
   /** `topk_pairs(score, tag, k)` builder for FunctionRegistry injection —
     * k must be a foldable integer literal. */
   def fromArgs(args: Seq[Expression]): TopKPairs = {
-    require(args.length == 3, "topk_pairs(score, tag, k)")
     require(args(2).foldable && args(2).dataType == IntegerType,
       "topk_pairs k must be an integer literal")
     TopKPairs(args(0), args(1), args(2).eval().asInstanceOf[Int])

@@ -1,6 +1,6 @@
 package graft.engine.expr
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
@@ -85,61 +85,82 @@ case class FVecL2Sq(left: Expression, right: Expression) extends FloatVecFold {
     copy(left = newLeft, right = newRight)
 }
 
-/** Session extension installing the kernels as SQL functions (`fvec_dot`,
-  * `fvec_l2sq`) — callable from `functions.call_function` and `spark.sql`. */
+/** Session extension installing the native kernels as SQL functions —
+  * callable from `functions.call_function` and `spark.sql`. Each kernel is
+  * declared once in [[kernels]]: its accepted argument counts are checked
+  * here, before its build function runs, so a wrong count is an
+  * `AnalysisException` (WRONG_NUM_ARGS) like any built-in function's, and
+  * its usage text is what `DESCRIBE FUNCTION` shows. */
 object GraftExtensions {
-  def install(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("fvec_dot"),
-      new ExpressionInfo(classOf[FVecDot].getName, "fvec_dot"),
-      (args: Seq[Expression]) => FVecDot(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("fvec_l2sq"),
-      new ExpressionInfo(classOf[FVecL2Sq].getName, "fvec_l2sq"),
-      (args: Seq[Expression]) => FVecL2Sq(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      new ExpressionInfo(classOf[PqAdc].getName, "pq_adc"),
-      (args: Seq[Expression]) => PqAdc.fromArgs(args)))
-    e.injectFunction((
-      FunctionIdentifier("shingles"),
-      new ExpressionInfo(classOf[Shingles].getName, "shingles"),
-      (args: Seq[Expression]) => Shingles(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("rolling_fps"),
-      new ExpressionInfo(classOf[RollingHashFps].getName, "rolling_fps"),
-      (args: Seq[Expression]) =>
+  /** One SQL kernel: name, expression class, accepted argument counts,
+    * `ExpressionInfo` usage and build function. */
+  private[graft] final case class Kernel(name: String, cls: Class[_], arity: Range,
+                                         usage: String, build: Seq[Expression] => Expression)
+
+  private[graft] val kernels: Seq[Kernel] = Seq(
+    Kernel("fvec_dot", classOf[FVecDot], 2 to 2,
+      "_FUNC_(a, b) - Σ a[i]·b[i] of two array<float> columns, as a double.",
+      args => FVecDot(args(0), args(1))),
+    Kernel("fvec_l2sq", classOf[FVecL2Sq], 2 to 2,
+      "_FUNC_(a, b) - Σ (a[i] − b[i])² of two array<float> columns, as a double.",
+      args => FVecL2Sq(args(0), args(1))),
+    Kernel("pq_adc", classOf[PqAdc], 3 to Int.MaxValue,
+      "_FUNC_(qe, books, code_0, ..., code_M-1) - product-quantization distance of " +
+        "query embedding qe to the M codes; books is a literal " +
+        "array<array<array<double>>> of M sub-codebooks.",
+      PqAdc.fromArgs),
+    Kernel("shingles", classOf[Shingles], 2 to 2,
+      "_FUNC_(text, n) - the distinct word n-gram shingles of lower(text) split on " +
+        "spaces, in first-occurrence order.",
+      args => Shingles(args(0), args(1))),
+    Kernel("rolling_fps", classOf[RollingHashFps], 1 to 2,
+      "_FUNC_(text[, k]) - the Rabin-Karp fingerprints of every k-token window of " +
+        "lower(text); k is an integer literal in [1, 256], default 5.",
+      args =>
         if (args.length == 1) RollingHashFps(args(0))
         else RollingHashFps(args(0), args(1) match {
           case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
           case other => throw new IllegalArgumentException(
             s"rolling_fps window must be an integer literal, got $other")
-        })))
-    e.injectFunction((
-      FunctionIdentifier("lcp_count"),
-      new ExpressionInfo(classOf[LcpCount].getName, "lcp_count"),
-      (args: Seq[Expression]) => LcpCount(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCount].getName, "intersect_count"),
-      (args: Seq[Expression]) => IntersectCount(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(
-        classOf[SortedIntersectCount].getName, "sorted_intersect_count"),
-      (args: Seq[Expression]) => SortedIntersectCount(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("token_stats"),
-      new ExpressionInfo(classOf[TokenStats].getName, "token_stats"),
-      (args: Seq[Expression]) => TokenStats(args(0))))
-    e.injectFunction((
-      FunctionIdentifier("freq_sketch"),
-      new ExpressionInfo(classOf[FreqSketch].getName, "freq_sketch"),
-      (args: Seq[Expression]) => FreqSketch.fromArgs(args)))
-    e.injectFunction((
-      FunctionIdentifier("topk_pairs"),
-      new ExpressionInfo(classOf[TopKPairs].getName, "topk_pairs"),
-      (args: Seq[Expression]) => TopKPairs.fromArgs(args)))
+        })),
+    Kernel("lcp_count", classOf[LcpCount], 2 to 2,
+      "_FUNC_(a, b) - the length of the common prefix of two string arrays.",
+      args => LcpCount(args(0), args(1))),
+    Kernel("sorted_intersect_count", classOf[SortedIntersectCount], 2 to 2,
+      "_FUNC_(a, b) - |set(a) ∩ set(b)| of two array<bigint> columns. Both arrays " +
+        "MUST be sorted ascending with nulls first (sort_array's default); on " +
+        "unsorted input the count is undefined.",
+      args => SortedIntersectCount(args(0), args(1))),
+    Kernel("token_stats", classOf[TokenStats], 1 to 1,
+      "_FUNC_(text) - struct<n_tokens, max_cnt, sum_clnc> of the lowercase " +
+        "space-split non-empty tokens of text.",
+      args => TokenStats(args(0))),
+    Kernel("freq_sketch", classOf[FreqSketch], 2 to 2,
+      "_FUNC_(key, capacity) - aggregate: Misra-Gries frequent-items summary as " +
+        "map<key, weight> of at most capacity (an integer literal) entries.",
+      FreqSketch.fromArgs),
+    Kernel("topk_pairs", classOf[TopKPairs], 3 to 3,
+      "_FUNC_(score, tag, k) - aggregate: the k strongest (score, tag) pairs under " +
+        "(score DESC, tag ASC); k is an integer literal.",
+      TopKPairs.fromArgs))
+
+  def install(e: SparkSessionExtensions): Unit = {
+    kernels.foreach { k =>
+      e.injectFunction((
+        FunctionIdentifier(k.name),
+        new ExpressionInfo(k.cls.getName, null, k.name, k.usage, "", "", "", "", "", "", ""),
+        (args: Seq[Expression]) => {
+          if (!k.arity.contains(args.length))
+            throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+              "functionName" -> s"`${k.name}`",
+              "expectedNum" ->
+                (if (k.arity.end == Int.MaxValue) s">= ${k.arity.start}"
+                 else k.arity.mkString(" or ")),
+              "actualNum" -> args.length.toString,
+              "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+          k.build(args)
+        }))
+    }
     // whole-operator extension: native as-of join (graft.plans.AsOfJoinPlan)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }

@@ -187,3 +187,26 @@ object DumpPlans {
     spark.stop()
   }
 }
+
+/** Writes `<outDir>/<key>_<tag>.txt`, the formatted physical plan of every
+  * registry key named (by prefix) on the command line — the before/after
+  * evidence of a plan-changing edit.
+  * Usage: sbt "runMain graft.examples.DumpKeyPlans <sfDir> <outDir> <tag> q41 x281 ..." */
+object DumpKeyPlans {
+  def main(args: Array[String]): Unit = {
+    val Array(dir, outDir, tag) = args.take(3)
+    val spark = graft.engine.Sessions.local(8, 8)
+    Files.createDirectories(Paths.get(outDir))
+    args.drop(3).foreach { prefix =>
+      val name = graft.SparkEntry.queries.keys.find(_.startsWith(prefix))
+        .getOrElse(sys.error(s"no key matches $prefix"))
+      val df = graft.SparkEntry.queries(name)(spark, dir)
+      val txt = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)
+      val out = Paths.get(outDir, s"${name}_$tag.txt")
+      Files.writeString(out, txt)
+      println(s"[plans] wrote $out")
+    }
+    spark.stop()
+  }
+}

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.engine.Mat.MatOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.Tables
@@ -39,133 +39,170 @@ object ChiMl {
       .withColumn("a1", ChiCore.argmaxLabel(ChiCore.memberships(col("x1"), P1)))
       .withColumn("a2", ChiCore.argmaxLabel(ChiCore.memberships(col("x2"), P2)))
 
-  /** The final rule base (the result of R4–R7): cost-sensitive PCF weight per
-    * candidate (antecedent, class), conflict-resolved to max weight, RW>0.
-    * With costSensitive=false this is the BASE Chi-FRBCS rule base (the
-    * algorithm the CS variant extends: every example weighs 1, PCF = plain
-    * penalized certainty factor) — x51/x52 expose it so the cost vector's
-    * effect on the learned rules is directly observable. */
-  /** Antecedent match degree of (x1, x2) against labels (ra1, ra2) under
-    * the given t-norm — PRODUCT is [P1]'s choice (and every other key's);
-    * MINIMUM is the other classical FRBCS conjunction, ablated by x285. */
-  private def matchDegree(tnormMin: Boolean): Column = {
+  /** Match degree of (x1, x2) against labels (ra1, ra2) under the t-norm,
+    * scaled by `factor` first: c·μ1·μ2 multiplies left to right exactly as
+    * the oracle SQL spells it. PRODUCT is [P1]'s t-norm (and every key's but
+    * one); MINIMUM is the other classical FRBCS conjunction, ablated by x285. */
+  private def matchDegree(tnormMin: Boolean, factor: Column = lit(1.0)): Column = {
     val m1 = ChiCore.membershipAt(col("x1"), col("ra1"), P1)
     val m2 = ChiCore.membershipAt(col("x2"), col("ra2"), P2)
-    if (tnormMin) least(m1, m2) else m1 * m2
+    if (tnormMin) factor * least(m1, m2) else factor * m1 * m2
   }
 
-  private[queries] def ruleBase(spark: SparkSession, dir: String,
-                                costSensitive: Boolean = true,
-                                tnormMin: Boolean = false): DataFrame =
-    // Pre-aggregate to DISTINCT feature vectors with multiplicity before the
-    // candidate fan-out: W is a pure function of (x1, x2, cls), and
-    // DECIMAL × integer-count is exact, so Σ_examples W ≡ Σ_vectors W·m
-    // digit-for-digit — the oracle's full example×candidate cross join
-    // collapses from |rows|·|candidates| decimal terms to |vectors|·|cands|.
-    // (The one added shuffle keys on the vector itself; at 100 TB this is the
-    // difference between 1.8 B and ~20 k weight terms for this task.)
-    //
-    // Every downstream input — the cost vector, the candidate set, and the
-    // weight terms — is derived from THIS aggregate (class counts via
-    // Σ mcnt, identical integers), so its one exchange is computed once and
-    // ReusedExchange serves the other consumers; the earlier form re-derived
-    // costs from the raw table and re-scanned lineitem once per consumer.
-    ruleBaseFrom(vectorGex(spark, dir), costSensitive, tnormMin)
+  /** R3 cost of a class with count `n`: max/min class count for the
+    * minority class, 1 for the others, over the classes of `w`. */
+  private def classCost(n: Column, w: WindowSpec): Column =
+    when(n === min(n).over(w), max(n).over(w) * lit(1.0) / n).otherwise(lit(1.0))
 
-  /** The distinct-feature-vector training aggregate every fit consumes. */
+  /** `small` (≤ a few hundred rows) broadcast onto `df` by the shared `key`
+    * columns — a cross join when the key is empty. */
+  private def attach(df: DataFrame, small: DataFrame, key: Seq[String]): DataFrame =
+    if (key.isEmpty) df.crossJoin(broadcast(small)) else df.join(broadcast(small), key)
+
+  /** The distinct-feature-vector training aggregate every fit consumes:
+    * (x1, x2, a1, a2, cls, mcnt). Identical examples weigh identically, so
+    * the fit works |vectors|·|candidates| decimal terms instead of
+    * |rows|·|candidates|; callers that read it more than once (a fit plus
+    * its scoring grid, two fits) pass ONE materialized copy so the corpus is
+    * scanned once. */
   private[queries] def vectorGex(spark: SparkSession, dir: String): DataFrame =
     labeled(spark, dir).groupBy("x1", "x2", "a1", "a2", "cls")
       .agg(count(lit(1)).as("mcnt"))
 
-  /** The fit from a prepared vector aggregate — callers fitting SEVERAL
-    * variants off the same data (x285's two t-norms) pass ONE
-    * localCheckpoint'd gex0 so the corpus is scanned once, not per fit. */
-  private[queries] def ruleBaseFrom(gex0: DataFrame,
+  /** THE CS-PCF learner (R3–R7): one rule base per distinct `rbKey` value of
+    * `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), with the cost vector
+    * per distinct `costKey` value. Global keys pass Nil for both, the m-chunk
+    * mappers (x281/x308) key the rule base by `chunk` but keep the cost
+    * vector global, cross-validation keys both by `model`. With
+    * costSensitive=false every example weighs 1 (the BASE Chi-FRBCS, plain
+    * PCF). Returns (rbKey…, ra1, ra2, rcls, rw): per antecedent the
+    * max-weight consequent (tie → lowest class), RW > 0 only. The cost
+    * vector, the candidate set and the weight terms all derive from `gex`,
+    * so an unmaterialized aggregate's one exchange is reused by all three.
+    *
+    * Decimal protocol (bit-identical to the oracle): each term is rounded
+    * to 12 dp and cast DECIMAL(18,12), times the multiplicity as
+    * DECIMAL(19,0) — exactly DECIMAL(38,12), so the sums are exact and
+    * order-free (a (38,12) term would overflow against the bigint count and
+    * allowPrecisionLoss would round each product to scale 6). The sums are
+    * rounded to 6 dp BEFORE the double cast: the scaled integers then fit in
+    * 53 bits, the conversion is exact on every engine, and rw is
+    * bit-identical to the oracle's (an unrounded DECIMAL(38,12) cast can
+    * differ by 1 ulp between engines, which flipped a winning-rule tie). */
+  private[queries] def ruleBaseFrom(gex: DataFrame,
                                     costSensitive: Boolean,
-                                    tnormMin: Boolean): DataFrame = {
-    val all = Window.partitionBy()
-    val costsDf = {
-      val withC = gex0.groupBy("cls").agg(sum(col("mcnt")).as("n"))
-        .withColumn("c",
-          when(col("n") === min("n").over(all), max("n").over(all) * lit(1.0) / col("n"))
-            .otherwise(lit(1.0)))
-      withC.agg(max(when(col("cls") === 1, col("c"))).as("c1"),
-                max(when(col("cls") === 0, col("c"))).as("c0"))
-    }
-    val gex = if (costSensitive) gex0.crossJoin(broadcast(costsDf)) else gex0
-    val ants = gex0.select(col("a1").as("ra1"), col("a2").as("ra2"),
-                           col("cls").as("rcls")).distinct()
-    val costFactor =
-      if (costSensitive) when(col("cls") === 1, col("c1")).otherwise(col("c0"))
-      else lit(1.0)
-    // DECIMAL(18,12) × DECIMAL(19,0) → exactly (38,12): scale 12 kept, any
-    // long count representable; a (38,12) term would overflow against the
-    // bigint count and allowPrecisionLoss would round each product to
-    // scale 6 (see ChiCSClassifier.fit note)
-    val w = round(costFactor * matchDegree(tnormMin),
-        12).cast(DecimalType(18, 12)) * col("mcnt").cast(DecimalType(19, 0))
-    val m = gex.crossJoin(broadcast(ants))
-      .select(col("ra1"), col("ra2"), col("rcls"), col("cls"), w.as("w"))
-      .groupBy("ra1", "ra2", "rcls")
+                                    tnormMin: Boolean,
+                                    rbKey: Seq[String] = Nil,
+                                    costKey: Seq[String] = Nil): DataFrame = {
+    val (weighted, costFactor) =
+      if (!costSensitive) (gex, lit(1.0))
+      else {
+        val costs = gex.groupBy((costKey :+ "cls").map(col): _*)
+          .agg(sum(col("mcnt")).as("n"))
+          .withColumn("c", classCost(col("n"), Window.partitionBy(costKey.map(col): _*)))
+          .groupBy(costKey.map(col): _*)
+          .agg(max(when(col("cls") === 1, col("c"))).as("c1"),
+               max(when(col("cls") === 0, col("c"))).as("c0"))
+        (attach(gex, costs, costKey), when(col("cls") === 1, col("c1")).otherwise(col("c0")))
+      }
+    val ants = gex.select((rbKey.map(col) :+ col("a1").as("ra1") :+ col("a2").as("ra2")
+                           :+ col("cls").as("rcls")): _*).distinct()
+    val w = round(matchDegree(tnormMin, costFactor), 12).cast(DecimalType(18, 12)) *
+      col("mcnt").cast(DecimalType(19, 0))
+    val sums = attach(weighted, ants, rbKey)
+      .select((rbKey ++ Seq("ra1", "ra2", "rcls", "cls")).map(col) :+ w.as("w"): _*)
+      .groupBy((rbKey ++ Seq("ra1", "ra2", "rcls")).map(col): _*)
       .agg(sum(when(col("cls") === col("rcls"), col("w"))).as("w_match"),
            sum(col("w")).as("w_all"))
-    // The decimal sums are rounded to 6dp BEFORE the double cast: the scaled
-    // integers then fit in 53 bits, so the decimal→double conversion is exact
-    // on every engine and rw is bit-identical to the oracle's. (An unrounded
-    // DECIMAL(38,12) cast can differ by 1 ulp between engines, which flipped
-    // a winning-rule tie downstream.)
-    val rw = m.filter(col("w_all") > 0)
+    val byAnt = Window.partitionBy((rbKey ++ Seq("ra1", "ra2")).map(col): _*)
+      .orderBy(col("rw").desc, col("rcls"))
+    sums.filter(col("w_all") > 0)
       .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
                         round(col("w_all"), 6).cast(DoubleType))
-    val byAnt = Window.partitionBy("ra1", "ra2")
-      .orderBy(col("rw").desc, col("rcls"))
-    rw.withColumn("rn", row_number().over(byAnt))
+      .withColumn("rn", row_number().over(byAnt))
       .filter(col("rn") === 1 && col("rw") > 0)
-      .select(col("ra1"), col("ra2"), col("rcls"), col("rw"))
+      .select((rbKey ++ Seq("ra1", "ra2", "rcls", "rw")).map(col): _*)
   }
 
-  /** Winning-rule classification against the rule base (R9), per DISTINCT
-    * feature vector with multiplicity: identical examples classify
-    * identically, so we group to (x1, x2, cls, m=count) first, score each
-    * distinct vector once against the ≤9 broadcast rules, and weight the
-    * confusion matrix by m.
-    *
-    * This is both the determinism fix — (l_orderkey, l_linenumber) is NOT
-    * unique in the data, so partitioning by it merged different examples and
-    * let cross-example score ties order arbitrarily — and the 100 TB plan:
-    * distinct feature vectors ≪ rows, so the expensive fan-out shrinks by the
-    * duplication factor. */
-  private[queries] def classified(spark: SparkSession, dir: String,
-                                  costSensitive: Boolean = true): DataFrame = {
-    // ONE corpus scan (guide §1.2 "remove unnecessary passes"): the scoring
-    // grain (x1, x2, cls, m) derives from the SAME distinct-vector
-    // aggregate the rule-base fit consumes — (a1, a2) is a pure function of
-    // (x1, x2), so each (x1, x2, cls) group has exactly one (a1, a2) row
-    // and sum(mcnt) ≡ the previous direct count(1); the un-shared form
-    // scanned lineitem once per consumer (the two groupBys' different keys
-    // defeat ReusedExchange).
-    val vg = vectorGex(spark, dir).materialized
-    val gex = vg.groupBy("x1", "x2", "cls").agg(sum(col("mcnt")).as("m"))
-    val scored = gex.crossJoin(
-      broadcast(ruleBaseFrom(vg, costSensitive, tnormMin = false)))
-      .withColumn("score",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2) * col("rw"), 12))
-    val perEx = Window.partitionBy("x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"))
-    scored.withColumn("rn", row_number().over(perEx)).filter(col("rn") === 1)
-      .select(col("x1"), col("x2"), col("cls").as("actual"),
-              col("rcls").as("predicted"), col("m"))
+  /** The scoring grain: (key…, x1, x2, cls, m) — one row per distinct
+    * feature vector and class, with its multiplicity. */
+  private[queries] def scoringGrid(gex: DataFrame, key: Seq[String] = Nil): DataFrame =
+    gex.groupBy((key ++ Seq("x1", "x2", "cls")).map(col): _*)
+      .agg(sum(col("mcnt")).as("m"))
+
+  /** Every (example, rule) pair of a scoring grid and a rule base of the
+    * same `key`, with its R9 score round(μ1⊗μ2·rw, 12). */
+  private[queries] def ruleScores(grid: DataFrame, rb: DataFrame,
+                                  key: Seq[String] = Nil,
+                                  tnormMin: Boolean = false): DataFrame =
+    attach(grid, rb, key).withColumn("score", round(matchDegree(tnormMin) * col("rw"), 12))
+
+  /** THE winning-rule classifier (R9): per example (key…, x1, x2, cls) the
+    * highest-scoring rule. The tie order is TOTAL — score desc, rcls, ra1,
+    * ra2 — so the winning RULE is deterministic, not just its class; callers
+    * that read only the class and score get what (score desc, rcls) gives.
+    * Scoring is per distinct feature vector with multiplicity:
+    * (l_orderkey, l_linenumber) is NOT unique in the data, so a per-row
+    * window would merge different examples and order their score ties
+    * arbitrarily, and distinct vectors ≪ rows at scale. */
+  private[queries] def winningRules(scores: DataFrame, key: Seq[String] = Nil): DataFrame = {
+    val perEx = Window.partitionBy((key ++ Seq("x1", "x2", "cls")).map(col): _*)
+      .orderBy(col("score").desc, col("rcls"), col("ra1"), col("ra2"))
+    scores.withColumn("rn", row_number().over(perEx)).filter(col("rn") === 1).drop("rn")
   }
+
+  /** The global CS (or base) rule base fitted on `vg` — a materialized
+    * [[vectorGex]] — applied to the same vectors: (x1, x2, cls, m, ra1, ra2,
+    * rcls, rw, score), one row per distinct (x1, x2, cls). */
+  private def classified(vg: DataFrame, costSensitive: Boolean = true): DataFrame =
+    winningRules(ruleScores(scoringGrid(vg),
+      ruleBaseFrom(vg, costSensitive, tnormMin = false)))
+
+  /** THE binary confusion aggregate (R10): tp/tn/fp/fn as sums of `mass`
+    * over the 0/1 `actual` and `predicted` columns, grouped by `by`, plus
+    * the tpr and tnr columns. */
+  private[queries] def binaryConfusion(df: DataFrame, actual: String, predicted: String,
+                                       mass: Column, by: Seq[String] = Nil): DataFrame = {
+    def cell(a: Int, p: Int): Column =
+      sum(when(col(actual) === a && col(predicted) === p, mass).otherwise(0L))
+    df.groupBy(by.map(col): _*)
+      .agg(cell(1, 1).as("tp"), cell(0, 0).as("tn"), cell(0, 1).as("fp"), cell(1, 0).as("fn"))
+      .withColumn("tpr", col("tp") * lit(1.0) / (col("tp") + col("fn")))
+      .withColumn("tnr", col("tn") * lit(1.0) / (col("tn") + col("fp")))
+  }
+
+  /** The no-match fallback: (actual, pred, m) with the winner's class where
+    * its `evidence` column is positive, else the majority class of the
+    * training aggregate `gex` (tie → lowest class). */
+  private def predictOrMajority(win: DataFrame, gex: DataFrame, evidence: String): DataFrame = {
+    val maj = gex.groupBy("cls").agg(sum(col("mcnt")).as("n"))
+      .orderBy(col("n").desc, col("cls")).limit(1)
+      .select(col("cls").as("maj"))
+    win.crossJoin(broadcast(maj))
+      .select(col("cls").as("actual"),
+              when(col(evidence) > 0, col("rcls")).otherwise(col("maj")).as("pred"),
+              col("m"))
+  }
+
+  /** 6-dp accuracy and GM of a [[binaryConfusion]] row. */
+  private[queries] val accuracyGm: Seq[Column] = Seq(
+    round((col("tp") + col("tn")) * lit(1.0) /
+          (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
+    round(sqrt(col("tpr") * col("tnr")), 6).as("gm"))
+
+  /** Accuracy and GM in bit-stable integer micro-units of a
+    * [[binaryConfusion]] row (the ablation reports' shape). */
+  private val ppmMetrics: Seq[Column] = Seq(
+    round((col("tp") + col("tn")) * lit(1000000.0) /
+          (col("tp") + col("tn") + col("fp") + col("fn")), 0).cast(LongType).as("acc_ppm"),
+    round(sqrt(col("tpr") * col("tnr")) * 1000000, 0).cast(LongType).as("gm_ppm"))
 
   /** q38: class counts + cost vector (R3). */
   def q38(spark: SparkSession, dir: String): DataFrame = {
-    val all = Window.partitionBy()
     labeled(spark, dir).groupBy("cls").agg(count(lit(1)).as("n"))
       .select(col("cls").cast(LongType).as("cls"), col("n"),
-              round(when(col("n") === min("n").over(all),
-                         max("n").over(all) * lit(1.0) / col("n"))
-                      .otherwise(lit(1.0)).cast(DoubleType), 6).as("cost"))
+              round(classCost(col("n"), Window.partitionBy()).cast(DoubleType), 6)
+                .as("cost"))
       .orderBy("cls")
   }
 
@@ -199,67 +236,38 @@ object ChiMl {
       .orderBy("a1", "a2")
 
   private def confusionOut(cl: DataFrame): DataFrame =
-    cl.groupBy("actual", "predicted").agg(sum(col("m")).as("n"))
-      .select(col("actual").cast(LongType).as("actual"),
-              col("predicted").cast(LongType).as("predicted"), col("n"))
+    cl.groupBy(col("cls").cast(LongType).as("actual"),
+               col("rcls").cast(LongType).as("predicted"))
+      .agg(sum(col("m")).as("n"))
       .orderBy("actual", "predicted")
 
   def q41(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBase(spark, dir))
+    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir), costSensitive = true, tnormMin = false))
 
   /** q42: winning-rule classification → confusion matrix (R9/R10). */
   def q42(spark: SparkSession, dir: String): DataFrame =
-    confusionOut(classified(spark, dir))
+    confusionOut(classified(vectorGex(spark, dir).materialized))
 
   /** x51: the BASE (non-cost-sensitive) Chi-FRBCS rule base — q41's chain
     * with unit costs. Same plan shape; the learned weights differ wherever
     * the cost vector tipped a conflict toward the minority class. */
   def x51(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBase(spark, dir, costSensitive = false))
+    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir), costSensitive = false, tnormMin = false))
 
   /** x52: base-variant confusion matrix — q42 without cost weighting; read
     * against q42 it quantifies what cost-sensitivity buys on the minority
     * class (the reference family's own CS-vs-base comparison). */
   def x52(spark: SparkSession, dir: String): DataFrame =
-    confusionOut(classified(spark, dir, costSensitive = false))
+    confusionOut(classified(vectorGex(spark, dir).materialized, costSensitive = false))
 
   /** q43: accuracy / TPR / TNR / GM / AUC from the confusion matrix (R10). */
   def q43(spark: SparkSession, dir: String): DataFrame = {
-    val cm = classified(spark, dir).agg(
-      sum(when(col("actual") === 1 && col("predicted") === 1, col("m")).otherwise(0L)).as("tp"),
-      sum(when(col("actual") === 0 && col("predicted") === 0, col("m")).otherwise(0L)).as("tn"),
-      sum(when(col("actual") === 0 && col("predicted") === 1, col("m")).otherwise(0L)).as("fp"),
-      sum(when(col("actual") === 1 && col("predicted") === 0, col("m")).otherwise(0L)).as("fn"))
-    val tpr: Column = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-    val tnr: Column = col("tn") * lit(1.0) / (col("tn") + col("fp"))
+    val cm = binaryConfusion(classified(vectorGex(spark, dir).materialized),
+                             "cls", "rcls", col("m"))
+    val Seq(accuracy, gm) = accuracyGm
     val fpr: Column = col("fp") * lit(1.0) / (col("fp") + col("tn"))
-    cm.select(
-      round((col("tp") + col("tn")) * lit(1.0) /
-            (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
-      round(tpr, 6).as("tpr"),
-      round(tnr, 6).as("tnr"),
-      round(sqrt(tpr * tnr), 6).as("gm"),
-      round((lit(1) + tpr - fpr) / lit(2), 6).as("auc"))
-  }
-
-  /** Winning-rule frame WITH rule identity: q42's scoring chain, but the
-    * per-example tie order is refined to a TOTAL order (score desc, rcls,
-    * ra1, ra2) so the winning RULE — not just its class — is deterministic.
-    * Base for the explainability operators x201/x202. */
-  private def winningRule(spark: SparkSession, dir: String): DataFrame = {
-    // one corpus scan — the classified() single-aggregate device
-    val vg = vectorGex(spark, dir).materialized
-    val gex = vg.groupBy("x1", "x2", "cls").agg(sum(col("mcnt")).as("m"))
-    val perEx = Window.partitionBy("x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"), col("ra1"), col("ra2"))
-    gex.crossJoin(broadcast(ruleBaseFrom(vg, costSensitive = true,
-        tnormMin = false)))
-      .withColumn("score",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2) * col("rw"), 12))
-      .withColumn("rn", row_number().over(perEx)).filter(col("rn") === 1)
-      .select(col("x1"), col("x2"), col("cls").as("actual"), col("m"),
-              col("ra1"), col("ra2"), col("rcls"), col("rw"), col("score"))
+    cm.select(accuracy, round(col("tpr"), 6).as("tpr"), round(col("tnr"), 6).as("tnr"), gm,
+              round((lit(1) + col("tpr") - fpr) / lit(2), 6).as("auc"))
   }
 
   /** x201: PER-RULE COVERAGE — the FRBCS model card: for every rule in the
@@ -274,13 +282,15 @@ object ChiMl {
     * only row-scale work is the vector compression); the coverage rollup
     * groups ≤|vectors| rows by ≤9 rules. */
   def x201(spark: SparkSession, dir: String): DataFrame = {
-    val rb = ruleBase(spark, dir)
+    // one corpus scan: the rule base and the winners share one aggregate
+    val vg = vectorGex(spark, dir).materialized
+    val rb = ruleBaseFrom(vg, costSensitive = true, tnormMin = false)
       .select(col("ra1").as("ba1"), col("ra2").as("ba2"),
               col("rcls").as("bcls"), col("rw").as("brw"))
-    val winAgg = winningRule(spark, dir)
+    val winAgg = classified(vg)
       .groupBy("ra1", "ra2", "rcls")
       .agg(sum(col("m")).as("n_won"),
-           sum(when(col("actual") === col("rcls"), col("m")).otherwise(0L)).as("n_correct"))
+           sum(when(col("cls") === col("rcls"), col("m")).otherwise(0L)).as("n_correct"))
     val total = Window.partitionBy() // over the ≤9-row joined aggregate
     rb.join(winAgg,
         col("ba1") === col("ra1") && col("ba2") === col("ra2") &&
@@ -315,17 +325,15 @@ object ChiMl {
     * integers once — no float accumulation order to disagree across
     * engines. (×1e12 would be exacter but overflows int64 at ~9M rows.) */
   def x202(spark: SparkSession, dir: String): DataFrame = {
-    val win = winningRule(spark, dir)
-      .withColumn("act",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2), 12))
+    val win = classified(vectorGex(spark, dir).materialized)
+      .withColumn("act", round(matchDegree(tnormMin = false), 12))
       .withColumn("bucket",
         least(floor(col("act") * 10).cast(LongType), lit(9L)))
       .withColumn("act_p6", round(col("act") * 1e6, 0).cast(LongType))
     win.groupBy("bucket")
       .agg(sum(col("m")).as("n"),
            sum(col("act_p6") * col("m")).as("sp6"),
-           sum(when(col("actual") === col("rcls"), col("m")).otherwise(0L)).as("n_correct"))
+           sum(when(col("cls") === col("rcls"), col("m")).otherwise(0L)).as("n_correct"))
       .select(col("bucket"), col("n"),
               round(col("sp6") * lit(1.0) / (col("n") * lit(1e6)), 6).as("mean_activation"),
               col("n_correct"),
@@ -347,12 +355,14 @@ object ChiMl {
     * |vectors| — broadcast — and each example's (cs, base) verdict pair is
     * weighted by its multiplicity in one final 1-row aggregate. */
   def x199(spark: SparkSession, dir: String): DataFrame = {
-    val cs = classified(spark, dir)
-      .select(col("x1"), col("x2"), col("actual"),
-              col("predicted").as("pred_cs"), col("m"))
-    val base = classified(spark, dir, costSensitive = false)
+    // one corpus scan: both fits and both scorings share one aggregate
+    val vg = vectorGex(spark, dir).materialized
+    val cs = classified(vg)
+      .select(col("x1"), col("x2"), col("cls").as("actual"),
+              col("rcls").as("pred_cs"), col("m"))
+    val base = classified(vg, costSensitive = false)
       .select(col("x1").as("bx1"), col("x2").as("bx2"),
-              col("actual").as("bactual"), col("predicted").as("pred_base"))
+              col("cls").as("bactual"), col("rcls").as("pred_base"))
     // (x1, x2, actual) is the classification grain on both sides → 1:1 join
     val csOk = col("pred_cs") === col("actual")
     val baseOk = col("pred_base") === col("bactual")
@@ -399,18 +409,7 @@ object ChiMl {
     * output — hundreds of rows). A per-row global sort (the ntile idiom)
     * would shuffle every example; this never ranks rows at all. */
   def x272(spark: SparkSession, dir: String): DataFrame = {
-    // one corpus scan — the classified() single-aggregate device
-    val vg = vectorGex(spark, dir).materialized
-    val gex = vg.groupBy("x1", "x2", "cls").agg(sum(col("mcnt")).as("m"))
-    val scored = gex.crossJoin(
-      broadcast(ruleBaseFrom(vg, costSensitive = true, tnormMin = false)))
-      .withColumn("score",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2) * col("rw"), 12))
-    val perEx = Window.partitionBy("x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"))
-    val best = scored.withColumn("rn", row_number().over(perEx))
-      .filter(col("rn") === 1)
+    val best = classified(vectorGex(spark, dir).materialized)
       .select(col("x1"), col("x2"), col("cls"), col("m"), col("score"))
     val ord = Window.orderBy(col("score").desc, col("x1"), col("x2"), col("cls"))
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -537,46 +536,11 @@ object ChiMl {
                                    m: Int): DataFrame =
     mChunkFusedRbFrom(mChunkGex(spark, dir, m))
 
-  /** The CHUNK-LOCAL partial rule bases (each mapper's resolved RB): the
-    * shared first half of both fusion variants — chunk-local CS-PCF weight
-    * sums, chunk-local conflict resolution, positive-RW filter. Returns
-    * (chunk, ra1, ra2, rcls, rw). */
-  private def mChunkPartialRb(gex: DataFrame): DataFrame = {
-    val all = Window.partitionBy()
-    val costsDf = {
-      val withC = gex.groupBy("cls").agg(sum(col("mcnt")).as("n"))
-        .withColumn("c",
-          when(col("n") === min("n").over(all),
-               max("n").over(all) * lit(1.0) / col("n"))
-            .otherwise(lit(1.0)))
-      withC.agg(max(when(col("cls") === 1, col("c"))).as("c1"),
-                max(when(col("cls") === 0, col("c"))).as("c0"))
-    }
-    val ants = gex.select(col("chunk").as("achunk"), col("a1").as("ra1"),
-                          col("a2").as("ra2"), col("cls").as("rcls")).distinct()
-    val w = round(
-        when(col("cls") === 1, col("c1")).otherwise(col("c0")) *
-          ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-          ChiCore.membershipAt(col("x2"), col("ra2"), P2),
-        12).cast(DecimalType(18, 12)) * col("mcnt").cast(DecimalType(19, 0))
-    val sums = gex.crossJoin(broadcast(costsDf))
-      .join(broadcast(ants), col("chunk") === col("achunk"))
-      .select(col("chunk"), col("ra1"), col("ra2"), col("rcls"), col("cls"),
-              w.as("w"))
-      .groupBy("chunk", "ra1", "ra2", "rcls")
-      .agg(sum(when(col("cls") === col("rcls"), col("w"))).as("w_match"),
-           sum(col("w")).as("w_all"))
-    val rw = sums.filter(col("w_all") > 0)
-      .withColumn("rw",
-        round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
-          round(col("w_all"), 6).cast(DoubleType))
-    // chunk-local conflict resolution (the mapper's R6/R7)
-    val byChunkAnt = Window.partitionBy("chunk", "ra1", "ra2")
-      .orderBy(col("rw").desc, col("rcls"))
-    rw.withColumn("rn", row_number().over(byChunkAnt))
-      .filter(col("rn") === 1 && col("rw") > 0)
-      .select(col("chunk"), col("ra1"), col("ra2"), col("rcls"), col("rw"))
-  }
+  /** The CHUNK-LOCAL partial rule bases, each mapper's resolved RB: the
+    * shared first half of both fusion variants (chunk-keyed rule base, global
+    * cost vector). Returns (chunk, ra1, ra2, rcls, rw). */
+  private def mChunkPartialRb(gex: DataFrame): DataFrame =
+    ruleBaseFrom(gex, costSensitive = true, tnormMin = false, rbKey = Seq("chunk"))
 
   /** The reducer's MAX-RW fusion across chunks (Chi-FRBCS-BigData-Max,
     * [P2]): per antecedent keep the single partial rule with maximum
@@ -644,36 +608,10 @@ object ChiMl {
     // the fused base is ≤ L²·|C| rows read by two consumers — materialize
     // once instead of re-deriving the whole chunked chain per consumer
     val fused = fuse(gex).materialized
-    val majDf = gex.groupBy("cls").agg(sum(col("mcnt")).as("n"))
-      .orderBy(col("n").desc, col("cls")).limit(1)
-      .select(col("cls").as("maj"))
-    val gexS = gex.groupBy("x1", "x2", "cls").agg(sum(col("mcnt")).as("mm"))
-    val scored = gexS.crossJoin(broadcast(fused))
-      .withColumn("score",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2) * col("rw"), 12))
-    val perEx = Window.partitionBy("x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"))
-    val win = scored.withColumn("rn", row_number().over(perEx))
-      .filter(col("rn") === 1)
-      .crossJoin(broadcast(majDf))
-      .select(col("cls").as("actual"),
-              when(col("score") > 0, col("rcls")).otherwise(col("maj"))
-                .as("pred"),
-              col("mm"))
-    val cm = win.agg(
-      sum(when(col("actual") === 1 && col("pred") === 1, col("mm")).otherwise(0L)).as("tp"),
-      sum(when(col("actual") === 0 && col("pred") === 0, col("mm")).otherwise(0L)).as("tn"),
-      sum(when(col("actual") === 0 && col("pred") === 1, col("mm")).otherwise(0L)).as("fp"),
-      sum(when(col("actual") === 1 && col("pred") === 0, col("mm")).otherwise(0L)).as("fn"))
-    val tpr: Column = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-    val tnr: Column = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-    cm.crossJoin(broadcast(fused.agg(count(lit(1)).as("n_rules"))))
-      .select(lit(m.toLong).as("m"), col("n_rules"),
-              round((col("tp") + col("tn")) * lit(1000000.0) /
-                    (col("tp") + col("tn") + col("fp") + col("fn")), 0)
-                .cast(LongType).as("acc_ppm"),
-              round(sqrt(tpr * tnr) * 1000000, 0).cast(LongType).as("gm_ppm"))
+    val win = winningRules(ruleScores(scoringGrid(gex), fused))
+    binaryConfusion(predictOrMajority(win, gex, "score"), "actual", "pred", col("m"))
+      .crossJoin(broadcast(fused.agg(count(lit(1)).as("n_rules"))))
+      .select(lit(m.toLong).as("m") +: col("n_rules") +: ppmMetrics: _*)
   }
 
   /** x285: FUZZY REASONING METHOD ABLATION — the FRBCS design grid the Chi
@@ -714,50 +652,23 @@ object ChiMl {
     val fused = ruleBaseFrom(gex0, costSensitive = true, tnormMin = tnormMin)
       .materialized
     val nRules = fused.agg(count(lit(1)).as("n_rules"))
-    val gexS = gex0.groupBy("x1", "x2", "cls")
-      .agg(sum(col("mcnt")).as("mm"))
-    val majDf = gexS.groupBy("cls").agg(sum(col("mm")).as("n"))
-      .orderBy(col("n").desc, col("cls")).limit(1)
-      .select(col("cls").as("maj"))
     // grid-bounded (≤ |x1 grid|·|x2 grid|·2·|RB| rows): materialize once,
-    // both FRMs and the majority fallback read it without re-scanning
-    val scored = gexS.crossJoin(broadcast(fused))
-      .withColumn("score", round(matchDegree(tnormMin) * col("rw"), 12))
+    // both FRMs read it without re-scanning
+    val scored = ruleScores(scoringGrid(gex0), fused, tnormMin = tnormMin)
       .withColumn("si", round(col("score") * lit(1e12), 0).cast(LongType))
       .materialized
-    val perEx = Window.partitionBy("x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"))
-    val winW = scored.withColumn("rn", row_number().over(perEx))
-      .filter(col("rn") === 1)
-      .crossJoin(broadcast(majDf))
-      .select(col("cls").as("actual"),
-              when(col("score") > 0, col("rcls")).otherwise(col("maj"))
-                .as("pred"), col("mm"))
-    val votes = scored.groupBy("x1", "x2", "cls", "mm", "rcls")
+    val winW = predictOrMajority(winningRules(scored), gex0, "score")
+    val votes = scored.groupBy("x1", "x2", "cls", "m", "rcls")
       .agg(sum(col("si")).as("v"))
     val perCls = Window.partitionBy("x1", "x2", "cls")
       .orderBy(col("v").desc, col("rcls"))
-    val winA = votes.withColumn("rn", row_number().over(perCls))
-      .filter(col("rn") === 1)
-      .crossJoin(broadcast(majDf))
-      .select(col("cls").as("actual"),
-              when(col("v") > 0, col("rcls")).otherwise(col("maj"))
-                .as("pred"), col("mm"))
-    def report(win: DataFrame, frm: String): DataFrame = {
-      val cm = win.agg(
-        sum(when(col("actual") === 1 && col("pred") === 1, col("mm")).otherwise(0L)).as("tp"),
-        sum(when(col("actual") === 0 && col("pred") === 0, col("mm")).otherwise(0L)).as("tn"),
-        sum(when(col("actual") === 0 && col("pred") === 1, col("mm")).otherwise(0L)).as("fp"),
-        sum(when(col("actual") === 1 && col("pred") === 0, col("mm")).otherwise(0L)).as("fn"))
-      val tpr: Column = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-      val tnr: Column = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-      cm.crossJoin(broadcast(nRules))
-        .select(lit(frm).as("frm"), lit(tname).as("tnorm"), col("n_rules"),
-                round((col("tp") + col("tn")) * lit(1000000.0) /
-                      (col("tp") + col("tn") + col("fp") + col("fn")), 0)
-                  .cast(LongType).as("acc_ppm"),
-                round(sqrt(tpr * tnr) * 1000000, 0).cast(LongType).as("gm_ppm"))
-    }
+    val winA = predictOrMajority(
+      votes.withColumn("rn", row_number().over(perCls)).filter(col("rn") === 1),
+      gex0, "v")
+    def report(win: DataFrame, frm: String): DataFrame =
+      binaryConfusion(win, "actual", "pred", col("m"))
+        .crossJoin(broadcast(nRules))
+        .select(lit(frm).as("frm") +: lit(tname).as("tnorm") +: col("n_rules") +: ppmMetrics: _*)
     report(winW, "winner").unionByName(report(winA, "additive"))
   }
 }

@@ -2,10 +2,8 @@ package graft.queries
 
 import graft.engine.Mat.MatOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.chi.ChiCore
 
 /** x198/x200: the reference paper's evaluation protocol — k-fold
   * cross-validation and the training-size learning curve — each run as ONE
@@ -21,18 +19,14 @@ import graft.engine.chi.ChiCore
   * staying exactly reproducible on any engine with int64 arithmetic.
   *
   * 100 TB shape: the ONLY row-scale work is one partial+final aggregation to
-  * (fold, x1, x2, a1, a2, cls, multiplicity) — the same distinct-vector
-  * compression ChiMl.ruleBase uses, here keyed by fold too (≤ 5× the vector
+  * (fold, x1, x2, a1, a2, cls, multiplicity) — ChiMl.vectorGex's
+  * distinct-vector compression, here keyed by fold too (≤ 5× the vector
   * count, still ≪ rows). Every train/test fan-out happens on that bounded
   * aggregate (a broadcast join with a ≤5-row model list), so k-fold CV and
   * the 4-tier learning curve each cost ONE shuffle over the fact table — not
-  * k training scans. Per-term weights follow §7.4.2: ROUND(·,12) →
-  * DECIMAL(18,12) × the multiplicity as DECIMAL(19,0) → exact order-free
-  * DECIMAL(38,12) sums, digit-identical to the oracle's row-level cross join.
+  * k training scans.
   */
 object Crossval {
-  import ChiMl.{P1, P2}
-
   private val K = 5
 
   /** Deterministic, engine-portable, key-order-decorrelated fold id. */
@@ -52,75 +46,23 @@ object Crossval {
       .materialized
 
   /** Train one Chi-CS model per distinct `model` key in `trainG` and score
-    * it on the matching rows of `testG` — the whole R3–R10 chain with
-    * `model` threaded through every aggregate and window.
+    * it on the matching rows of `testG` — ChiMl's R3–R10 chain with `model`
+    * as the rule-base and cost-vector key.
     *
     * trainG: (model, x1, x2, a1, a2, cls, mcnt); testG: (model, x1, x2,
     * cls, m). Returns (model, n_train, n_test, tp, tn, fp, fn, accuracy,
     * gm), one row per model. */
   private def evalModels(trainG: DataFrame, testG: DataFrame): DataFrame = {
-    // per-model cost vector (R3) from the training class counts
-    val byModel = Window.partitionBy("model")
-    val costs = trainG.groupBy("model", "cls").agg(sum("mcnt").as("n"))
-      .withColumn("c",
-        when(col("n") === min("n").over(byModel),
-             max("n").over(byModel) * lit(1.0) / col("n")).otherwise(lit(1.0)))
-      .groupBy("model")
-      .agg(max(when(col("cls") === 1, col("c"))).as("c1"),
-           max(when(col("cls") === 0, col("c"))).as("c0"),
-           sum("n").as("n_train"))
-
-    // per-model candidate antecedents and CS-PCF weights (R4–R7)
-    val ants = trainG.select(col("model").as("amodel"), col("a1").as("ra1"),
-                             col("a2").as("ra2"), col("cls").as("rcls")).distinct()
-    val w = round(
-        when(col("cls") === 1, col("c1")).otherwise(col("c0")) *
-          ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-          ChiCore.membershipAt(col("x2"), col("ra2"), P2),
-        12).cast(DecimalType(18, 12)) * col("mcnt").cast(DecimalType(19, 0))
-    val m = trainG.join(broadcast(costs.drop("n_train")), "model")
-      .join(broadcast(ants), col("model") === col("amodel"))
-      .select(col("model"), col("ra1"), col("ra2"), col("rcls"), col("cls"), w.as("w"))
-      .groupBy("model", "ra1", "ra2", "rcls")
-      .agg(sum(when(col("cls") === col("rcls"), col("w"))).as("w_match"),
-           sum(col("w")).as("w_all"))
-    val byAnt = Window.partitionBy("model", "ra1", "ra2")
-      .orderBy(col("rw").desc, col("rcls"))
-    val rb = m.filter(col("w_all") > 0)
-      .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
-                        round(col("w_all"), 6).cast(DoubleType))
-      .withColumn("rn", row_number().over(byAnt))
-      .filter(col("rn") === 1 && col("rw") > 0)
-      .select(col("model").as("rmodel"), col("ra1"), col("ra2"), col("rcls"), col("rw"))
-
-    // score each model's test rows against its ≤9 broadcast rules (R9)
-    val perEx = Window.partitionBy("model", "x1", "x2", "cls")
-      .orderBy(col("score").desc, col("rcls"))
-    val win = testG.join(broadcast(rb), col("model") === col("rmodel"))
-      .withColumn("score",
-        round(ChiCore.membershipAt(col("x1"), col("ra1"), P1) *
-              ChiCore.membershipAt(col("x2"), col("ra2"), P2) * col("rw"), 12))
-      .withColumn("rn", row_number().over(perEx)).filter(col("rn") === 1)
-      .select(col("model"), col("cls").as("actual"), col("rcls").as("predicted"), col("m"))
-
-    // per-model confusion + the paper's headline metrics (R10)
-    val cm = win.groupBy("model").agg(
-      sum(when(col("actual") === 1 && col("predicted") === 1, col("m")).otherwise(0L)).as("tp"),
-      sum(when(col("actual") === 0 && col("predicted") === 0, col("m")).otherwise(0L)).as("tn"),
-      sum(when(col("actual") === 0 && col("predicted") === 1, col("m")).otherwise(0L)).as("fp"),
-      sum(when(col("actual") === 1 && col("predicted") === 0, col("m")).otherwise(0L)).as("fn"))
-    val tpr: Column = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-    val tnr: Column = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-    cm.join(broadcast(costs.select(col("model").as("cmodel"), col("n_train"))),
-            col("model") === col("cmodel"))
-      .select(
-        col("model"),
-        col("n_train"),
-        (col("tp") + col("tn") + col("fp") + col("fn")).as("n_test"),
-        col("tp"), col("tn"), col("fp"), col("fn"),
-        round((col("tp") + col("tn")) * lit(1.0) /
-              (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
-        round(sqrt(tpr * tnr), 6).as("gm"))
+    val key = Seq("model")
+    val rb = ChiMl.ruleBaseFrom(trainG, costSensitive = true, tnormMin = false,
+                                rbKey = key, costKey = key)
+    val win = ChiMl.winningRules(ChiMl.ruleScores(testG, rb, key), key)
+    val nTrain = trainG.groupBy("model").agg(sum("mcnt").as("n_train"))
+    ChiMl.binaryConfusion(win, "cls", "rcls", col("m"), key)
+      .join(broadcast(nTrain), key)
+      .select(Seq(col("model"), col("n_train"),
+                  (col("tp") + col("tn") + col("fp") + col("fn")).as("n_test"),
+                  col("tp"), col("tn"), col("fp"), col("fn")) ++ ChiMl.accuracyGm: _*)
   }
 
   /** x198: 5-FOLD CROSS-VALIDATION — every fold's rule base trained on the
@@ -132,9 +74,8 @@ object Crossval {
     val trainG = gex.join(broadcast(models), col("fold") =!= col("model"))
       .groupBy("model", "x1", "x2", "a1", "a2", "cls")
       .agg(sum("mcnt").as("mcnt"))
-    val testG = gex.groupBy(col("fold").cast(IntegerType).as("model"),
-                            col("x1"), col("x2"), col("cls"))
-      .agg(sum("mcnt").as("m"))
+    val testG = ChiMl.scoringGrid(
+      gex.withColumn("model", col("fold").cast(IntegerType)), Seq("model"))
     evalModels(trainG, testG)
       .select(col("model").cast(LongType).as("fold"),
               col("n_test"), col("tp"), col("tn"), col("fp"), col("fn"),
@@ -156,10 +97,8 @@ object Crossval {
         col("fold") >= 1 && col("fold") <= col("model"))
       .groupBy("model", "x1", "x2", "a1", "a2", "cls")
       .agg(sum("mcnt").as("mcnt"))
-    val testG = gex.filter(col("fold") === 0)
-      .crossJoin(broadcast(tiers))
-      .groupBy("model", "x1", "x2", "cls")
-      .agg(sum("mcnt").as("m"))
+    val testG = ChiMl.scoringGrid(
+      gex.filter(col("fold") === 0).crossJoin(broadcast(tiers)), Seq("model"))
     evalModels(trainG, testG)
       .select(col("model").cast(LongType).as("tier"),
               col("n_train"), col("n_test"),

@@ -153,20 +153,9 @@ object ModelOps {
         .setNumLabels(l)
         .setWeightCol("w")
         .fit(gex)
-      val scored = model.transform(gex)
-      val cm = scored.agg(
-        sum(when(col("label") === 1 && col("prediction") === 1, col("w")).otherwise(0L)).as("tp"),
-        sum(when(col("label") === 0 && col("prediction") === 0, col("w")).otherwise(0L)).as("tn"),
-        sum(when(col("label") === 0 && col("prediction") === 1, col("w")).otherwise(0L)).as("fp"),
-        sum(when(col("label") === 1 && col("prediction") === 0, col("w")).otherwise(0L)).as("fn"))
-      val tpr = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-      val tnr = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-      cm.select(
-        lit(l.toLong).as("num_labels"),
-        lit(model.rules.length.toLong).as("n_rules"),
-        round((col("tp") + col("tn")) * lit(1.0) /
-              (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
-        round(sqrt(tpr * tnr), 6).as("gm"))
+      ChiMl.binaryConfusion(model.transform(gex), "label", "prediction", col("w"))
+        .select(lit(l.toLong).as("num_labels") +:
+                lit(model.rules.length.toLong).as("n_rules") +: ChiMl.accuracyGm: _*)
     }).reduce(_ unionByName _).orderBy("num_labels")
   }
 
@@ -232,41 +221,18 @@ object ModelOps {
         .setFeatureRanges(ranges.take(2 * n))
         .setWeightCol("w")
         .fit(gex)
-      val scored = model.transform(gex)
-      val cm = scored.agg(
-        sum(when(col("label") === 1 && col("prediction") === 1, col("w")).otherwise(0L)).as("tp"),
-        sum(when(col("label") === 0 && col("prediction") === 0, col("w")).otherwise(0L)).as("tn"),
-        sum(when(col("label") === 0 && col("prediction") === 1, col("w")).otherwise(0L)).as("fp"),
-        sum(when(col("label") === 1 && col("prediction") === 0, col("w")).otherwise(0L)).as("fn"))
-      val tpr = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-      val tnr = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-      cm.select(
-        lit(n.toLong).as("n_features"),
-        lit(model.rules.length.toLong).as("n_rules"),
-        round((col("tp") + col("tn")) * lit(1.0) /
-              (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
-        round(sqrt(tpr * tnr), 6).as("gm"))
+      ChiMl.binaryConfusion(model.transform(gex), "label", "prediction", col("w"))
+        .select(lit(n.toLong).as("n_features") +:
+                lit(model.rules.length.toLong).as("n_rules") +: ChiMl.accuracyGm: _*)
     }).reduce(_ unionByName _).orderBy("n_features")
   }
 
   /** One (n_rules, confusion, accuracy, gm) row for a fitted model scored
     * on its training frame — the x260/x263 reporting shape. */
-  private def fitReport(model: ChiCSModel, train: DataFrame): DataFrame = {
-    val scored = model.transform(train)
-    val cm = scored.agg(
-      sum(when(col("label") === 1 && col("prediction") === 1, 1L).otherwise(0L)).as("tp"),
-      sum(when(col("label") === 0 && col("prediction") === 0, 1L).otherwise(0L)).as("tn"),
-      sum(when(col("label") === 0 && col("prediction") === 1, 1L).otherwise(0L)).as("fp"),
-      sum(when(col("label") === 1 && col("prediction") === 0, 1L).otherwise(0L)).as("fn"))
-    val tpr = col("tp") * lit(1.0) / (col("tp") + col("fn"))
-    val tnr = col("tn") * lit(1.0) / (col("tn") + col("fp"))
-    cm.select(
-      lit(model.rules.length.toLong).as("n_rules"),
-      col("tp"), col("tn"), col("fp"), col("fn"),
-      round((col("tp") + col("tn")) * lit(1.0) /
-            (col("tp") + col("tn") + col("fp") + col("fn")), 6).as("accuracy"),
-      round(sqrt(tpr * tnr), 6).as("gm"))
-  }
+  private def fitReport(model: ChiCSModel, train: DataFrame): DataFrame =
+    ChiMl.binaryConfusion(model.transform(train), "label", "prediction", lit(1L))
+      .select(Seq(lit(model.rules.length.toLong).as("n_rules"),
+                  col("tp"), col("tn"), col("fp"), col("fn")) ++ ChiMl.accuracyGm: _*)
 
   /** x260: NOMINAL-ATTRIBUTE Chi-CS — the top remaining fidelity gap vs
     * [P1 §5.1] (KDD Cup 99 carries protocol_type/service/flag): a native

@@ -10,6 +10,15 @@ import graft.queries._
 class PlanSpec extends AnyFunSuite {
   import TestSpark.{spark, sfSmoke}
 
+  /** Every file scan of the executed plan. A plain `executedPlan.collect`
+    * stops at `AdaptiveSparkPlanExec` and finds none; the adaptive helper
+    * walks into its current plan, query stages and subqueries. */
+  private def fileScans(df: org.apache.spark.sql.DataFrame) =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+      }
+
   private def plan(df: org.apache.spark.sql.DataFrame): String = {
     df.collect() // materialize so AQE finalizes the adaptive plan
     df.queryExecution.executedPlan.toString
@@ -37,16 +46,24 @@ class PlanSpec extends AnyFunSuite {
     // 2/4/6, m 1/4/16, both t-norms × both FRMs) derives from that
     // materialized frame. The returned plan therefore contains ZERO live
     // lineitem file scans (the pre-rework x215 re-scanned lineitem once
-    // per width per phase — six live scans).
+    // per width per phase — six live scans). The Chi pipeline keys that
+    // fit and score off one distinct-vector aggregate hold to the same rule.
     for ((key, fn) <- Seq(
         "x215" -> (ModelOps.x215 _),
         "x281" -> (ChiMl.x281 _),
-        "x285" -> (ChiMl.x285 _))) {
+        "x285" -> (ChiMl.x285 _),
+        "q42" -> (ChiMl.q42 _),
+        "q43" -> (ChiMl.q43 _),
+        "x199" -> (ChiMl.x199 _),
+        "x201" -> (ChiMl.x201 _),
+        "x202" -> (ChiMl.x202 _),
+        "x272" -> (ChiMl.x272 _),
+        "x308" -> (ChiMl.x308 _),
+        "x198" -> (Crossval.x198 _),
+        "x200" -> (Crossval.x200 _))) {
       val df = fn(spark, sfSmoke)
       df.collect()
-      val scans = df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.count(_.toString.contains("lineitem"))
+      val scans = fileScans(df).count(_.toString.contains("lineitem"))
       assert(scans == 0,
         s"$key: expected 0 live lineitem scans (single-checkpoint ablation), got $scans")
     }
@@ -759,9 +776,7 @@ class PlanSpec extends AnyFunSuite {
     // construction), so the plan the caller re-executes scans no files
     val df = Organize.x314(spark, sfSmoke)
     df.collect()
-    val scans = df.queryExecution.executedPlan.collect {
-      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-    }
+    val scans = fileScans(df)
     assert(scans.isEmpty,
       "x314's returned plan must not re-scan the corpus (bounded driver state)")
   }

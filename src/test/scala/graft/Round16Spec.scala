@@ -135,37 +135,6 @@ class Round16Spec extends AnyFunSuite {
     }
   }
 
-  // ---------------------------- intersect_count (registered, not wired)
-
-  test("intersect_count equals size(array_intersect) on unsorted strings") {
-    import spark.implicits._
-    // the kernel is a measured-neutral candidate for the dedup confirms
-    // (X08ConfirmProbe) — pinned correct so a future wiring starts safe
-    val cases = Seq(
-      (Seq[String]("c", "a", "b"), Seq[String]("b", "d", "a")),
-      (Seq[String]("a", "a", "b"), Seq[String]("a")),          // dup left
-      (Seq[String]("x"), Seq[String]("y")),                    // disjoint
-      (Seq.empty[String], Seq[String]("a")),                   // empty side
-      (Seq[String](null, "a"), Seq[String]("a", null)),        // null both
-      (Seq[String](null, "a"), Seq[String]("b"))               // null one
-    ).toDF("a", "b")
-    val corpus = graft.queries.LlmExt2
-      .shingleSets(graft.engine.Tables.documents(spark, sfSmoke))
-      .select(col("shingles").as("a")).limit(40)
-      .crossJoin(graft.queries.LlmExt2
-        .shingleSets(graft.engine.Tables.documents(spark, sfSmoke))
-        .select(col("shingles").as("b")).limit(40))
-    for (df <- Seq(cases, corpus)) {
-      val rows = df.select(
-        call_function("intersect_count", col("a"), col("b")).as("native"),
-        size(array_intersect(col("a"), col("b"))).cast("long").as("ref"))
-        .collect()
-      assert(rows.nonEmpty)
-      rows.foreach(r => assert(r.getLong(0) === r.getLong(1),
-        s"intersect_count mismatch: $r"))
-    }
-  }
-
   // ------------------------------------------------- dedup confirm prune
 
   test("bandedPairs pruneConfirm=true is row-identical to the unpruned form") {

@@ -69,6 +69,26 @@ class SqlApiSpec extends AnyFunSuite {
     assert(sk >= 1 && sk <= 8, "sketch respects its capacity from SQL")
   }
 
+  test("every SQL kernel rejects a wrong argument count with an AnalysisException") {
+    // table-driven over the one kernel declaration list: one argument too
+    // few and (for fixed-arity kernels) one too many, each through spark.sql
+    for (k <- graft.engine.expr.GraftExtensions.kernels;
+         n <- Seq(k.arity.start - 1) ++
+              (if (k.arity.end == Int.MaxValue) Nil else Seq(k.arity.end + 1))
+         if n >= 0) {
+      val call = s"SELECT ${k.name}(${Seq.fill(n)("1").mkString(", ")})"
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(call).collect())
+      assert(e.getCondition === "WRONG_NUM_ARGS.WITHOUT_SUGGESTION", s"$call: ${e.getMessage}")
+      assert(e.getMessage.contains(s"`${k.name}`") && e.getMessage.contains(s"is $n."),
+        s"$call: ${e.getMessage}")
+    }
+    // the usage text, preconditions included, is what DESCRIBE FUNCTION shows
+    val described = spark.sql("DESCRIBE FUNCTION sorted_intersect_count")
+      .collect().map(_.getString(0)).mkString("\n")
+    assert(described.contains("sorted_intersect_count(a, b)") &&
+           described.contains("sorted ascending"), described)
+  }
+
   test("a registered operator round-trips through a SQL view of its own output") {
     viewsReady()
     graft.queries.Wrangle.x65(spark, sfSmoke).createOrReplaceTempView("scd2")
