@@ -107,6 +107,24 @@ object BenchEnvProbe {
   * cluster actually operates in.
   */
 object Bench {
+  /** State hygiene (VERDICT r10 task 1): the 308-key single-JVM run
+    * accumulates cached/localCheckpoint blocks faster than the
+    * ContextCleaner retires them — the r10 driver bench inflated
+    * late-registry iterative keys 7–12× (x119 38.4 s vs 3.0 s standalone)
+    * while the same code measured clean in isolation. Clearing the catalog
+    * cache, unpersisting any leaked RDD blocks, and forcing a GC (the
+    * ContextCleaner is driven by weak-reference queues, so a System.gc()
+    * is what actually surfaces dead localCheckpoint blocks for removal)
+    * between keys keeps every key's measurement independent of how much
+    * registry ran before it. Runs BETWEEN timed windows only — never
+    * inside one — so it costs bench wall-clock, not measured time. */
+  private[graft] def hygiene(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -128,28 +146,11 @@ object Bench {
       re.findAllMatchIn(txt)
         .map(m => m.group(1) -> m.group(2).toDouble).toMap
     } catch { case _: Throwable => Map.empty }
-    // State hygiene (VERDICT r10 task 1): the 308-key single-JVM run
-    // accumulates cached/localCheckpoint blocks faster than the
-    // ContextCleaner retires them — the r10 driver bench inflated
-    // late-registry iterative keys 7–12× (x119 38.4 s vs 3.0 s standalone)
-    // while the same code measured clean in isolation. Clearing the catalog
-    // cache, unpersisting any leaked RDD blocks, and forcing a GC (the
-    // ContextCleaner is driven by weak-reference queues, so a System.gc()
-    // is what actually surfaces dead localCheckpoint blocks for removal)
-    // between keys keeps every key's measurement independent of how much
-    // registry ran before it. Runs BETWEEN timed windows only — never
-    // inside one — so it costs bench wall-clock, not measured time.
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     val warmDir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (_, fn) =>
       try fn(spark, warmDir).count() catch { case _: Throwable => () }
     }
-    hygiene()
+    hygiene(spark)
     // Second, UNTIMED warm pass of the declared q-keys at the TARGET sfDir:
     // the sf0.001 pass warms codegen/JIT but not the sfDir file listings,
     // footer reads, or AQE stats at the measured scale — r9's declared
@@ -160,7 +161,7 @@ object Bench {
       if (name.startsWith("q"))
         try fn(spark, sfDir).count() catch { case _: Throwable => () }
     }
-    hygiene()
+    hygiene(spark)
     BenchEnvProbe.prime()
     // DECLARED q-keys (the BASELINE.md-comparable set): median of 3 timed
     // runs — r8's declared-total ranged 11.6–14.5 s purely from JVM/AQE
@@ -183,7 +184,7 @@ object Bench {
         // environment sample every 10 keys (between timed windows) so
         // co-tenant load during any stretch of the run is attributable to
         // a ~10-key window in the committed evidence (VERDICT r12 task 1).
-        if (idx > 0 && idx % 50 == 0) hygiene()
+        if (idx > 0 && idx % 50 == 0) hygiene(spark)
         if (idx % 10 == 0) BenchEnvProbe.sample(idx)
         val runs = if (name.startsWith("q")) Seq(once(fn), once(fn), once(fn))
                    else Seq(once(fn), once(fn))
@@ -266,7 +267,7 @@ object Bench {
     val reruns: Map[String, (Double, RerunKind)] =
       if (rerunCandidates.isEmpty) Map.empty
       else {
-        hygiene()
+        hygiene(spark)
         rerunCandidates.map { case (name, kind, fn) =>
           name -> (once(fn), kind) }.toMap
       }

@@ -26,12 +26,10 @@ import org.apache.spark.sql.DataFrame
   *     directory. The RDD is written to (shared, replicated) storage, so a
   *     lost executor re-reads the checkpoint files instead of failing the
   *     query — the cluster-safe posture. Chosen automatically on non-local
-  *     masters; the checkpoint dir falls back to `java.io.tmpdir` when the
-  *     deployment has not set one (production sets
-  *     `spark.checkpoint.dir`/`setCheckpointDir` to durable shared storage).
-  *
-  * `SPARK_GRAFT_MATERIALIZE` (`local` | `reliable`) overrides the
-  * auto-selection for A/B measurement.
+  *     masters, which must have a checkpoint dir on durable shared storage
+  *     (`spark.checkpoint.dir` or `SparkContext.setCheckpointDir`): without
+  *     one [[materialize]] throws instead of writing to a node-local temp
+  *     dir that other executors cannot read.
   *
   * Deliberately NOT `persist()`: persisted plans register in the session's
   * CacheManager, which matches by logical plan — a second execution of the
@@ -40,20 +38,22 @@ import org.apache.spark.sql.DataFrame
   * runs. Both checkpoint flavors materialize fresh per invocation.
   */
 object Mat {
-  private def mode(df: DataFrame): String =
-    sys.env.get("SPARK_GRAFT_MATERIALIZE").map(_.toLowerCase).getOrElse {
-      if (df.sparkSession.sparkContext.isLocal) "local" else "reliable"
-    }
+  /** The store [[materialize]] uses for a master: `local` on a local
+    * master, `reliable` on any other one that has a checkpoint dir. */
+  private[graft] def mode(isLocal: Boolean, checkpointDir: Option[String]): String =
+    if (isLocal) "local"
+    else if (checkpointDir.isDefined) "reliable"
+    else throw new IllegalStateException(
+      "Mat.materialize on a non-local master needs a checkpoint dir on " +
+        "shared storage: call SparkContext.setCheckpointDir (or set " +
+        "spark.checkpoint.dir) before running graft operators")
 
-  def materialize(df: DataFrame): DataFrame = mode(df) match {
-    case "reliable" =>
-      val sc = df.sparkSession.sparkContext
-      if (sc.getCheckpointDir.isEmpty)
-        sc.setCheckpointDir(
-          new java.io.File(System.getProperty("java.io.tmpdir"),
-            s"graft-ckpt-${sc.applicationId}").getAbsolutePath)
-      df.checkpoint(true)
-    case _ => df.localCheckpoint(true)
+  def materialize(df: DataFrame): DataFrame = {
+    val sc = df.sparkSession.sparkContext
+    mode(sc.isLocal, sc.getCheckpointDir) match {
+      case "reliable" => df.checkpoint(true)
+      case _ => df.localCheckpoint(true)
+    }
   }
 
   /** `df.materialized` — the operator-body spelling of [[materialize]]. */

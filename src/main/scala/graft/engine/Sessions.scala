@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
   * engine under identical semantics. */
 object Sessions {
   /** Configs every graft session needs regardless of entry point. */
-  def withGraftConf(b: SparkSession.Builder): SparkSession.Builder = {
-    val base = b
+  def withGraftConf(b: SparkSession.Builder): SparkSession.Builder =
+    b
       // native codegen'd vector kernels (fvec_dot / fvec_l2sq)
       .withExtensions(graft.engine.expr.GraftExtensions.install)
       // events.parquet carries TIMESTAMP(NANOS); map it to epoch-ns BIGINT and
@@ -18,14 +18,6 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       // bucketed-table demos write managed tables; keep them out of the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
-    // Streaming state-store backend A/B hook (docs/SCALE_100x.md): a
-    // production 100 TB run keeps large state in RocksDB, not the default
-    // HDFS-backed heap store — set SPARK_GRAFT_STATESTORE to
-    // org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
-    // to measure that configuration; unset → Spark's default provider.
-    sys.env.get("SPARK_GRAFT_STATESTORE").fold(base)(cls =>
-      base.config("spark.sql.streaming.stateStore.providerClass", cls))
-  }
 
   def local(cores: Int, shufflePartitions: Int): SparkSession = {
     val s = withGraftConf(SparkSession.builder()

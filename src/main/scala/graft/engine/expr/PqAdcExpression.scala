@@ -2,9 +2,9 @@ package graft.engine.expr
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native multi-query ADC (asymmetric distance computation) kernel:
   *
@@ -104,24 +104,12 @@ case class PqAdc(flatBooks: Array[Double], numSub: Int, numCodes: Int,
 }
 
 object PqAdc {
-  /** Builder for the SQL registration: args = (qe, booksLiteral, codes...).
-    * The books literal is consumed here (flattened driver-side); only the
+  /** Builder for the SQL registration: args = (qe, booksLiteral, codes...),
+    * the books argument already checked to be an array<array<array<double>>>
+    * constant. It is consumed here (flattened driver-side); only the
     * per-row children stay in the tree. */
   def fromArgs(args: Seq[Expression]): PqAdc = {
-    val booksLit = args(1) match {
-      case l: Literal => l
-      case other if other.foldable =>
-        Literal.create(other.eval(), other.dataType)
-      case other => throw new IllegalArgumentException(
-        s"pq_adc codebook must be a literal, got $other")
-    }
-    require(booksLit.dataType ==
-      ArrayType(ArrayType(ArrayType(DoubleType, false), false), false) ||
-      booksLit.dataType ==
-      ArrayType(ArrayType(ArrayType(DoubleType, true), true), true) ||
-      booksLit.dataType.isInstanceOf[ArrayType],
-      s"pq_adc codebook must be array<array<array<double>>>, got ${booksLit.dataType}")
-    val outer = booksLit.eval().asInstanceOf[ArrayData]
+    val outer = args(1).eval().asInstanceOf[ArrayData]
     val numSub = outer.numElements()
     val first = outer.getArray(0)
     val numCodes = first.numElements()

@@ -9,7 +9,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputT
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, MapType, StringType}
+import org.apache.spark.sql.types.{DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** `freq_sketch(key, capacity)` — a Misra–Gries frequent-items summary as a
@@ -38,8 +38,6 @@ case class FreqSketch(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[mutable.HashMap[String, Long]]
   with ImplicitCastInputTypes with UnaryLike[Expression] {
-
-  require(capacity >= 1, "freq_sketch capacity must be >= 1")
 
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = MapType(StringType, LongType, valueContainsNull = false)
@@ -117,14 +115,4 @@ case class FreqSketch(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildInternal(newChild: Expression): FreqSketch =
     copy(child = newChild)
-}
-
-object FreqSketch {
-  /** `freq_sketch(key, capacity)` builder for FunctionRegistry injection —
-    * capacity must be a foldable integer literal. */
-  def fromArgs(args: Seq[Expression]): FreqSketch = {
-    require(args(1).foldable && args(1).dataType == IntegerType,
-      "freq_sketch capacity must be an integer literal")
-    FreqSketch(args(0), args(1).eval().asInstanceOf[Int])
-  }
 }

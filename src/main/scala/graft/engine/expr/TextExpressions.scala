@@ -101,7 +101,6 @@ object Shingles {
   *     mod M with M = 1e9+7 — every step < 1.4e11, BIGINT-exact. */
 case class RollingHashFps(child: Expression, k: Int = 5)
     extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 1 && k <= 256, s"rolling_fps window must be in [1, 256], got $k")
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true

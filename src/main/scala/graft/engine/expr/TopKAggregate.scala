@@ -42,8 +42,6 @@ case class TopKPairs(
   extends TypedImperativeAggregate[mutable.PriorityQueue[(Double, Long)]]
   with ImplicitCastInputTypes with BinaryLike[Expression] {
 
-  require(k >= 1, "topk_pairs k must be >= 1")
-
   override def inputTypes: Seq[DataType] = Seq(DoubleType, LongType)
   override def dataType: DataType = ArrayType(
     StructType(Seq(
@@ -133,14 +131,4 @@ case class TopKPairs(
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKPairs =
     copy(left = newLeft, right = newRight)
-}
-
-object TopKPairs {
-  /** `topk_pairs(score, tag, k)` builder for FunctionRegistry injection —
-    * k must be a foldable integer literal. */
-  def fromArgs(args: Seq[Expression]): TopKPairs = {
-    require(args(2).foldable && args(2).dataType == IntegerType,
-      "topk_pairs k must be an integer literal")
-    TopKPairs(args(0), args(1), args(2).eval().asInstanceOf[Int])
-  }
 }

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{AnalysisException, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
 /** Native Catalyst vector kernels over `array<float>` columns.
   *
@@ -87,15 +88,26 @@ case class FVecL2Sq(left: Expression, right: Expression) extends FloatVecFold {
 
 /** Session extension installing the native kernels as SQL functions —
   * callable from `functions.call_function` and `spark.sql`. Each kernel is
-  * declared once in [[kernels]]: its accepted argument counts are checked
-  * here, before its build function runs, so a wrong count is an
-  * `AnalysisException` (WRONG_NUM_ARGS) like any built-in function's, and
-  * its usage text is what `DESCRIBE FUNCTION` shows. */
+  * declared once in [[kernels]]: its accepted argument counts and its
+  * constant arguments are checked here, before its build function runs, so
+  * a wrong count is an `AnalysisException` (WRONG_NUM_ARGS) like any
+  * built-in function's, a constant argument that is not a constant of its
+  * type or lies outside its range is one too (DATATYPE_MISMATCH), and its
+  * usage text is what `DESCRIBE FUNCTION` shows. */
 object GraftExtensions {
+  /** An argument that must be a non-null constant of `dataType` (any
+    * nullability): position, name and, for integers, the accepted range. */
+  private[graft] final case class LiteralArg(pos: Int, name: String, dataType: DataType,
+                                             range: Option[Range] = None)
+
+  private def intArg(pos: Int, name: String, range: Range) =
+    LiteralArg(pos, name, IntegerType, Some(range))
+
   /** One SQL kernel: name, expression class, accepted argument counts,
-    * `ExpressionInfo` usage and build function. */
+    * `ExpressionInfo` usage, build function and constant arguments. */
   private[graft] final case class Kernel(name: String, cls: Class[_], arity: Range,
-                                         usage: String, build: Seq[Expression] => Expression)
+                                         usage: String, build: Seq[Expression] => Expression,
+                                         literals: Seq[LiteralArg] = Nil)
 
   private[graft] val kernels: Seq[Kernel] = Seq(
     Kernel("fvec_dot", classOf[FVecDot], 2 to 2,
@@ -108,7 +120,8 @@ object GraftExtensions {
       "_FUNC_(qe, books, code_0, ..., code_M-1) - product-quantization distance of " +
         "query embedding qe to the M codes; books is a literal " +
         "array<array<array<double>>> of M sub-codebooks.",
-      PqAdc.fromArgs),
+      PqAdc.fromArgs,
+      Seq(LiteralArg(1, "books", ArrayType(ArrayType(ArrayType(DoubleType)))))),
     Kernel("shingles", classOf[Shingles], 2 to 2,
       "_FUNC_(text, n) - the distinct word n-gram shingles of lower(text) split on " +
         "spaces, in first-occurrence order.",
@@ -118,11 +131,8 @@ object GraftExtensions {
         "lower(text); k is an integer literal in [1, 256], default 5.",
       args =>
         if (args.length == 1) RollingHashFps(args(0))
-        else RollingHashFps(args(0), args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-          case other => throw new IllegalArgumentException(
-            s"rolling_fps window must be an integer literal, got $other")
-        })),
+        else RollingHashFps(args(0), args(1).eval().asInstanceOf[Int]),
+      Seq(intArg(1, "k", 1 to 256))),
     Kernel("lcp_count", classOf[LcpCount], 2 to 2,
       "_FUNC_(a, b) - the length of the common prefix of two string arrays.",
       args => LcpCount(args(0), args(1))),
@@ -137,12 +147,14 @@ object GraftExtensions {
       args => TokenStats(args(0))),
     Kernel("freq_sketch", classOf[FreqSketch], 2 to 2,
       "_FUNC_(key, capacity) - aggregate: Misra-Gries frequent-items summary as " +
-        "map<key, weight> of at most capacity (an integer literal) entries.",
-      FreqSketch.fromArgs),
+        "map<key, weight> of at most capacity (an integer literal >= 1) entries.",
+      args => FreqSketch(args(0), args(1).eval().asInstanceOf[Int]),
+      Seq(intArg(1, "capacity", 1 to Int.MaxValue))),
     Kernel("topk_pairs", classOf[TopKPairs], 3 to 3,
       "_FUNC_(score, tag, k) - aggregate: the k strongest (score, tag) pairs under " +
-        "(score DESC, tag ASC); k is an integer literal.",
-      TopKPairs.fromArgs))
+        "(score DESC, tag ASC); k is an integer literal >= 1.",
+      args => TopKPairs(args(0), args(1), args(2).eval().asInstanceOf[Int]),
+      Seq(intArg(2, "k", 1 to Int.MaxValue))))
 
   def install(e: SparkSessionExtensions): Unit = {
     kernels.foreach { k =>
@@ -158,6 +170,23 @@ object GraftExtensions {
                  else k.arity.mkString(" or ")),
               "actualNum" -> args.length.toString,
               "docroot" -> org.apache.spark.SPARK_DOC_ROOT))
+          def mismatch(sub: String, params: (String, String)*) =
+            new AnalysisException(s"DATATYPE_MISMATCH.$sub", Map("sqlExpr" ->
+              s"\"${k.name}(${args.map(_.sql).mkString(", ")})\"") ++ params)
+          k.literals.filter(_.pos < args.length).foreach { l =>
+            val a = args(l.pos)
+            // foldable first: a column has no value to check
+            if (!a.foldable || !DataTypeUtils.equalsIgnoreNullability(a.dataType, l.dataType) ||
+                a.eval() == null)
+              throw mismatch("NON_FOLDABLE_INPUT", "inputName" -> s"`${l.name}`",
+                "inputType" -> l.dataType.sql, "inputExpr" -> a.sql)
+            l.range.foreach { r =>
+              val v = a.eval().asInstanceOf[Int]
+              if (!r.contains(v))
+                throw mismatch("VALUE_OUT_OF_RANGE", "exprName" -> s"`${l.name}`",
+                  "valueRange" -> s"[${r.start}, ${r.end}]", "currentValue" -> v.toString)
+            }
+          }
           k.build(args)
         }))
     }

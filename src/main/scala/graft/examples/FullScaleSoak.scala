@@ -6,28 +6,29 @@ import graft.engine.Tables
 /** Full-surface scale soak: builds a 10× key-shifted copy of EVERY harness
   * table and times the COMPLETE `SparkEntry.queries` registry (all 188 keys,
   * streaming replays included) on both the base dir and the 10× dir,
-  * recording per-key ratios. This is [[ScaleCheck]]'s methodology (disjoint
-  * key shifts so join fan-outs stay honest; warm both dirs first so JIT /
-  * codegen / one-time layout costs stay out of the ratio; `.count()` like
-  * `graft.Bench` so numbers are comparable to the per-round bench) widened
-  * from 17 curated keys to the whole registry — the "would this plan survive
-  * a 10× scale-up" question answered by measurement instead of argument,
-  * key by key.
+  * recording per-key ratios: disjoint key shifts so join fan-outs stay
+  * honest; warm both dirs first so JIT / codegen / one-time layout costs
+  * stay out of the ratio; `.count()` like `graft.Bench` so numbers are
+  * comparable to the per-round bench — the "would this plan survive a 10×
+  * scale-up" question answered by measurement instead of argument, key by
+  * key. It began as a 17-key check (examples/ScaleCheck at commit
+  * 2b09aa5); `FullScaleSoak <src> <big> <json> 10 <keys...>` re-runs those
+  * keys, and their per-key analysis is in docs/SCALE.md's notes.
   *
-  * Id-shift choices (differ from ScaleCheck's where guards demand it):
+  * Id-shift choices:
   *   - doc_id / vec_id shift by 10 000 per copy, NOT 1 000 000: the
   *     planted-twin guards (RecallMatrices.guardIds, x139) fail loudly when
   *     any base id reaches the 1 000 000/1 000 003 twin offsets, and base
   *     sf0.1 ids top out at 4 999/1 999 — so 10 copies stay below 100 000,
   *     disjoint between copies yet far under the offsets.
-  *   - orderkey/custkey/event/user shifts match ScaleCheck (dims — region,
+  *   - orderkey/custkey/event/user shift by 10⁷/10⁶/10⁸/10⁶ (dims — region,
   *     nation, supplier, part — copy verbatim: dimensions don't grow with
   *     fact volume; every dim key just gets 10× hotter, the honest regime).
   *
   * Expected super-linear keys (documented, not defects): the synthetic copy
   * hands every document 9 exact twins, so TRUE near-dup/containment
   * workload grows ~quadratically in the copy factor (x08/x86/x109 analysis
-  * in ScaleCheck's Scaladoc); q45/q46 are the deliberate brute-force
+  * in docs/SCALE.md); q45/q46 are the deliberate brute-force
   * baselines whose all-pairs work is quadratic by construction
   * (SparkEntry.scala:65-68 — AnnIvf.x18Raw/x09 are the scale paths); the
   * recall matrices (x110–x112) run those chains end-to-end. Everything
@@ -91,7 +92,7 @@ object FullScaleSoak {
         spark.read.parquet(s"$src/$dim.parquet")
           .write.mode("overwrite").parquet(s"$out/$dim.parquet")
       // events: duplicate the RAW ns-long file so Tables.events still
-      // normalizes (same device as ScaleCheck)
+      // normalizes
       val evRaw = spark.read.parquet(s"$src/events.parquet")
       (0 until copies).map(i => evRaw
           .withColumn("event_id", col("event_id") + lit(i * E))

@@ -1,12 +1,13 @@
-package graft.queries
+package graft.examples
 
 /** Targeted per-key timing harness for optimization work: warms each key at
   * sf0.001, then times `runs` back-to-back executions at the target sf and
-  * prints min/median/all. Not part of the driver contract (Bench.scala is);
-  * this exists so a single operator's before/after can be measured in
-  * seconds instead of re-running the full 366-key bench.
+  * prints min/median/all, with Bench's between-run hygiene before each.
+  * Not part of the driver contract (Bench.scala is); this exists so a single
+  * operator's before/after can be measured in seconds instead of re-running
+  * the full 366-key bench.
   *
-  * Usage: sbt "runMain graft.queries.MicroBench x305 x188 ..."
+  * Usage: sbt "runMain graft.examples.MicroBench x305 x188 ..."
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default 32),
   *      SPARK_GRAFT_MICRO_RUNS (default 4).
   */
@@ -22,18 +23,10 @@ object MicroBench {
           .find(_.startsWith(a))
           .getOrElse(sys.error(s"no key matches prefix $a")))
       else Seq("x44_token_entropy", "x35_text_repetition", "x47_quality_gate")
-    // Bench.scala's between-key state hygiene: leaked localCheckpoint
-    // blocks from earlier runs distort later runs' timings (VERDICT r10)
-    def hygiene(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     for (n <- names; fn = graft.SparkEntry.queries(n)) {
       fn(spark, "/root/testdata/sf0.001").count() // warm codegen/JIT
       val ts = (1 to runs).map { _ =>
-        hygiene()
+        graft.Bench.hygiene(spark)
         val t0 = System.nanoTime(); fn(spark, dir).count()
         (System.nanoTime() - t0) / 1e9
       }

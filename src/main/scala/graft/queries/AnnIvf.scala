@@ -235,7 +235,8 @@ object AnnIvf {
     * ≈ 25 % · min(1, shortlist/probed) of the top-20 in expectation —
     * ≈ 1/20 at sf0.1 where the shortlist keeps 100 of ~500 probed).
     * Measured recall@20 on the uniform-synthetic corpus (ANN's
-    * adversarial case, no cluster structure — examples/X310RecallProbe):
+    * adversarial case, no cluster structure — examples/X310RecallProbe at
+    * commit 2b09aa5):
     * 16/20 at sf0.001, 9/20 at sf0.01, 10/20 at sf0.1, tracking the
     * same-session x18 flat-IVF recall (17/9/12) within the ADC
     * distortion and far above the ≈1–5/20 structure-free floor; real

@@ -896,7 +896,8 @@ object Clustering {
     * with N — 346× at 100 copies); the production mitigation is growing k
     * with the corpus so MEAN CELL SIZE stays bounded (~25 here), which
     * restores Σ|cell|² ≈ N·target — LINEAR in N. Round 12 measured that
-    * claim in an example main (examples/SemDedupKScale); this key
+    * claim in an example main (examples/SemDedupKScale at commit
+    * 2b09aa5); this key
     * REGISTERS it so the scaled-k chain is oracle-checked and the
     * round-over-round hash pins k itself (emitted as a column) along
     * with every dropped row. Same per-row contract as x284 (drop the

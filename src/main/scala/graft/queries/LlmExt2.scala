@@ -1176,7 +1176,8 @@ object LlmExt2 {
     * gram string is ever materialized, cutting the site-grain shuffle
     * from ~80 B of gram text to 8 B of fingerprint per position;
     * measured at sf0.1: 10.19 MB gram-keyed chain → 2.38 MB fp-keyed
-    * chain shuffle write, 4.3× — examples/X309ShuffleProbe).
+    * chain shuffle write, 4.3× — examples/X309ShuffleProbe at commit
+    * 2b09aa5; perfbench's traced runs record shuffle.write_bytes).
     *
     * THEOREM FORM (the x18 device): a fingerprint is a pure function of
     * the window's token codes, so equal grams ⇒ equal fingerprints and

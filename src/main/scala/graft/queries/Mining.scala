@@ -150,7 +150,7 @@ object Mining {
   def x225(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val iters = 4
-    var toks = Tables.documents(spark, dir)
+    val toks = Tables.documents(spark, dir)
       .select(explode(filter(split(lower(col("text")), " "), t => t =!= ""))
                 .as("tok"))
       .materialized
@@ -159,7 +159,8 @@ object Mining {
     // aggregate, keyed by the gram itself (pairs are 2-char substrings,
     // symbols 1-char — disjoint by construction, so one groupBy serves
     // both). The union's two scan legs run as ONE stage (the r15 form's
-    // two separate aggregate jobs serialized them), and a probe measured
+    // two separate aggregate jobs serialized them), and a probe
+    // (examples/X225Probe at commit 2b09aa5) measured
     // the union shape 2× faster than either the sequential pair+symbol
     // jobs or an explode(concat(...)) single pass (array concat is an
     // interpreted per-row copy).
@@ -201,23 +202,12 @@ object Mining {
     // materializations; each round pays k extra map-side substring passes
     // (k ≤ 4 here) instead of a corpus write — the guide §1.2 trade
     // (recompute cheap map work, never persist what one pass can rebuild).
-    // Production at larger merge counts re-materializes every
-    // SPARK_GRAFT_BPE_CKPT merges (default 8) to cap the recompute depth.
-    val ckptEvery = sys.env.get("SPARK_GRAFT_BPE_CKPT")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).filter(_ > 0)
-      .getOrElse(8)
-    var rewrites = 0 // merges folded into `tokCol` since the last base
     var tokCol = col("tok")
     var pending = gramStats(toks)._1
     val rows = (0 until iters).map { k =>
       val (bp, cnt) = pending
       val ph = (0x100 + k).toChar.toString
       tokCol = replace(tokCol, lit(bp), lit(ph))
-      rewrites += 1
-      if (rewrites >= ckptEvery) {
-        toks = toks.select(tokCol.as("tok")).materialized
-        tokCol = col("tok"); rewrites = 0
-      }
       val (win, nSym) = gramStats(toks.select(tokCol.as("tok")))
       pending = win
       (k + 1L, bp, cnt, nSym)

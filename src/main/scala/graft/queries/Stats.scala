@@ -474,8 +474,9 @@ object Stats {
     * graph key deliberately does NOT persist its multi-consumer frames:
     * the 4-consumer sharing of `edges` is carried by Spark's
     * ReusedExchange (same canonicalized exchange under deg / oriented /
-    * the final count), which an X119Probe A/B at sf0.1 measured at
-    * 4.3 s vs 7.5–10.3 s for the persist-and-release formulation —
+    * the final count), which an A/B at sf0.1 (examples/X119Probe at
+    * commit 2b09aa5) measured at 4.3 s vs 7.5–10.3 s for the
+    * persist-and-release formulation —
     * caching the 3.6M-row edge frame pays a full materialization AND
     * pins the cached subplan's partitioning away from AQE. The reliance
     * is NOT silent: PlanSpec asserts ReusedExchange is present in the
@@ -521,10 +522,12 @@ object Stats {
       // arrays are sort_array output (the kernel's sorted-ascending
       // precondition); counts are identical — Round16Spec pins kernel ≡
       // size(array_intersect) on the corpus adjacency frames and on
-      // duplicate/null/empty edge cases, and an X119IntersectProbe A/B
-      // measured totals equal with a consistent small local win (the
-      // stage is join-dominated at sf0.1; the kernel's payoff is
-      // allocation-free per-edge work where d ≈ √m).
+      // duplicate/null/empty edge cases, and an A/B at sf0.1
+      // (examples/X119IntersectProbe at commit 2b09aa5) measured totals
+      // equal with a consistent small local win (the stage is
+      // join-dominated at sf0.1; the kernel's payoff is allocation-free
+      // per-edge work where d ≈ √m). perfbench records the per-row pair
+      // as expr.sorted_intersect_count.{ns,builtin_ns}_per_row.
       .select(when(col("nv").isNull, 0L)
         .otherwise(call_function("sorted_intersect_count",
                                  col("nu"), col("nv")))

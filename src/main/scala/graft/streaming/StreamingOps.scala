@@ -486,35 +486,12 @@ object StreamingOps {
   /** Test hook: StreamingSpec swaps in the HDFS-backed provider to assert
     * provider-independence of every streaming result. */
   @volatile private[graft] var providerOverride: Option[String] = None
-  /** Spec hook for the changelog-checkpointing A/B (same contract as
-    * [[providerOverride]]): Some(true/false) wins over the env var. */
-  @volatile private[graft] var changelogOverride: Option[Boolean] = None
 
   /** State-operator progress of the last completed replay (all micro-batches,
     * flattened) — lets specs assert bounded state and the provider actually
     * used without re-plumbing the StreamingQuery handle out. */
   @volatile private[graft] var lastStateProgress:
     Seq[org.apache.spark.sql.streaming.StateOperatorProgress] = Seq.empty
-
-  /** (data micro-batches, total micro-batches incl. the no-data
-    * watermark-finalization batches) of the last completed replay —
-    * the attribution evidence the 100× streaming cost table needs
-    * (VERDICT r14 task 4): the replays are single-DATA-batch by contract,
-    * so any wall growth must come from state volume or per-batch
-    * overhead, never batch count. */
-  @volatile private[graft] var lastBatchCounts: (Int, Int) = (0, 0)
-
-  /** Streaming shuffle-partition override (probe/ops hook, same contract
-    * as [[providerOverride]]): the replays pin
-    * spark.sql.shuffle.partitions = 4 — measured best at sf0.1, where
-    * keyed state is tiny and per-partition state-store open/commit
-    * overhead dominates. At 100× the state shuffle itself dominates and
-    * 4 partitions serialize it onto 4 of 32 cores; the
-    * SPARK_GRAFT_STREAM_PARTITIONS env (or this var, which wins) widens
-    * the replay without touching the batch default. Results are
-    * partition-count-independent (the 4-partition matrix leg pins that);
-    * only the cost moves. */
-  @volatile private[graft] var partitionsOverride: Option[Int] = None
 
   /** Runs a streaming transform to completion (AvailableNow) into a memory
     * sink and returns the result table.
@@ -534,30 +511,16 @@ object StreamingOps {
     // the query at start and restored for batch work after)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    // SPARK_GRAFT_STREAM_PARTITIONS widens the replay at scale without
+    // touching the batch default: at 100× the state shuffle itself dominates
+    // and 4 partitions serialize it onto 4 of 32 cores (docs/SCALE_100x.md).
+    // Results are partition-count-independent (the 4-partition matrix leg
+    // pins that); only the cost moves.
     spark.conf.set("spark.sql.shuffle.partitions",
-      partitionsOverride.map(_.toString)
-        .orElse(sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS"))
-        .getOrElse("4"))
-    // Precedence: spec override > SPARK_GRAFT_STATESTORE (the scale-A/B env
-    // hook — without honoring it here the per-query set below would dead-let
-    // the hook for exactly the nine operators it exists to measure) > the
-    // RocksDB engine default.
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
+    // the spec override (HDFS parity baseline) or the RocksDB engine default
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      providerOverride.orElse(sys.env.get("SPARK_GRAFT_STATESTORE"))
-        .getOrElse(RocksDbProvider))
-    // Production checkpoint mode A/B (VERDICT r12 task 5): at large state,
-    // RocksDB's FULL-snapshot checkpointing uploads the whole store per
-    // commit while CHANGELOG checkpointing uploads only the delta and
-    // compacts snapshots in the background — the mode a 100 TB streaming
-    // deployment actually runs. SPARK_GRAFT_ROCKSDB_CHANGELOG=true flips
-    // it for a whole run (same contract as SPARK_GRAFT_STATESTORE); the
-    // conf is a no-op under non-RocksDB providers.
-    val chgKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChg = spark.conf.getOption(chgKey)
-    if (changelogOverride.getOrElse(
-          sys.env.get("SPARK_GRAFT_ROCKSDB_CHANGELOG").contains("true")))
-      spark.conf.set(chgKey, "true")
+      providerOverride.getOrElse(RocksDbProvider))
     try {
       val q = streamed.writeStream
         .format("memory").queryName(name)
@@ -567,7 +530,6 @@ object StreamingOps {
       q.awaitTermination()
       lastStateProgress = q.recentProgress.toSeq.flatMap(_.stateOperators)
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      lastBatchCounts = (dataBatches, q.recentProgress.length)
       require(dataBatches <= 1,
         s"$name replayed in $dataBatches data micro-batches; the registered " +
         "streaming oracles assume a single-batch replay (see Scaladoc) — " +
@@ -578,10 +540,6 @@ object StreamingOps {
       prevProvider match {
         case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
         case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-      prevChg match {
-        case Some(v) => spark.conf.set(chgKey, v)
-        case None => spark.conf.unset(chgKey)
       }
     }
   }

@@ -379,7 +379,7 @@ class PlanSpec extends AnyFunSuite {
     assert(bnlj <= 2, s"only the two 1-row stat crossJoins may be BNLJ, found $bnlj")
     // x119 deliberately shares the 4-consumer edge frame through
     // ReusedExchange instead of the family's persist discipline (measured
-    // 2x faster — X119Probe / Stats scaladoc); that reliance must be
+    // 2x faster — Stats.x119Plan scaladoc); that reliance must be
     // VERIFIED, not assumed: if a Spark upgrade stops reusing the
     // exchange this fails instead of silently re-scanning lineitem 4x
     assert(fin.contains("ReusedExchange"),

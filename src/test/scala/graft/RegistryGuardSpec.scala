@@ -8,9 +8,10 @@ import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.execution.{GlobalLimitExec, LocalTableScanExec, TakeOrderedAndProjectExec}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Registry-wide plan guards — two structural invariants asserted over EVERY
+/** Registry-wide guards — two structural invariants asserted over EVERY
   * registered query, so a future operator cannot regress them behind a
-  * log-only warning:
+  * log-only warning, plus two source-tree guards on the engine's
+  * configuration surface:
   *
   * 1. SINGLE-PARTITION WINDOWS. `WindowExec` with an empty partition spec
   *    funnels its whole input through one task ("No Partition Defined"
@@ -33,6 +34,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *    Ranks.scala) cancels the raw id out of the result. Anything else
   *    (rand, uuid, shuffle, an ML transform smuggling a salted udf) fails
   *    the suite by name.
+  *
+  * 3. ONE CONFIGURATION. The engine reads exactly the documented
+  *    `SPARK_GRAFT_*` deployment settings from the environment, and no
+  *    dev main lives among the operator bodies under `graft/queries/`.
+  *    Anything a deployer tunes beyond these is a Spark conf they set
+  *    directly.
   */
 class RegistryGuardSpec extends AnyFunSuite {
   import TestSpark.{spark, sfSmoke}
@@ -113,5 +120,33 @@ class RegistryGuardSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"non-deterministic expressions found:\n${offenders.mkString("\n")}")
+  }
+
+  private def mainSources(under: String): Seq[java.io.File] = {
+    val root = new java.io.File(under)
+    assert(root.isDirectory, s"$under not visible from the test cwd")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    files(root).filter(_.getName.endsWith(".scala"))
+  }
+
+  private def read(f: java.io.File): String =
+    new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+
+  test("the engine reads exactly the five documented SPARK_GRAFT_* env settings") {
+    val named = """(?:sys\.env(?:\.\w+)?|System\.getenv)\(\s*"([^"]+)"""".r
+    val reads = mainSources("src/main/scala").flatMap { f =>
+      read(f).linesIterator.filter(l => l.contains("sys.env") || l.contains("getenv"))
+        .map(l => named.findFirstMatchIn(l).fold(s"<unnamed read in ${f.getName}>")(_.group(1)))
+    }.toSet
+    assert(reads === Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
+      "SPARK_GRAFT_DETAIL_OUT", "SPARK_GRAFT_STREAM_PARTITIONS",
+      "SPARK_GRAFT_MICRO_RUNS"))
+  }
+
+  test("no main lives among the operator bodies under graft/queries") {
+    val mains = mainSources("src/main/scala/graft/queries")
+      .filter(f => read(f).contains("def main(")).map(_.getName)
+    assert(mains.isEmpty, s"dev mains belong in graft.examples: $mains")
   }
 }

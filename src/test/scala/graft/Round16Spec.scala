@@ -42,6 +42,15 @@ class Round16Spec extends AnyFunSuite {
       df.collect().sortBy(_.getLong(0)).toSeq)
   }
 
+  test("Mat mode: local master -> local, cluster master -> reliable, and no checkpoint dir fails fast") {
+    import graft.engine.Mat.mode
+    assert(mode(isLocal = true, checkpointDir = None) === "local")
+    assert(mode(isLocal = true, checkpointDir = Some("hdfs:///ckpt")) === "local")
+    assert(mode(isLocal = false, checkpointDir = Some("hdfs:///ckpt")) === "reliable")
+    val e = intercept[IllegalStateException](mode(isLocal = false, checkpointDir = None))
+    assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
+  }
+
   test("no bare localCheckpoint in operator bodies (engine helper only)") {
     val root = new java.io.File("src/main/scala/graft")
     assume(root.isDirectory, "source tree not visible from test cwd")
@@ -50,7 +59,7 @@ class Round16Spec extends AnyFunSuite {
     val offenders = files(root)
       .filter(_.getName.endsWith(".scala"))
       .filterNot(f => f.getPath.contains("/examples/") ||
-        f.getName == "Mat.scala" || f.getName == "ProfileX24.scala")
+        f.getName == "Mat.scala")
       .filter { f =>
         val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         src.linesIterator.exists(l =>

@@ -82,6 +82,27 @@ class SqlApiSpec extends AnyFunSuite {
       assert(e.getMessage.contains(s"`${k.name}`") && e.getMessage.contains(s"is $n."),
         s"$call: ${e.getMessage}")
     }
+    // constant arguments, checked in the same place: a column, a constant of
+    // the wrong type or NULL, and a value outside the accepted range are
+    // analysis errors too, naming the argument
+    val notConst = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT"
+    val outOfRange = "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE"
+    for ((call, condition, arg) <- Seq(
+           ("SELECT pq_adc(array(1f), array(array(array(id * 1d))), 1) FROM range(1)", notConst, "books"),
+           ("SELECT pq_adc(array(1f), array(array(array(1))), 1)", notConst, "books"),
+           ("SELECT rolling_fps('a b', cast(id AS INT)) FROM range(1)", notConst, "k"),
+           ("SELECT rolling_fps('a b', 0)", outOfRange, "k"),
+           ("SELECT rolling_fps('a b', 257)", outOfRange, "k"),
+           ("SELECT freq_sketch('a', cast(id AS INT)) FROM range(1)", notConst, "capacity"),
+           ("SELECT freq_sketch('a', cast(NULL AS INT))", notConst, "capacity"),
+           ("SELECT freq_sketch('a', 0)", outOfRange, "capacity"),
+           ("SELECT topk_pairs(1d, 1L, cast(id AS INT)) FROM range(1)", notConst, "k"),
+           ("SELECT topk_pairs(1d, 1L, 2L)", notConst, "k"),
+           ("SELECT topk_pairs(1d, 1L, 0)", outOfRange, "k"))) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](spark.sql(call).collect())
+      assert(e.getCondition === condition, s"$call: ${e.getMessage}")
+      assert(e.getMessage.contains(s"`$arg`"), s"$call: ${e.getMessage}")
+    }
     // the usage text, preconditions included, is what DESCRIBE FUNCTION shows
     val described = spark.sql("DESCRIBE FUNCTION sorted_intersect_count")
       .collect().map(_.getString(0)).mkString("\n")

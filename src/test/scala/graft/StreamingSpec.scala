@@ -282,10 +282,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("changelog checkpointing changes the checkpoint mode, never the rows") {
-    // The A/B hook (SPARK_GRAFT_ROCKSDB_CHANGELOG / changelogOverride)
-    // flips HOW RocksDB persists state to the checkpoint — delta upload +
-    // background snapshot compaction instead of full-snapshot-per-commit.
-    // Results must be bit-identical: the mode is a durability/IO choice.
+    // Spark's own changelog-checkpointing conf, set on the session (the
+    // streaming runner leaves it alone), flips HOW RocksDB persists state
+    // to the checkpoint — delta upload + background snapshot compaction
+    // instead of full-snapshot-per-commit. Results must be bit-identical:
+    // the mode is a durability/IO choice.
     import graft.streaming.StreamingOps
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(_.toString).sorted.toSeq
@@ -293,12 +294,15 @@ class StreamingSpec extends AnyFunSuite {
       "x03" -> rows(StreamingOps.x03(spark, sfSmoke)),
       "x19" -> rows(StreamingOps.x19(spark, sfSmoke)),
       "x252" -> rows(StreamingOps.x252(spark, sfSmoke)))
-    StreamingOps.changelogOverride = Some(true)
+    val chgKey =
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+    val prevChg = spark.conf.getOption(chgKey)
+    spark.conf.set(chgKey, "true")
     try {
       assert(rows(StreamingOps.x03(spark, sfSmoke)) === base("x03"))
       assert(rows(StreamingOps.x19(spark, sfSmoke)) === base("x19"))
       assert(rows(StreamingOps.x252(spark, sfSmoke)) === base("x252"))
-    } finally StreamingOps.changelogOverride = None
+    } finally prevChg.fold(spark.conf.unset(chgKey))(spark.conf.set(chgKey, _))
   }
 
   test("x306 streaming near-dup state persists: a batch-2 twin is flagged against batch 1") {
