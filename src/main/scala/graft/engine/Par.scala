@@ -4,6 +4,9 @@ import java.util.concurrent.Executors
 import scala.concurrent.duration.Duration
 import scala.concurrent.{Await, ExecutionContext, Future}
 
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+
 /** Concurrent driver-side job submission (optimization guide §2.6): Spark's
   * scheduler happily runs several jobs at once inside one application —
   * actions are only sequential because driver code calls them sequentially.
@@ -36,27 +39,58 @@ object Par {
     * sub-fit that needs an hour is a bug, not a workload. */
   private val timeout: Duration = Duration(3600L, "s")
 
-  /** Await a combined future so the FIRST failure propagates as soon as it
-    * happens (awaiting the futures one by one sat on thunk 0 while thunk 3
-    * had already failed — the failure surfaced only minutes later). The
-    * failed `Future.sequence` carries the thunk's own exception as cause. */
-  private def result[T](f: Future[T]): T =
-    try Await.result(f, timeout)
-    catch {
-      case e: java.util.concurrent.TimeoutException =>
-        throw new RuntimeException(
-          s"Par: concurrent job exceeded $timeout", e)
+  /** One call's thunks. Each thunk's jobs carry a job tag of its own plus
+    * the caller's tags (so a nested `Par`'s jobs are cancelled with the
+    * thunk that started them); tags add to the thread's job group, never
+    * replace it. */
+  private final class Batch {
+    private val sc: Option[SparkContext] =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+    private val inherited = sc.map(_.getJobTags()).getOrElse(Set.empty[String])
+    private val tags = scala.collection.mutable.ArrayBuffer.empty[String]
+
+    def fork[T](t: () => T): Future[T] = {
+      val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+      tags += tag
+      Future(sc match {
+        case None => t()
+        case Some(c) =>
+          // a pool thread starts with its creator's tags; set exactly ours
+          c.clearJobTags(); c.addJobTags(inherited + tag)
+          try t() finally c.clearJobTags()
+      })(pool)
     }
+
+    /** Await the combined future so the FIRST failure propagates as soon
+      * as it happens (awaiting the futures one by one sat on thunk 0 while
+      * thunk 3 had already failed — the failure surfaced only minutes
+      * later); the failed `Future.sequence` carries the thunk's own
+      * exception as cause. On a failure or the timeout the siblings' jobs
+      * are cancelled: nobody reads their results, and they would hold the
+      * cores until done. */
+    def await[T](f: Future[T]): T =
+      try Await.result(f, timeout)
+      catch {
+        case e: Throwable =>
+          sc.foreach(c => tags.foreach(c.cancelJobsWithTag(_, "Par: a sibling failed")))
+          e match {
+            case _: java.util.concurrent.TimeoutException =>
+              throw new RuntimeException(s"Par: concurrent job exceeded $timeout", e)
+            case _ => throw e
+          }
+      }
+  }
 
   /** Run every thunk concurrently; return results in input order. */
   def all[T](thunks: Seq[() => T]): Seq[T] = {
     implicit val ec: ExecutionContext = pool
-    result(Future.sequence(thunks.map(t => Future(t()))))
+    val b = new Batch
+    b.await(Future.sequence(thunks.map(b.fork(_))))
   }
 
   /** Two heterogeneous thunks concurrently. */
   def two[A, B](a: () => A, b: () => B): (A, B) = {
-    implicit val ec: ExecutionContext = pool
-    result(Future(a()).zip(Future(b())))
+    val p = new Batch
+    p.await(p.fork(a).zip(p.fork(b)))
   }
 }

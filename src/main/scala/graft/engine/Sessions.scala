@@ -18,6 +18,15 @@ object Sessions {
       .config("spark.sql.adaptive.enabled", "true")
       // bucketed-table demos write managed tables; keep them out of the repo
       .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      // Generated code is compiled once per JVM, not once per call: the
+      // engine re-runs the same plans per fold, mapper count and call, and
+      // one pass over the registry needs ~3.8k distinct classes against
+      // Spark's default cache of 100 (static: read once, on first codegen).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // The cache is keyed on the source text; a stage id in the class name
+      // (AQE numbers stages in completion order, which concurrent jobs
+      // reshuffle) turns identical code into a miss.
+      .config("spark.sql.codegen.useIdInClassName", "false")
 
   def local(cores: Int, shufflePartitions: Int): SparkSession = {
     val s = withGraftConf(SparkSession.builder()

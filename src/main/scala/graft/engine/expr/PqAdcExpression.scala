@@ -104,10 +104,37 @@ case class PqAdc(flatBooks: Array[Double], numSub: Int, numCodes: Int,
 }
 
 object PqAdc {
+  /** Why a codebook cannot be flattened, if it cannot: it needs M >= 1
+    * sub-codebooks of the same K >= 1 codes, every code of the same
+    * dimension. Checked at analysis, on the constant, so the builder below
+    * never sees a ragged one. */
+  def codebookProblem(books: ArrayData): Option[String] = {
+    def nullAt(a: ArrayData) = (0 until a.numElements()).find(a.isNullAt)
+    if (books.numElements() == 0) Some("has no sub-codebooks")
+    else nullAt(books).map(m => s"has a NULL sub-codebook $m").orElse {
+      val numCodes = books.getArray(0).numElements()
+      if (numCodes == 0) Some("has no codes in sub-codebook 0")
+      else (0 until books.numElements()).iterator.flatMap { m =>
+        val mid = books.getArray(m)
+        if (mid.numElements() != numCodes)
+          Some(s"is ragged: sub-codebook $m has ${mid.numElements()} codes, " +
+            s"sub-codebook 0 has $numCodes")
+        // sub-codebook 0 comes first, so its code 0 is non-null by here
+        else nullAt(mid).map(k => s"has a NULL code $k in sub-codebook $m").orElse {
+          val dims = books.getArray(0).getArray(0).numElements()
+          (0 until numCodes).find(mid.getArray(_).numElements() != dims).map(k =>
+            s"is ragged: code $k of sub-codebook $m has " +
+              s"${mid.getArray(k).numElements()} dimensions, the first code has $dims")
+        }
+      }.nextOption()
+    }
+  }
+
   /** Builder for the SQL registration: args = (qe, booksLiteral, codes...),
-    * the books argument already checked to be an array<array<array<double>>>
-    * constant. It is consumed here (flattened driver-side); only the
-    * per-row children stay in the tree. */
+    * the books argument already checked to be a well-formed
+    * array<array<array<double>>> constant ([[codebookProblem]]). It is
+    * consumed here (flattened driver-side); only the per-row children stay
+    * in the tree. */
   def fromArgs(args: Seq[Expression]): PqAdc = {
     val outer = args(1).eval().asInstanceOf[ArrayData]
     val numSub = outer.numElements()
@@ -118,11 +145,9 @@ object PqAdc {
     var m = 0
     while (m < numSub) {
       val mid = outer.getArray(m)
-      require(mid.numElements() == numCodes, "ragged codebook")
       var k = 0
       while (k < numCodes) {
         val inner = mid.getArray(k)
-        require(inner.numElements() == dimsPerSub, "ragged codebook")
         var d = 0
         while (d < dimsPerSub) {
           flat((m * numCodes + k) * dimsPerSub + d) = inner.getDouble(d)

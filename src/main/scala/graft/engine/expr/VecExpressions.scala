@@ -92,16 +92,24 @@ case class FVecL2Sq(left: Expression, right: Expression) extends FloatVecFold {
   * constant arguments are checked here, before its build function runs, so
   * a wrong count is an `AnalysisException` (WRONG_NUM_ARGS) like any
   * built-in function's, a constant argument that is not a constant of its
-  * type or lies outside its range is one too (DATATYPE_MISMATCH), and its
-  * usage text is what `DESCRIBE FUNCTION` shows. */
+  * type or whose value it refuses (an integer out of range, a ragged
+  * codebook) is one too (DATATYPE_MISMATCH), and its usage text is what
+  * `DESCRIBE FUNCTION` shows. */
 object GraftExtensions {
   /** An argument that must be a non-null constant of `dataType` (any
-    * nullability): position, name and, for integers, the accepted range. */
-  private[graft] final case class LiteralArg(pos: Int, name: String, dataType: DataType,
-                                             range: Option[Range] = None)
+    * nullability): position, name and the check of its value, which names
+    * the DATATYPE_MISMATCH sub-condition and its parameters when it refuses
+    * the value. */
+  private[graft] final case class LiteralArg(
+      pos: Int, name: String, dataType: DataType,
+      refuse: Any => Option[(String, Map[String, String])] = _ => None)
 
   private def intArg(pos: Int, name: String, range: Range) =
-    LiteralArg(pos, name, IntegerType, Some(range))
+    LiteralArg(pos, name, IntegerType, v => {
+      val i = v.asInstanceOf[Int]
+      Option.when(!range.contains(i))("VALUE_OUT_OF_RANGE" -> Map("exprName" -> s"`$name`",
+        "valueRange" -> s"[${range.start}, ${range.end}]", "currentValue" -> i.toString))
+    })
 
   /** One SQL kernel: name, expression class, accepted argument counts,
     * `ExpressionInfo` usage, build function and constant arguments. */
@@ -121,7 +129,10 @@ object GraftExtensions {
         "query embedding qe to the M codes; books is a literal " +
         "array<array<array<double>>> of M sub-codebooks.",
       PqAdc.fromArgs,
-      Seq(LiteralArg(1, "books", ArrayType(ArrayType(ArrayType(DoubleType)))))),
+      Seq(LiteralArg(1, "books", ArrayType(ArrayType(ArrayType(DoubleType))), v =>
+        PqAdc.codebookProblem(v.asInstanceOf[ArrayData]).map(p =>
+          "TYPE_CHECK_FAILURE_WITH_HINT" -> Map("msg" -> s"the codebook `books` $p",
+            "hint" -> ""))))),
     Kernel("shingles", classOf[Shingles], 2 to 2,
       "_FUNC_(text, n) - the distinct word n-gram shingles of lower(text) split on " +
         "spaces, in first-occurrence order.",
@@ -180,11 +191,8 @@ object GraftExtensions {
                 a.eval() == null)
               throw mismatch("NON_FOLDABLE_INPUT", "inputName" -> s"`${l.name}`",
                 "inputType" -> l.dataType.sql, "inputExpr" -> a.sql)
-            l.range.foreach { r =>
-              val v = a.eval().asInstanceOf[Int]
-              if (!r.contains(v))
-                throw mismatch("VALUE_OUT_OF_RANGE", "exprName" -> s"`${l.name}`",
-                  "valueRange" -> s"[${r.start}, ${r.end}]", "currentValue" -> v.toString)
+            l.refuse(a.eval()).foreach { case (sub, params) =>
+              throw mismatch(sub, params.toSeq: _*)
             }
           }
           k.build(args)

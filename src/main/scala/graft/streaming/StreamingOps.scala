@@ -477,15 +477,12 @@ object StreamingOps {
     * snapshot), which is exactly what dies first on 100 TB-class
     * sessionization: state size is bounded by live keys, not by memory.
     * RocksDB keeps state off-heap in a native LSM with block-cache bounds,
-    * so the nine streaming operators here run under it BY DEFAULT; the
-    * HDFS-backed provider remains only as the parity baseline in
-    * StreamingSpec (identical results, asserted). */
+    * so the streaming operators here run under it BY DEFAULT: a session
+    * that sets `spark.sql.streaming.stateStore.providerClass` itself keeps
+    * its own provider (StreamingSpec's HDFS-backed parity baseline does;
+    * identical results, asserted). */
   private[graft] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Test hook: StreamingSpec swaps in the HDFS-backed provider to assert
-    * provider-independence of every streaming result. */
-  @volatile private[graft] var providerOverride: Option[String] = None
 
   /** State-operator progress of the last completed replay (all micro-batches,
     * flattened) — lets specs assert bounded state and the provider actually
@@ -502,7 +499,11 @@ object StreamingOps {
     * today because each scale factor's events table is a single parquet
     * file; if a data refresh ever makes it a multi-part directory or an
     * admission option splits the replay, the oracles would silently diverge
-    * on the driver. Fail loudly here instead. */
+    * on the driver. Fail loudly here instead.
+    *
+    * The memory sink's temp view is dropped before returning: the frame
+    * holds the sink's rows itself, and a view per replay would keep every
+    * replay's rows alive for the life of the session. */
   private def runToTable(spark: SparkSession, streamed: DataFrame,
                          name: String, outputMode: String): DataFrame = {
     // streaming state stores are per shuffle partition; these replays carry
@@ -510,7 +511,9 @@ object StreamingOps {
     // (measured: 4 < 8 < 2 ≈ 32 on the sf0.1 replay; the value is fixed into
     // the query at start and restored for batch work after)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+    // getOption answers Spark's default too; getAll holds explicit settings only
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val defaultProvider = !spark.conf.getAll.contains(providerKey)
     // SPARK_GRAFT_STREAM_PARTITIONS widens the replay at scale without
     // touching the batch default: at 100× the state shuffle itself dominates
     // and 4 partitions serialize it onto 4 of 32 cores (docs/SCALE_100x.md).
@@ -518,9 +521,7 @@ object StreamingOps {
     // pins that); only the cost moves.
     spark.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-    // the spec override (HDFS parity baseline) or the RocksDB engine default
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      providerOverride.getOrElse(RocksDbProvider))
+    if (defaultProvider) spark.conf.set(providerKey, RocksDbProvider)
     try {
       val q = streamed.writeStream
         .format("memory").queryName(name)
@@ -536,11 +537,9 @@ object StreamingOps {
         "re-derive or retire the oracle before trusting this result")
       spark.table(name)
     } finally {
+      spark.catalog.dropTempView(name)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      if (defaultProvider) spark.conf.unset(providerKey)
     }
   }
 

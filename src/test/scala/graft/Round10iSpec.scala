@@ -29,7 +29,7 @@ class Round10iSpec extends AnyFunSuite {
   test("x252 timers: stale timer deleted on extension; idle session fires") {
     // transformWithState requires the RocksDB provider — pin it
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, graft.streaming.StreamingOps.RocksDbProvider)
     try {
     val mem = MemoryStream[Ev](spark)

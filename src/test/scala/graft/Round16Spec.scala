@@ -31,6 +31,39 @@ class Round16Spec extends AnyFunSuite {
     assert(graft.engine.Par.two(() => 1, () => "a") === ((1, "a")))
   }
 
+  test("Par.all cancels the siblings' jobs on the first failure") {
+    import scala.concurrent.{Await, Promise}
+    import scala.concurrent.duration._
+    val sc = spark.sparkContext
+    val sleepS = 30L
+    val sibling = Promise[Array[Int]]()
+    val t0 = System.nanoTime()
+    val e = intercept[Exception] {
+      graft.engine.Par.all(Seq(
+        () => sibling.complete(scala.util.Try(sc.parallelize(1 to 2, 2).map { i =>
+          // sleeps out its time unless the job is cancelled
+          val tc = org.apache.spark.TaskContext.get()
+          val end = System.nanoTime() + sleepS * 1000000000L
+          while (System.nanoTime() < end && !tc.isInterrupted()) Thread.sleep(50)
+          i
+        }.collect())),
+        () => {
+          // fail once the sibling's job is running
+          val deadline = System.nanoTime() + 10000000000L
+          while (sc.statusTracker.getActiveJobIds().isEmpty && System.nanoTime() < deadline)
+            Thread.sleep(20)
+          throw new IllegalStateException("boom-cancel")
+        }))
+    }
+    assert(e.getMessage == "boom-cancel", e)
+    val failedS = (System.nanoTime() - t0) / 1e9
+    assert(failedS < 10.0, s"failure took $failedS s to surface")
+    // the sibling's job is cancelled, not left to sleep out its 30 s
+    val outcome = scala.util.Try(Await.ready(sibling.future, 10.seconds))
+    assert(outcome.isSuccess, "the sibling's job was left running")
+    assert(sibling.future.value.get.isFailure, "the sibling's job must be cancelled")
+  }
+
   // ---------------------------------------------------------------- Mat
 
   test("Mat.materialize preserves rows and schema (local mode)") {
@@ -49,6 +82,22 @@ class Round16Spec extends AnyFunSuite {
     assert(mode(isLocal = false, checkpointDir = Some("hdfs:///ckpt")) === "reliable")
     val e = intercept[IllegalStateException](mode(isLocal = false, checkpointDir = None))
     assert(e.getMessage.contains("SparkContext.setCheckpointDir"))
+  }
+
+  test("a second run of the Chi keys compiles no generated code") {
+    // The engine re-runs the same plans per fold, mapper count and call:
+    // every repeat must hit Spark's codegen cache. This key set needs more
+    // than Spark's default 100 entries, and x281's concurrent fits
+    // renumber AQE stages between runs.
+    import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val keys = Seq("q39_ml_fuzzy_membership", "q40_ml_chi_rulegen", "q41_ml_chi_rule_weights",
+      "q42_ml_chi_classify", "q43_ml_metrics", "x281_chi_mchunk_ablation")
+    def runAll(): Unit = keys.foreach(k => SparkEntry.queries(k)(spark, sfSmoke).collect())
+    runAll()
+    val compiled = METRIC_COMPILATION_TIME.getCount
+    runAll()
+    assert(METRIC_COMPILATION_TIME.getCount - compiled === 0L,
+      "the second run recompiled generated classes")
   }
 
   test("no bare localCheckpoint in operator bodies (engine helper only)") {

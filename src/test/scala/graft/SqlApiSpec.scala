@@ -83,13 +83,21 @@ class SqlApiSpec extends AnyFunSuite {
         s"$call: ${e.getMessage}")
     }
     // constant arguments, checked in the same place: a column, a constant of
-    // the wrong type or NULL, and a value outside the accepted range are
-    // analysis errors too, naming the argument
+    // the wrong type or NULL, a value outside the accepted range and a
+    // ragged or empty codebook are analysis errors too, naming the argument
     val notConst = "DATATYPE_MISMATCH.NON_FOLDABLE_INPUT"
     val outOfRange = "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE"
+    val badBooks = "DATATYPE_MISMATCH.TYPE_CHECK_FAILURE_WITH_HINT"
     for ((call, condition, arg) <- Seq(
            ("SELECT pq_adc(array(1f), array(array(array(id * 1d))), 1) FROM range(1)", notConst, "books"),
            ("SELECT pq_adc(array(1f), array(array(array(1))), 1)", notConst, "books"),
+           ("SELECT pq_adc(array(1f), array(array(array(1d), array(2d)), array(array(1d))), 1, 1)",
+             badBooks, "books"),
+           ("SELECT pq_adc(array(1f), array(array(array(1d, 2d), array(1d))), 1)", badBooks, "books"),
+           ("SELECT pq_adc(array(1f), array(array(array(1d)), NULL), 1, 1)", badBooks, "books"),
+           ("SELECT pq_adc(array(1f), array(array(array(1d), NULL)), 1)", badBooks, "books"),
+           ("SELECT pq_adc(array(1f), cast(array() AS array<array<array<double>>>), 1)",
+             badBooks, "books"),
            ("SELECT rolling_fps('a b', cast(id AS INT)) FROM range(1)", notConst, "k"),
            ("SELECT rolling_fps('a b', 0)", outOfRange, "k"),
            ("SELECT rolling_fps('a b', 257)", outOfRange, "k"),

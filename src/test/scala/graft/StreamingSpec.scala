@@ -262,8 +262,12 @@ class StreamingSpec extends AnyFunSuite {
     // partition-group, never one row per input token
     assert(prog.map(_.numRowsTotal).max <= 64 * 8,
       "sketch state must stay bounded by capacity, not token volume")
-    // provider-independence: identical results on the HDFS-backed baseline
-    StreamingOps.providerOverride = Some(
+    // provider-independence: identical results on the HDFS-backed baseline,
+    // set on the session (the streaming runner defaults to RocksDB only when
+    // the session sets no provider itself)
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getAll.get(providerKey)
+    spark.conf.set(providerKey,
       "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
     try {
       for ((k, r) <- rocks) {
@@ -277,8 +281,23 @@ class StreamingSpec extends AnyFunSuite {
       val hdfsKeys = StreamingOps.lastStateProgress
         .flatMap(_.customMetrics.keySet().asScala)
       assert(!hdfsKeys.exists(_.toLowerCase.contains("rocksdb")),
-        "override must actually switch the provider back")
-    } finally StreamingOps.providerOverride = None
+        "the session's provider must actually replace RocksDB")
+    } finally prevProvider match {
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
+    }
+  }
+
+  test("a replay leaves no memory-sink view behind, and its frame still collects") {
+    def tempViews() = spark.catalog.listTables().collect().count(_.isTemporary)
+    val before = tempViews()
+    val stream = graft.streaming.StreamingOps.x02(spark, sfSmoke)
+    assert(tempViews() === before, "the replay's memory-sink view must be dropped")
+    // the frame holds the sink's rows itself: same rows as the batch twin
+    val batch = graft.queries.Temporal.q35(spark, sfSmoke).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+    assert(stream.collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSeq
+      === batch)
   }
 
   test("changelog checkpointing changes the checkpoint mode, never the rows") {
@@ -296,7 +315,7 @@ class StreamingSpec extends AnyFunSuite {
       "x252" -> rows(StreamingOps.x252(spark, sfSmoke)))
     val chgKey =
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChg = spark.conf.getOption(chgKey)
+    val prevChg = spark.conf.getAll.get(chgKey)
     spark.conf.set(chgKey, "true")
     try {
       assert(rows(StreamingOps.x03(spark, sfSmoke)) === base("x03"))
@@ -337,7 +356,7 @@ class StreamingSpec extends AnyFunSuite {
   test("x134 ListState journey re-sorts by event time — a late event displaces a later step") {
     import graft.streaming.StreamingOps
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val mem = MemoryStream[Ev](spark)
@@ -373,7 +392,7 @@ class StreamingSpec extends AnyFunSuite {
     // emits LIFETIME totals, not batch-local ones. transformWithState
     // requires the RocksDB provider — pin it for the MemoryStream run.
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val mem = MemoryStream[Ev](spark)
@@ -423,7 +442,7 @@ class StreamingSpec extends AnyFunSuite {
     // re-read; the live key's staleness is only the phase-3 query
     // restart latency (seconds) — far under TTL.
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val ckpt = Files.createTempDirectory("x114_ttl_ckpt").toString
@@ -489,7 +508,7 @@ class StreamingSpec extends AnyFunSuite {
     // second batch touching only type "view" must increment that entry
     // while the untouched "click" entry re-reads its batch-1 value.
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val mem = MemoryStream[Ev](spark)
@@ -537,7 +556,7 @@ class StreamingSpec extends AnyFunSuite {
     // LIFETIME totals (batch-1 state recovered from the checkpointed
     // RocksDB snapshot), equal to the batch oracle over the full history.
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val ckpt = Files.createTempDirectory("x114_restart_ckpt").toString
@@ -626,7 +645,7 @@ class StreamingSpec extends AnyFunSuite {
     // batches fire when the purchase arrives, while an already-counted
     // triple is never re-counted (its view left the 2-slot tail).
     val conf = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(conf)
+    val prev = spark.conf.getAll.get(conf)
     spark.conf.set(conf, StreamingOps.RocksDbProvider)
     try {
       val mem = MemoryStream[Ev](spark)
