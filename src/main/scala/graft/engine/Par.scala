@@ -19,9 +19,9 @@ import org.apache.spark.sql.SparkSession
   * Results are UNCHANGED by construction: every thunk is a pure function of
   * its own (deterministic) input — same data, same layout, same seed — and
   * the default FIFO scheduler only interleaves the independent jobs'
-  * stages; no thunk reads another's output. Thread-locals (job
-  * descriptions/groups) are per-thread, so concurrent thunks cannot clobber
-  * each other's labels either.
+  * stages; no thunk reads another's output. Job labels are inheritable
+  * thread-locals that a cached pool thread would keep from its creator, so
+  * each thunk runs under the CALLER's job group, description and tags.
   */
 object Par {
   // unbounded cached pool: thunks block on Spark actions most of their
@@ -47,6 +47,9 @@ object Par {
     private val sc: Option[SparkContext] =
       SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
     private val inherited = sc.map(_.getJobTags()).getOrElse(Set.empty[String])
+    // the caller's setJobGroup / setJobDescription labels
+    private val labels = sc.toSeq.flatMap(c => Seq("spark.jobGroup.id",
+      "spark.job.description", "spark.job.interruptOnCancel").map(k => k -> c.getLocalProperty(k)))
     private val tags = scala.collection.mutable.ArrayBuffer.empty[String]
 
     def fork[T](t: () => T): Future[T] = {
@@ -55,9 +58,10 @@ object Par {
       Future(sc match {
         case None => t()
         case Some(c) =>
-          // a pool thread starts with its creator's tags; set exactly ours
+          // set exactly the caller's labels and ours (null unsets a key)
+          labels.foreach { case (k, v) => c.setLocalProperty(k, v) }
           c.clearJobTags(); c.addJobTags(inherited + tag)
-          try t() finally c.clearJobTags()
+          try t() finally { c.clearJobTags(); labels.foreach(l => c.setLocalProperty(l._1, null)) }
       })(pool)
     }
 

@@ -1,14 +1,11 @@
 package graft.engine.chi
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.{Estimator, Model}
 import org.apache.spark.ml.param._
 import org.apache.spark.ml.util._
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import ChiCore.TriPartition
 
@@ -102,12 +99,10 @@ private[chi] trait ChiCSParams extends Params {
   *
   * 100 TB posture of `fit`:
   *  - one pass for ranges (if not declared), one tiny agg for class counts;
-  *  - rule learning explodes each example only to its μ>0 antecedents — with
-  *    triangular partitions at most 2 labels per attribute are nonzero, so the
-  *    fan-out is ≤ 2ⁿ per row instead of |candidates| (exact: dropped terms
-  *    are exactly zero);
-  *  - one shuffle keyed on (antecedent, class); the result (≤ Lⁿ·|C| rules)
-  *    is collected and broadcast — the only driver-side materialization.
+  *  - rule learning is [[ChiCore.learnRules]], the learner every Chi key
+  *    shares: each example explodes only to its ≤ 2ⁿ μ>0 antecedents, one
+  *    shuffle keyed on (antecedent, class); the result (≤ Lⁿ·|C| rules) is
+  *    collected and broadcast — the only driver-side materialization.
   */
 class ChiCSClassifier(override val uid: String)
     extends Estimator[ChiCSModel] with ChiCSParams with DefaultParamsWritable {
@@ -135,14 +130,11 @@ class ChiCSClassifier(override val uid: String)
   override def copy(extra: ParamMap): ChiCSClassifier = defaultCopy(extra)
 
   override def fit(ds: Dataset[_]): ChiCSModel = {
-    val spark = ds.sparkSession
     val feats = $(featureCols)
     require(feats.nonEmpty, "featureCols must be set")
     val nomSet = $(nominalCols).toSet
     require(nomSet.subsetOf(feats.toSet),
       s"nominalCols must be a subset of featureCols; extra: ${nomSet -- feats}")
-    val isNom: Array[Boolean] = feats.map(nomSet)
-    val n = feats.length
     val L = $(numLabels)
     // Missing-value protocol (KEEL declares <null>/?): rows with a NULL
     // LABEL cannot supervise anything and are dropped here; NULL FEATURE
@@ -193,12 +185,8 @@ class ChiCSClassifier(override val uid: String)
     // Encode: numeric → double; nominal → sorted-rank code (array_position
     // is 1-based; NULL in ⇒ NULL out, preserving the missing marker).
     val df = raw.select(
-      feats.map { f =>
-        if (nomSet(f))
-          (array_position(typedLit(dicts(f).toSeq), col(f).cast(StringType))
-            - 1).cast(DoubleType).as(f)
-        else col(f).cast(DoubleType).as(f)
-      } ++ Seq(col($(labelCol)).cast(IntegerType).as("__cls")) ++
+      feats.map(f => ChiCSModel.encode(f, dicts.getOrElse(f, Array.empty)).as(f)) ++
+        Seq(col($(labelCol)).cast(IntegerType).as("__cls")) ++
         (if ($(weightCol).isEmpty) Nil
          else Seq(col($(weightCol)).cast(LongType).as("__w"),
                   // pre-cast view for the integrality guard below: the
@@ -212,7 +200,7 @@ class ChiCSClassifier(override val uid: String)
     // one min/max pass over the numeric attributes.
     val numFeats = feats.filterNot(nomSet)
     if ($(featureRanges).nonEmpty)
-      require($(featureRanges).length == 2 * n,
+      require($(featureRanges).length == 2 * feats.length,
         "featureRanges must be lo,hi per feature (nominal slots are ignored)")
     val derived: Map[String, (Double, Double)] =
       if ($(featureRanges).isEmpty && numFeats.nonEmpty) {
@@ -236,13 +224,11 @@ class ChiCSClassifier(override val uid: String)
     // A NULL attribute yields a NULL label: the example seeds no candidate
     // (an antecedent must constrain every attribute) but still contributes
     // weight mass below.
-    val labeled = feats.zipWithIndex.foldLeft(df) { case (d, (f, i)) =>
-      val lab =
-        if (isNom(i)) col(f).cast(IntegerType)
-        else ChiCore.argmaxLabel(ChiCore.memberships(col(f), parts(i)))
-      d.withColumn(s"__a$i",
-        when(col(f).isNull, lit(null).cast(IntegerType)).otherwise(lab))
-    }.withColumn("__ant", array((0 until n).map(i => col(s"__a$i")): _*))
+    val labeled = df.withColumn("__ant", array(feats.toSeq.zipWithIndex.map { case (f, i) =>
+      when(col(f).isNull, lit(null).cast(IntegerType)).otherwise(
+        if (nomSet(f)) col(f).cast(IntegerType)
+        else ChiCore.argmaxLabel(ChiCore.memberships(col(f), parts(i))))
+    }: _*))
 
     // Pre-aggregate to DISTINCT feature vectors with multiplicity: the weight
     // term is a pure function of (features, cls) and DECIMAL × count is
@@ -303,78 +289,11 @@ class ChiCSClassifier(override val uid: String)
       acc.when(col("__cls") === c, costs(c))
     }.otherwise(1.0)
 
-    // Candidates come only from fully-observed examples: an antecedent must
-    // constrain every attribute, so a NULL anywhere seeds no rule.
-    val candidates = compressed
-      .filter(feats.map(col(_).isNotNull).reduce(_ && _))
-      .select(col("__ant").as("__cant"), col("__cls").as("__ccls")).distinct()
-
-    // R5: explode each vector to its μ>0 neighbor antecedents (≤2 labels per
-    // attribute are nonzero under triangular partitions; pruned terms are
-    // exactly zero), keep only observed candidates, and aggregate CS-PCF
-    // numerators/denominators distributively.
-    // Nominal attributes have exactly ONE nonzero label (the code) — no
-    // fan-out at all. A NULL attribute matches EVERY label of that
-    // attribute at factor 1 (the skipped-t-norm policy), so it explodes to
-    // all of them — the |V|/L fan-out is the honest support set, and only
-    // null-bearing rows pay it.
-    val neighbors = feats.zipWithIndex.foldLeft(compressed) { case (d, (f, i)) =>
-      val Li = parts(i).numLabels
-      val allLabels = sequence(lit(0), lit(Li - 1))
-      if (isNom(i))
-        d.withColumn(s"__n$i",
-          explode(when(col(f).isNull, allLabels)
-            .otherwise(array(col(f).cast(IntegerType)))))
-      else {
-        val kf = floor((col(f) - parts(i).lo) / parts(i).halfWidth).cast(IntegerType)
-        d.withColumn(s"__n$i",
-          explode(when(col(f).isNull, allLabels)
-            .otherwise(array(kf, kf + 1))))
-          .filter(col(f).isNull ||
-                  (col(s"__n$i").between(0, Li - 1) &&
-                   ChiCore.membershipAt(col(f), col(s"__n$i"), parts(i)) > 0.0))
-      }
-    }.withColumn("__nant", array((0 until n).map(i => col(s"__n$i")): _*))
-
-    // Product t-norm: nominal factors are EXACTLY 1 by construction (the
-    // only exploded label is the matching code; null ⇒ skipped), so only
-    // numeric attributes contribute factors — a null numeric attribute is
-    // skipped (factor 1) per the missing-value policy.
-    val mu = feats.zipWithIndex.collect { case (f, i) if !isNom(i) =>
-      when(col(f).isNull, lit(1.0))
-        .otherwise(ChiCore.membershipAt(col(f), col(s"__n$i"), parts(i)))
-    }.reduceOption(_ * _).getOrElse(lit(1.0))
-    // DECIMAL(18,12) × DECIMAL(19,0) → DECIMAL(38,12): the product keeps
-    // scale 12 EXACTLY and precision lands on exactly 38 — no overflow, no
-    // adjustment. A (38,12) term would overflow precision against the bigint
-    // count and Spark's allowPrecisionLoss would silently round every product
-    // to scale 6 — invisible on large sums (relative drift ~1e-10 under the
-    // final 6dp round) but wrong on small ones. (19,0) covers every possible
-    // long count; the weight needs 6 integer digits, enforced on costs above.
-    val w = round(costExpr * mu, 12).cast(DecimalType(18, 12)) *
-      col("__m").cast(DecimalType(19, 0))
-
-    val sums = neighbors
-      .join(broadcast(candidates), col("__nant") === col("__cant"))
-      .select(col("__cant"), col("__ccls"), col("__cls"), w.as("__w"))
-      .groupBy("__cant", "__ccls")
-      .agg(coalesce(sum(when(col("__cls") === col("__ccls"), col("__w"))),
-                    lit(0).cast(DecimalType(38, 12))).as("w_match"),
-           sum(col("__w")).as("w_all"))
-
-    // 6dp-rounded decimal → exact double cast (see ChiMl.ruleBaseFrom note).
-    val withRw = sums.filter(col("w_all") > 0)
-      .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
-                        round(col("w_all"), 6).cast(DoubleType))
-    // R6/R7 conflict resolution: max weight per antecedent, tie → lowest class.
-    val byAnt = Window.partitionBy("__cant").orderBy(col("rw").desc, col("__ccls"))
+    // R5–R7: the shared learner on the compressed aggregate; the resolved
+    // rule base (≤ Lⁿ·|C| rules) is collected to the driver.
     val rules =
-      try withRw.withColumn("rn", row_number().over(byAnt))
-        .filter(col("rn") === 1 && col("rw") > 0)
-        .select(col("__cant"), col("__ccls"), col("rw"))
-        .collect()
-        .map(r => ChiRule(r.getSeq[Int](0).toArray, r.getInt(1), r.getDouble(2)))
-        .sortBy(r => (r.antecedent.mkString(","), r.cls))
+      try ChiCSModel.toRules(ChiCore.learnRules(compressed, feats.toSeq, parts.toSeq,
+                                                costExpr, nominal = nomSet).collect())
       finally compressed.unpersist()
 
     val majority = classCounts.maxBy { case (c, cnt) => (cnt, -c) }._1
@@ -415,86 +334,36 @@ class ChiCSModel private[graft] (
   override def transformSchema(schema: StructType): StructType =
     schema.add($(predictionCol), IntegerType)
 
-  /** Winning rule: argmax over rules of round12(∏μ)·RW — identical rounding
-    * and tie conventions (score desc, class asc) to the q42 oracle chain. */
+  /** Winning rule by [[ChiCore.winningRule]], the scorer every Chi key
+    * shares (a NULL feature is skipped, as in fit); a row whose winner
+    * scores 0 gets the majority class. */
   override def transform(ds: Dataset[_]): DataFrame = {
-    val spark = ds.sparkSession
-    val bcRules: Broadcast[Array[ChiRule]] = spark.sparkContext.broadcast(rules)
-    val bcParts = spark.sparkContext.broadcast(partitions)
-    val bcMajority = majorityClass
-    // Boxed doubles so NULL feature values survive into the scorer: a null
-    // attribute is SKIPPED in the product t-norm (factor 1, the
-    // missing-value policy shared with fit); a nominal category unseen at
-    // training encodes to −1, whose crisp μ is 0 against every label ⇒ the
-    // majority no-match policy.
-    val predict = udf { (xs: Seq[java.lang.Double]) =>
-      val parts = bcParts.value
-      val rules = bcRules.value
-      def rawScore(r: ChiRule): Double = {
-        var mu = 1.0
-        var i = 0
-        while (i < xs.length && mu > 0.0) {
-          val x = xs(i)
-          if (x != null) {
-            val p = parts(i)
-            val c = p.lo + r.antecedent(i) * p.halfWidth
-            mu *= math.max(0.0, 1.0 - math.abs(x - c) / p.halfWidth)
-          }
-          i += 1
-        }
-        mu * r.weight
-      }
-      // Fast path: 12dp HALF_UP rounding moves a score by < 5e-13, so when the
-      // best raw score leads every rival by > 2e-12 (and clears zero by the
-      // same margin) the rounded argmax equals the raw argmax and no decimal
-      // arithmetic is needed. Only near-ties take the exact BigDecimal path —
-      // on real data that is a vanishing fraction of rows, which removes the
-      // two allocations per rule per row that dominated transform's runtime.
-      var maxRaw = 0.0
-      var maxCls = -1
-      var contenders = 0
-      for (r <- rules) {
-        val s = rawScore(r)
-        if (s > maxRaw) {
-          contenders = if (s - maxRaw > 2e-12) 1 else contenders + 1
-          maxRaw = s
-          maxCls = r.cls
-        } else if (s > maxRaw - 2e-12) contenders += 1
-      }
-      if (contenders == 1 && maxRaw > 2e-12) maxCls
-      else if (maxRaw == 0.0) bcMajority
-      else {
-        // Exact path: same rounding as the q42 expression chain (Spark
-        // round = HALF_UP on the shortest decimal representation).
-        var bestScore = 0.0
-        var bestCls = -1
-        for (r <- rules) {
-          val score = new JBigDecimal(java.lang.Double.toString(rawScore(r)))
-            .setScale(12, RoundingMode.HALF_UP).doubleValue()
-          if (score > 0.0 &&
-              (score > bestScore || (score == bestScore && r.cls < bestCls))) {
-            bestScore = score
-            bestCls = r.cls
-          }
-        }
-        if (bestCls >= 0) bestCls else bcMajority
-      }
+    val xs = $(featureCols).toSeq.zipWithIndex.map { case (f, i) =>
+      ChiCSModel.encode(f, if (i < nominalDicts.length) nominalDicts(i) else Array.empty)
     }
-    val dictFor: Int => Array[String] =
-      i => if (i < nominalDicts.length) nominalDicts(i) else Array.empty
-    ds.toDF.withColumn($(predictionCol),
-      predict(array($(featureCols).zipWithIndex.map { case (f, i) =>
-        if (dictFor(i).nonEmpty)
-          (array_position(typedLit(dictFor(i).toSeq), col(f).cast(StringType))
-            - 1).cast(DoubleType)
-        else col(f).cast(DoubleType)
-      }: _*)))
+    ds.toDF
+      .withColumn("__win", ChiCore.winningRule(ds.sparkSession, Map(0 -> rules),
+                                               partitions, xs))
+      .withColumn($(predictionCol),
+        coalesce(when(col("__win.score") > 0, col("__win.cls")), lit(majorityClass)))
+      .drop("__win")
   }
 
   override def write: MLWriter = new ChiCSModel.Writer(this)
 }
 
 object ChiCSModel extends MLReadable[ChiCSModel] {
+
+  /** Collected (antecedent, cls, weight) rows as rules, in `rules` order. */
+  private[chi] def toRules(rows: Array[Row]): Array[ChiRule] =
+    rows.map(r => ChiRule(r.getSeq[Int](0).toArray, r.getInt(1), r.getDouble(2)))
+      .sortBy(r => (r.antecedent.mkString(","), r.cls))
+
+  /** Feature `f` as the model reads it: DOUBLE, or with a nominal
+    * dictionary its 0-based rank in it (−1 when absent; NULL stays NULL). */
+  private[chi] def encode(f: String, dict: Array[String]): Column =
+    (if (dict.isEmpty) col(f)
+     else array_position(typedLit(dict.toSeq), col(f).cast(StringType)) - 1).cast(DoubleType)
 
   /** R7 rule-base merge as a standalone operator: equal antecedents keep the
     * max-weight rule, weight ties resolve to the lowest class index. This is
@@ -543,12 +412,7 @@ object ChiCSModel extends MLReadable[ChiCSModel] {
   private class Reader extends MLReader[ChiCSModel] {
     override def load(path: String): ChiCSModel = {
       val spark = sparkSession
-      val ruleKey: ChiRule => (String, Int) =
-        r => (r.antecedent.mkString(","), r.cls)
-      val rules = spark.read.parquet(s"$path/rules")
-        .collect()
-        .map(r => ChiRule(r.getSeq[Int](0).toArray, r.getInt(1), r.getDouble(2)))
-        .sortBy(ruleKey)
+      val rules = toRules(spark.read.parquet(s"$path/rules").collect())
       val parts = spark.read.parquet(s"$path/partitions")
         .orderBy("idx").collect()
         .map(r => TriPartition(r.getDouble(1), r.getDouble(2), r.getInt(3)))

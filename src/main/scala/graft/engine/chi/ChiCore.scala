@@ -1,11 +1,18 @@
 package graft.engine.chi
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
+import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
-/** Core fuzzy-logic building blocks of the Chi-FRBCS-CS engine, expressed as
-  * pure Column algebra so every use stays inside whole-stage codegen — no
-  * UDFs, no serialization (SURVEY.md §2.6).
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+/** Core of the Chi-FRBCS-CS engine, shared by the estimator and every Chi
+  * query key (SURVEY.md §2.6): memberships, THE CS-PCF learner
+  * ([[ruleWeights]], R5) and THE conflict-resolution tail ([[resolveRules]],
+  * R6/R7) as pure Column algebra inside whole-stage codegen, and THE
+  * winning-rule scorer ([[winningRule]], R9), the one UDF: a row-local loop
+  * over a rule base held on the driver.
   *
   * Semantics per López/del Río/Benítez/Herrera, Fuzzy Sets and Systems 258
   * (2015) §2.1/§4.1 (the paper the reference repo implements; the reference
@@ -13,7 +20,7 @@ import org.apache.spark.sql.functions._
   *  - L triangular membership functions equally distributed over the declared
   *    attribute range [lo,hi], crossing at 0.5, half-triangles at the edges.
   *  - Rule antecedent label = argmax membership, ties → lowest label index.
-  *  - Matching degree = product t-norm over attributes.
+  *  - Matching degree = product t-norm over attributes (x285 ablates min).
   */
 object ChiCore {
 
@@ -54,5 +61,169 @@ object ChiCore {
       .foldLeft(when(lit(false), 0.0)) { case (acc, (c, k)) => acc.when(label === k, c) }
       .otherwise(p.centers.last)
     greatest(lit(0.0), lit(1.0) - abs(x - centerExpr) / lit(p.halfWidth))
+  }
+
+  /** THE CS-PCF learner (R5): the weight sums of every candidate rule.
+    *
+    * `agg` is an antecedent-array training aggregate, one row per distinct
+    * (key…, by…, features, antecedent, class): the DOUBLE features `feats`
+    * (NULL = missing), `__ant` (argmax label per feature; nominal: the
+    * code), `__cls` and the multiplicity `__m`. `cost` is the row's cost
+    * factor: declared or auto-IR literals by class, a per-key column
+    * attached in the plan, or 1. One rule base per distinct `key`, whose
+    * candidates are the (antecedent, class) pairs of its fully-observed
+    * rows; `by` splits the sums without splitting the candidates.
+    *
+    * Each row explodes only to its ≤ 2ⁿ μ>0 neighbour antecedents (the
+    * dropped terms are exactly zero); a nominal attribute has one, its code,
+    * at factor 1, and a NULL one matches every label at factor 1.
+    *
+    * Decimal protocol (bit-identical to the oracle SQL): the term c·μ1·…·μn,
+    * multiplied left to right as the oracle spells it (c·min(μ…) under the
+    * minimum t-norm), is rounded to 12 dp and cast DECIMAL(18,12), times the
+    * multiplicity as DECIMAL(19,0) — exactly DECIMAL(38,12), so the sums are
+    * exact and order-free (a (38,12) term would overflow against the bigint
+    * count and allowPrecisionLoss would round each product to scale 6).
+    * Returns (key…, by…, __ant, __cls, w_match, w_all). */
+  def ruleWeights(agg: DataFrame, feats: Seq[String], parts: Seq[TriPartition],
+                  cost: Column, tnormMin: Boolean = false,
+                  nominal: Set[String] = Set.empty, key: Seq[String] = Nil,
+                  by: Seq[String] = Nil): DataFrame = {
+    // The labels join as SHORT columns, not as one array: integral join keys
+    // of ≤ 64 bits pack into one long (two labels and an int key do), so the
+    // broadcast side is a compact LongHashedRelation instead of a
+    // page-sized UnsafeHashedRelation the driver holds until it is cleaned.
+    val labels = feats.indices.map(i => s"__n$i")
+    val candidates = agg
+      .filter(feats.map(col(_).isNotNull).reduce(_ && _))
+      .select(key.map(col) ++ labels.indices.map(i => col("__ant")(i).cast(ShortType).as(labels(i)))
+              :+ col("__cls").as("__rcls"): _*)
+      .distinct()
+    val neighbors = feats.zipWithIndex.foldLeft(agg) { case (d, (f, i)) =>
+      val p = parts(i)
+      val allLabels = sequence(lit(0), lit(p.numLabels - 1))
+      if (nominal(f))
+        d.withColumn(s"__n$i", explode(
+          when(col(f).isNull, allLabels).otherwise(array(col(f).cast(IntegerType)))))
+      else {
+        val kf = floor((col(f) - p.lo) / p.halfWidth).cast(IntegerType)
+        d.withColumn(s"__n$i", explode(
+            when(col(f).isNull, allLabels).otherwise(array(kf, kf + 1))))
+          .filter(col(f).isNull ||
+                  (col(s"__n$i").between(0, p.numLabels - 1) &&
+                   membershipAt(col(f), col(s"__n$i"), p) > 0.0))
+      }
+    }
+    val mus = feats.zipWithIndex.collect { case (f, i) if !nominal(f) =>
+      when(col(f).isNull, lit(1.0))
+        .otherwise(membershipAt(col(f), col(s"__n$i"), parts(i)))
+    }
+    val degree =
+      if (tnormMin && mus.size > 1) cost * least(mus: _*) else mus.foldLeft(cost)(_ * _)
+    val w = round(degree, 12).cast(DecimalType(18, 12)) *
+      col("__m").cast(DecimalType(19, 0))
+    val grp = (key ++ by).map(col)
+    neighbors.withColumn("__w", w)
+      .select(grp ++ labels.map(l => col(l).cast(ShortType).as(l)) ++
+              Seq(col("__cls"), col("__w")): _*)
+      .join(broadcast(candidates), key ++ labels)
+      .groupBy(grp ++ labels.map(col) :+ col("__rcls"): _*)
+      .agg(coalesce(sum(when(col("__cls") === col("__rcls"), col("__w"))),
+                    lit(0).cast(DecimalType(38, 12))).as("w_match"),
+           sum(col("__w")).as("w_all"))
+      .select(grp ++ Seq(array(labels.map(col(_).cast(IntegerType)): _*).as("__ant"),
+                         col("__rcls").as("__cls"), col("w_match"), col("w_all")): _*)
+  }
+
+  /** THE conflict-resolution tail (R6/R7): rw = (2·w_match − w_all) / w_all,
+    * then per antecedent (`by`) the max-weight consequent, tie → lowest
+    * class, rw > 0 only. `sums`: (by…, __cls, w_match, w_all DECIMAL(38,12)).
+    * The sums are rounded to 6 dp BEFORE the double cast: the scaled
+    * integers fit in 53 bits, so rw is bit-identical to the oracle's (an
+    * unrounded cast can differ by 1 ulp between engines, which flipped a
+    * winning-rule tie). Returns (by…, __cls, rw). */
+  def resolveRules(sums: DataFrame, by: Seq[String]): DataFrame =
+    sums.filter(col("w_all") > 0)
+      .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
+                        round(col("w_all"), 6).cast(DoubleType))
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(col("rw").desc, col("__cls"))))
+      .filter(col("__rn") === 1 && col("rw") > 0)
+      .select((by :+ "__cls" :+ "rw").map(col): _*)
+
+  /** The learner ending in its tail: (key…, __ant, __cls, rw). */
+  def learnRules(agg: DataFrame, feats: Seq[String], parts: Seq[TriPartition],
+                 cost: Column, tnormMin: Boolean = false,
+                 nominal: Set[String] = Set.empty,
+                 key: Seq[String] = Nil): DataFrame =
+    resolveRules(ruleWeights(agg, feats, parts, cost, tnormMin, nominal, key),
+                 key :+ "__ant")
+
+  /** One example's winning rule and its 12-dp score. */
+  final case class ChiWin(ant: Array[Int], cls: Int, score: Double)
+
+  /** The winning-rule reasoning (R9) over rule bases held on the driver,
+    * one per integer key: argmax of round12(μ1⊗…⊗μn·rw) in the TOTAL order
+    * score desc, class, antecedent. With no rule scoring above 0 the winner
+    * is the rule first in that order, at score 0; each caller keeps its own
+    * no-match policy. A NULL feature is skipped (factor 1); a nominal
+    * category unseen at training encodes to −1, whose μ is 0 everywhere. */
+  private[chi] final class Scorer(bases: Map[Int, Array[ChiRule]],
+                                  parts: Array[TriPartition],
+                                  tnormMin: Boolean) extends Serializable {
+    import scala.math.Ordering.Implicits._
+    // in tie-break order, so the first maximum is the winner
+    private val sorted: Map[Int, Array[ChiRule]] =
+      bases.map { case (k, rs) => k -> rs.sortBy(r => (r.cls, r.antecedent.toSeq)) }
+
+    private def rawScore(r: ChiRule, xs: Seq[java.lang.Double]): Double = {
+      var mu = 1.0
+      for (i <- xs.indices if xs(i) != null && mu > 0.0) {
+        val p = parts(i)
+        val m = math.max(0.0,
+          1.0 - math.abs(xs(i) - (p.lo + r.antecedent(i) * p.halfWidth)) / p.halfWidth)
+        mu = if (tnormMin) math.min(mu, m) else mu * m
+      }
+      mu * r.weight
+    }
+
+    /** Spark's round(x, 12): HALF_UP on the shortest decimal rendering. */
+    private def round12(s: Double): Double =
+      if (s.isNaN || s.isInfinite) s
+      else new JBigDecimal(java.lang.Double.toString(s))
+        .setScale(12, RoundingMode.HALF_UP).doubleValue()
+
+    def apply(key: Int, xs: Seq[java.lang.Double]): ChiWin = {
+      val rules = sorted.getOrElse(key, Array.empty[ChiRule])
+      val raw = rules.map(rawScore(_, xs))
+      def win(i: Int, score: Double) = ChiWin(rules(i).antecedent, rules(i).cls, score)
+      var best = 0
+      for (i <- raw.indices if raw(i) > raw(best)) best = i
+      // Fast path: 12dp HALF_UP rounding moves a score by < 5e-13, so when
+      // the best raw score leads every rival by > 2e-12 the rounded argmax
+      // is the raw argmax and only the winner's score needs decimal
+      // arithmetic; only near-ties pay a BigDecimal per rule.
+      if (rules.isEmpty) null
+      else if (raw.count(_ > raw(best) - 2e-12) == 1) win(best, round12(raw(best)))
+      else if (raw.forall(_ == 0.0)) win(0, 0.0)
+      else {
+        val scores = raw.map(round12)
+        best = 0
+        for (i <- scores.indices if scores(i) > scores(best)) best = i
+        win(best, scores(best))
+      }
+    }
+  }
+
+  /** THE winning-rule scorer (R9) as a row-local Column: the [[ChiWin]]
+    * (ant, cls, score) of the features `xs` against `bases(key)` under
+    * the product or minimum t-norm, NULL when that base is empty. The bases
+    * are broadcast once; no shuffle, so it scores streams too. */
+  def winningRule(spark: SparkSession, bases: Map[Int, Array[ChiRule]],
+                  parts: Array[TriPartition], xs: Seq[Column],
+                  tnormMin: Boolean = false, key: Column = lit(0)): Column = {
+    val scorer = spark.sparkContext.broadcast(new Scorer(bases, parts, tnormMin))
+    udf((k: Int, v: Seq[java.lang.Double]) => scorer.value(k, v))
+      .apply(key, array(xs.map(_.cast(DoubleType)): _*))
   }
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.Tables
-import graft.engine.chi.ChiCore
+import graft.engine.chi.{ChiCSModel, ChiCore, ChiRule}
 import graft.engine.chi.ChiCore.TriPartition
 
 /** q38–q43: the reference's entire ML surface (Chi-FRBCS-BigDataCS operators
@@ -16,12 +16,16 @@ import graft.engine.chi.ChiCore.TriPartition
   * (range [1,50]), x2=l_discount ([0,0.1]), binary label
   * pos := l_extendedprice > 95000 (≈9.6 % minority → cost IR ≈ 9.3).
   *
+  * Learning and scoring are the estimator's ([[ChiCore.learnRules]],
+  * [[ChiCore.winningRule]]), adapted here to the two-feature frames.
+  *
   * 100 TB posture: the candidate antecedent set is bounded by Lⁿ·|C| = 18
   * rows, so it is always broadcast; the only full-data shuffle is the final
   * (antecedent, class) aggregation — the reference's single-reducer merge
   * becomes a partial+final agg. Per-term weights are rounded to 12dp and
   * summed as DECIMAL(38,12): exact, order-independent, shuffle-safe
-  * (SURVEY.md §7.4.2).
+  * (SURVEY.md §7.4.2). The resolved rule base is collected to the driver
+  * and scoring is a row-local projection over it: no window, no exchange.
   */
 object ChiMl {
   private[queries] val P1 = TriPartition(1.0, 50.0)  // l_quantity
@@ -39,14 +43,13 @@ object ChiMl {
       .withColumn("a1", ChiCore.argmaxLabel(ChiCore.memberships(col("x1"), P1)))
       .withColumn("a2", ChiCore.argmaxLabel(ChiCore.memberships(col("x2"), P2)))
 
-  /** Match degree of (x1, x2) against labels (ra1, ra2) under the t-norm,
-    * scaled by `factor` first: c·μ1·μ2 multiplies left to right exactly as
-    * the oracle SQL spells it. PRODUCT is [P1]'s t-norm (and every key's but
-    * one); MINIMUM is the other classical FRBCS conjunction, ablated by x285. */
-  private def matchDegree(tnormMin: Boolean, factor: Column = lit(1.0)): Column = {
+  /** Match degree of (x1, x2) against labels (ra1, ra2) under the t-norm.
+    * PRODUCT is [P1]'s t-norm (and every key's but one); MINIMUM is the
+    * other classical FRBCS conjunction, ablated by x285. */
+  private def matchDegree(tnormMin: Boolean): Column = {
     val m1 = ChiCore.membershipAt(col("x1"), col("ra1"), P1)
     val m2 = ChiCore.membershipAt(col("x2"), col("ra2"), P2)
-    if (tnormMin) factor * least(m1, m2) else factor * m1 * m2
+    if (tnormMin) least(m1, m2) else m1 * m2
   }
 
   /** R3 cost of a class with count `n`: max/min class count for the
@@ -54,47 +57,34 @@ object ChiMl {
   private def classCost(n: Column, w: WindowSpec): Column =
     when(n === min(n).over(w), max(n).over(w) * lit(1.0) / n).otherwise(lit(1.0))
 
-  /** `small` (≤ a few hundred rows) broadcast onto `df` by the shared `key`
-    * columns — a cross join when the key is empty. */
-  private def attach(df: DataFrame, small: DataFrame, key: Seq[String]): DataFrame =
-    if (key.isEmpty) df.crossJoin(broadcast(small)) else df.join(broadcast(small), key)
-
   /** The distinct-feature-vector training aggregate every fit consumes:
-    * (x1, x2, a1, a2, cls, mcnt). Identical examples weigh identically, so
-    * the fit works |vectors|·|candidates| decimal terms instead of
-    * |rows|·|candidates|; callers that read it more than once (a fit plus
-    * its scoring grid, two fits) pass ONE materialized copy so the corpus is
-    * scanned once. */
-  private[queries] def vectorGex(spark: SparkSession, dir: String): DataFrame =
-    labeled(spark, dir).groupBy("x1", "x2", "a1", "a2", "cls")
+    * (key…, x1, x2, a1, a2, cls, mcnt), each `key` a (name, column) of the
+    * example. Identical examples weigh identically, so the fit works
+    * |vectors|·|candidates| decimal terms instead of |rows|·|candidates|;
+    * callers that read it more than once (a fit plus its scoring grid, two
+    * fits) pass ONE materialized copy so the corpus is scanned once. */
+  private[queries] def vectorGex(spark: SparkSession, dir: String,
+                                 key: (String, Column)*): DataFrame =
+    key.foldLeft(labeled(spark, dir)) { case (d, (k, c)) => d.withColumn(k, c) }
+      .groupBy((key.map(_._1) ++ Seq("x1", "x2", "a1", "a2", "cls")).map(col): _*)
       .agg(count(lit(1)).as("mcnt"))
 
-  /** THE CS-PCF learner (R3–R7): one rule base per distinct `rbKey` value of
-    * `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), with the cost vector
-    * per distinct `costKey` value. Global keys pass Nil for both, the m-chunk
-    * mappers (x281/x308) key the rule base by `chunk` but keep the cost
-    * vector global, cross-validation keys both by `model`. With
-    * costSensitive=false every example weighs 1 (the BASE Chi-FRBCS, plain
-    * PCF). Returns (rbKey…, ra1, ra2, rcls, rw): per antecedent the
-    * max-weight consequent (tie → lowest class), RW > 0 only. The cost
-    * vector, the candidate set and the weight terms all derive from `gex`,
-    * so an unmaterialized aggregate's one exchange is reused by all three.
-    *
-    * Decimal protocol (bit-identical to the oracle): each term is rounded
-    * to 12 dp and cast DECIMAL(18,12), times the multiplicity as
-    * DECIMAL(19,0) — exactly DECIMAL(38,12), so the sums are exact and
-    * order-free (a (38,12) term would overflow against the bigint count and
-    * allowPrecisionLoss would round each product to scale 6). The sums are
-    * rounded to 6 dp BEFORE the double cast: the scaled integers then fit in
-    * 53 bits, the conversion is exact on every engine, and rw is
-    * bit-identical to the oracle's (an unrounded DECIMAL(38,12) cast can
-    * differ by 1 ulp between engines, which flipped a winning-rule tie). */
+  /** The two-feature adapter onto the shared CS-PCF learner
+    * ([[ChiCore.learnRules]], R3–R7): one rule base per distinct `rbKey`
+    * value of `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), with the
+    * cost vector per distinct `costKey` value, computed in the plan. Global
+    * keys pass Nil for both, the m-chunk mappers (x281/x308) key the rule
+    * base by `chunk` but keep the cost vector global, cross-validation keys
+    * both by `model`. With costSensitive=false every example weighs 1 (the
+    * BASE Chi-FRBCS, plain PCF). Returns (rbKey…, ra1, ra2, rcls, rw). The
+    * cost vector, the candidates and the weight terms all derive from
+    * `gex`, so an unmaterialized aggregate's one exchange serves all three. */
   private[queries] def ruleBaseFrom(gex: DataFrame,
                                     costSensitive: Boolean,
                                     tnormMin: Boolean,
                                     rbKey: Seq[String] = Nil,
                                     costKey: Seq[String] = Nil): DataFrame = {
-    val (weighted, costFactor) =
+    val (weighted, cost) =
       if (!costSensitive) (gex, lit(1.0))
       else {
         val costs = gex.groupBy((costKey :+ "cls").map(col): _*)
@@ -103,26 +93,27 @@ object ChiMl {
           .groupBy(costKey.map(col): _*)
           .agg(max(when(col("cls") === 1, col("c"))).as("c1"),
                max(when(col("cls") === 0, col("c"))).as("c0"))
-        (attach(gex, costs, costKey), when(col("cls") === 1, col("c1")).otherwise(col("c0")))
+        (if (costKey.isEmpty) gex.crossJoin(broadcast(costs))
+         else gex.join(broadcast(costs), costKey),
+         when(col("__cls") === 1, col("c1")).otherwise(col("c0")))
       }
-    val ants = gex.select((rbKey.map(col) :+ col("a1").as("ra1") :+ col("a2").as("ra2")
-                           :+ col("cls").as("rcls")): _*).distinct()
-    val w = round(matchDegree(tnormMin, costFactor), 12).cast(DecimalType(18, 12)) *
-      col("mcnt").cast(DecimalType(19, 0))
-    val sums = attach(weighted, ants, rbKey)
-      .select((rbKey ++ Seq("ra1", "ra2", "rcls", "cls")).map(col) :+ w.as("w"): _*)
-      .groupBy((rbKey ++ Seq("ra1", "ra2", "rcls")).map(col): _*)
-      .agg(sum(when(col("cls") === col("rcls"), col("w"))).as("w_match"),
-           sum(col("w")).as("w_all"))
-    val byAnt = Window.partitionBy((rbKey ++ Seq("ra1", "ra2")).map(col): _*)
-      .orderBy(col("rw").desc, col("rcls"))
-    sums.filter(col("w_all") > 0)
-      .withColumn("rw", round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
-                        round(col("w_all"), 6).cast(DoubleType))
-      .withColumn("rn", row_number().over(byAnt))
-      .filter(col("rn") === 1 && col("rw") > 0)
-      .select((rbKey ++ Seq("ra1", "ra2", "rcls", "rw")).map(col): _*)
+    val agg = weighted
+      .withColumn("__ant", array(col("a1"), col("a2")))
+      .withColumnRenamed("cls", "__cls").withColumnRenamed("mcnt", "__m")
+    ChiCore.learnRules(agg, Seq("x1", "x2"), Seq(P1, P2), cost, tnormMin, key = rbKey)
+      .select(rbKey.map(col) ++ Seq(col("__ant")(0).as("ra1"), col("__ant")(1).as("ra2"),
+                                    col("__cls").as("rcls"), col("rw")): _*)
   }
+
+  /** A (…, ra1, ra2, rcls, rw) rule-base frame collected to the driver,
+    * one array per value of the integer `key`. */
+  private[queries] def held(rb: DataFrame, key: Column = lit(0)): Map[Int, Array[ChiRule]] =
+    rb.select(key, col("ra1"), col("ra2"), col("rcls"), col("rw"))
+      .collect()
+      .groupBy(_.getInt(0))
+      .map { case (k, rs) =>
+        k -> rs.map(r => ChiRule(Array(r.getInt(1), r.getInt(2)), r.getInt(3), r.getDouble(4)))
+      }
 
   /** The scoring grain: (key…, x1, x2, cls, m) — one row per distinct
     * feature vector and class, with its multiplicity. */
@@ -130,33 +121,28 @@ object ChiMl {
     gex.groupBy((key ++ Seq("x1", "x2", "cls")).map(col): _*)
       .agg(sum(col("mcnt")).as("m"))
 
-  /** Every (example, rule) pair of a scoring grid and a rule base of the
-    * same `key`, with its R9 score round(μ1⊗μ2·rw, 12). */
-  private[queries] def ruleScores(grid: DataFrame, rb: DataFrame,
-                                  key: Seq[String] = Nil,
-                                  tnormMin: Boolean = false): DataFrame =
-    attach(grid, rb, key).withColumn("score", round(matchDegree(tnormMin) * col("rw"), 12))
-
-  /** THE winning-rule classifier (R9): per example (key…, x1, x2, cls) the
-    * highest-scoring rule. The tie order is TOTAL — score desc, rcls, ra1,
-    * ra2 — so the winning RULE is deterministic, not just its class; callers
-    * that read only the class and score get what (score desc, rcls) gives.
-    * Scoring is per distinct feature vector with multiplicity:
-    * (l_orderkey, l_linenumber) is NOT unique in the data, so a per-row
-    * window would merge different examples and order their score ties
-    * arbitrarily, and distinct vectors ≪ rows at scale. */
-  private[queries] def winningRules(scores: DataFrame, key: Seq[String] = Nil): DataFrame = {
-    val perEx = Window.partitionBy((key ++ Seq("x1", "x2", "cls")).map(col): _*)
-      .orderBy(col("score").desc, col("rcls"), col("ra1"), col("ra2"))
-    scores.withColumn("rn", row_number().over(perEx)).filter(col("rn") === 1).drop("rn")
+  /** The winning-rule classifier (R9) of the two-feature keys: every row
+    * of a scoring grid (key…, x1, x2, cls, m) gains its winner (ra1, ra2,
+    * rcls, score) from [[ChiCore.winningRule]] over `bases(key)`, in
+    * the total order score desc, rcls, ra1, ra2. Rows whose rule base is
+    * empty drop out, as under the oracle SQL's cross join with it. */
+  private[queries] def classify(grid: DataFrame, bases: Map[Int, Array[ChiRule]],
+                                key: Option[String] = None,
+                                tnormMin: Boolean = false): DataFrame = {
+    val live = bases.collect { case (k, rs) if rs.nonEmpty => k }.toSeq
+    grid.filter(key.fold(lit(live.nonEmpty))(col(_).isin(live: _*)))
+      .withColumn("__win", ChiCore.winningRule(grid.sparkSession, bases, Array(P1, P2),
+        Seq(col("x1"), col("x2")), tnormMin, key.fold(lit(0))(col)))
+      .select(col("*"), col("__win.ant")(0).as("ra1"), col("__win.ant")(1).as("ra2"),
+              col("__win.cls").as("rcls"), col("__win.score").as("score"))
+      .drop("__win")
   }
 
   /** The global CS (or base) rule base fitted on `vg` — a materialized
     * [[vectorGex]] — applied to the same vectors: (x1, x2, cls, m, ra1, ra2,
-    * rcls, rw, score), one row per distinct (x1, x2, cls). */
+    * rcls, score), one row per distinct (x1, x2, cls). */
   private def classified(vg: DataFrame, costSensitive: Boolean = true): DataFrame =
-    winningRules(ruleScores(scoringGrid(vg),
-      ruleBaseFrom(vg, costSensitive, tnormMin = false)))
+    classify(scoringGrid(vg), held(ruleBaseFrom(vg, costSensitive, tnormMin = false)))
 
   /** THE binary confusion aggregate (R10): tp/tn/fp/fn as sums of `mass`
     * over the 0/1 `actual` and `predicted` columns, grouped by `by`, plus
@@ -279,8 +265,9 @@ object ChiMl {
     * base), because "this rule never fires" is the finding.
     *
     * 100 TB: the win assignment rides the q42 distinct-vector device (the
-    * only row-scale work is the vector compression); the coverage rollup
-    * groups ≤|vectors| rows by ≤9 rules. */
+    * only row-scale work is the vector compression; each vector is scored
+    * row-locally, no window); the coverage rollup groups ≤|vectors| rows
+    * by ≤9 rules. */
   def x201(spark: SparkSession, dir: String): DataFrame = {
     // one corpus scan: the rule base and the winners share one aggregate
     val vg = vectorGex(spark, dir).materialized
@@ -469,11 +456,12 @@ object ChiMl {
     * cost-sensitive minority protection as the mapper count grows, trading
     * minority recall (GM) for raw accuracy.
     *
-    * 100 TB: the chunk id is one map-side column; candidates stay ≤
-    * m·L²·|C| rows (broadcast both sides of the weight join); the weight
-    * aggregation is ONE (chunk, antecedent, class)-keyed partial+final agg
-    * — the paper's m single-JVM mappers become m logical key groups in the
-    * same shuffle, so m scales freely without re-planning. The corpus is
+    * 100 TB: the chunk id is one map-side column; the weight aggregation
+    * is ONE (chunk, antecedent, class)-keyed partial+final agg — the
+    * paper's m single-JVM mappers become m logical key groups in the same
+    * shuffle, so m scales freely without re-planning; the ≤ m·L²·|C|
+    * partial rules are fused on the driver and scoring is row-local
+    * against the fused base (no window). The corpus is
     * scanned ONCE for all three m values (round 13): the FINEST (m = 16)
     * chunk aggregate is checkpointed and the coarser legs re-chunk it by
     * `chunk % m` — exact because every declared m divides 16, so
@@ -515,7 +503,8 @@ object ChiMl {
     val gex16 = mChunkGex(spark, dir, 16).materialized
     // concurrent per-m reports (x281's discipline; identical outputs)
     graft.engine.Par.all(Seq(1, 4, 16).map(m =>
-        () => mChunkReportFrom(rechunk(gex16, m), m, mChunkAveFusedRbFrom)))
+        () => mChunkReportFrom(rechunk(gex16, m), m,
+          g => held(mChunkAveFusedRbFrom(g)).getOrElse(0, Array.empty))))
       .reduce(_ unionByName _).orderBy("m")
   }
 
@@ -531,10 +520,10 @@ object ChiMl {
   }
 
   /** The fused rule base of the m-chunk scheme (x281's core; also the
-    * Round12Spec m=1 identity probe). Returns (ra1, ra2, rcls, rw). */
+    * Round12Spec m=1 identity probe). */
   private[graft] def mChunkFusedRb(spark: SparkSession, dir: String,
-                                   m: Int): DataFrame =
-    mChunkFusedRbFrom(mChunkGex(spark, dir, m))
+                                   m: Int): Array[ChiRule] =
+    mChunkMaxFused(mChunkGex(spark, dir, m))
 
   /** The CHUNK-LOCAL partial rule bases, each mapper's resolved RB: the
     * shared first half of both fusion variants (chunk-keyed rule base, global
@@ -543,17 +532,11 @@ object ChiMl {
     ruleBaseFrom(gex, costSensitive = true, tnormMin = false, rbKey = Seq("chunk"))
 
   /** The reducer's MAX-RW fusion across chunks (Chi-FRBCS-BigData-Max,
-    * [P2]): per antecedent keep the single partial rule with maximum
-    * weight, tie → lowest class; equal (rw, cls) rows from different
-    * chunks carry identical output values, so the pick among them is
-    * value-deterministic. */
-  private[graft] def mChunkFusedRbFrom(gex: DataFrame): DataFrame = {
-    val byAnt = Window.partitionBy("ra1", "ra2")
-      .orderBy(col("rw").desc, col("rcls"))
-    mChunkPartialRb(gex).withColumn("fn", row_number().over(byAnt))
-      .filter(col("fn") === 1)
-      .select(col("ra1"), col("ra2"), col("rcls"), col("rw"))
-  }
+    * [P2]): the ≤ m·L²·|C| partial rules are collected and fused on the
+    * driver by [[ChiCSModel.mergeRuleBases]] — per antecedent the single
+    * partial rule with maximum weight, tie → lowest class. */
+  private[graft] def mChunkMaxFused(gex: DataFrame): Array[ChiRule] =
+    ChiCSModel.mergeRuleBases(held(mChunkPartialRb(gex), col("chunk")).values.toSeq)
 
   /** The reducer's AVERAGED-RW fusion (Chi-FRBCS-BigData-Ave, [P2] — the
     * SURVEY §2.3 Max/Ave pair's second member): per (antecedent,
@@ -590,28 +573,21 @@ object ChiMl {
     * every downstream input of the m-chunk chain derives from this ONE
     * aggregate (ReusedExchange serves the other consumers). */
   private def mChunkGex(spark: SparkSession, dir: String, m: Int): DataFrame =
-    labeled(spark, dir)
-      .withColumn("chunk",
-        (((col("l_orderkey") % 100000000L) * lit(2654435761L) +
-          col("l_linenumber") * lit(97564181L)) % lit(2147483647L) % m)
-          .cast(IntegerType))
-      .groupBy("chunk", "x1", "x2", "a1", "a2", "cls")
-      .agg(count(lit(1)).as("mcnt"))
+    vectorGex(spark, dir, "chunk" ->
+      (((col("l_orderkey") % 100000000L) * lit(2654435761L) +
+        col("l_linenumber") * lit(97564181L)) % lit(2147483647L) % m).cast(IntegerType))
 
-  /** One (m, n_rules, acc_ppm, gm_ppm) report row: fuse, score the full
-    * training corpus with the fused base (winning-rule, global-majority
-    * no-match fallback), reduce to micro-unit accuracy / GM. The gex
-    * argument is a (re-chunked view of the) checkpointed chunk aggregate —
-    * the only corpus-derived input of the whole chain. */
+  /** One (m, n_rules, acc_ppm, gm_ppm) report row: fuse on the driver,
+    * score the full training corpus with the fused base (winning-rule,
+    * global-majority no-match fallback), reduce to micro-unit accuracy /
+    * GM. The gex argument is a (re-chunked view of the) checkpointed chunk
+    * aggregate — the only corpus-derived input of the whole chain. */
   private def mChunkReportFrom(gex: DataFrame, m: Int,
-      fuse: DataFrame => DataFrame = mChunkFusedRbFrom): DataFrame = {
-    // the fused base is ≤ L²·|C| rows read by two consumers — materialize
-    // once instead of re-deriving the whole chunked chain per consumer
-    val fused = fuse(gex).materialized
-    val win = winningRules(ruleScores(scoringGrid(gex), fused))
+      fuse: DataFrame => Array[ChiRule] = mChunkMaxFused): DataFrame = {
+    val fused = fuse(gex)
+    val win = classify(scoringGrid(gex), Map(0 -> fused))
     binaryConfusion(predictOrMajority(win, gex, "score"), "actual", "pred", col("m"))
-      .crossJoin(broadcast(fused.agg(count(lit(1)).as("n_rules"))))
-      .select(lit(m.toLong).as("m") +: col("n_rules") +: ppmMetrics: _*)
+      .select(lit(m.toLong).as("m") +: lit(fused.length.toLong).as("n_rules") +: ppmMetrics: _*)
   }
 
   /** x285: FUZZY REASONING METHOD ABLATION — the FRBCS design grid the Chi
@@ -633,9 +609,10 @@ object ChiMl {
     * 100 TB: the corpus is scanned ONCE — both t-norm fits, the scoring
     * grain and the majority class derive from one checkpointed
     * distinct-vector aggregate (the q41 broadcast-candidate shape works on
-    * that grid); both FRMs read the same grid-bounded scored frame
-    * (localCheckpoint'd — ≤ grid·|RB| rows), so the whole 4-cell ablation
-    * costs one shuffle over the data plus grid-sized work. */
+    * that grid); the winner FRM scores row-locally against the driver-held
+    * rule base and the additive FRM sums the grid-bounded (≤ grid·|RB|
+    * rows) per-rule scores, so the whole 4-cell ablation costs one shuffle
+    * over the data plus grid-sized work. */
   def x285(spark: SparkSession, dir: String): DataFrame = {
     // ONE corpus scan: both t-norm fits, the scoring grain and the majority
     // class all derive from the same checkpointed vector aggregate
@@ -646,19 +623,25 @@ object ChiMl {
       .reduce(_ unionByName _).orderBy("frm", "tnorm")
   }
 
+  /** Every (example, rule) pair of a scoring grid and a rule base with its
+    * score round(μ1⊗μ2·rw, 12): the additive FRM's evidence. */
+  private def ruleScores(grid: DataFrame, rb: DataFrame, tnormMin: Boolean): DataFrame =
+    grid.crossJoin(broadcast(rb)).withColumn("score", round(matchDegree(tnormMin) * col("rw"), 12))
+
   /** Both FRM rows (winner + additive) for one t-norm. */
   private def frmReports(gex0: DataFrame, tnormMin: Boolean): DataFrame = {
     val tname = if (tnormMin) "min" else "prod"
     val fused = ruleBaseFrom(gex0, costSensitive = true, tnormMin = tnormMin)
       .materialized
-    val nRules = fused.agg(count(lit(1)).as("n_rules"))
-    // grid-bounded (≤ |x1 grid|·|x2 grid|·2·|RB| rows): materialize once,
-    // both FRMs read it without re-scanning
-    val scored = ruleScores(scoringGrid(gex0), fused, tnormMin = tnormMin)
+    val rules = held(fused)
+    val nRules = lit(rules.getOrElse(0, Array.empty).length.toLong).as("n_rules")
+    val grid = scoringGrid(gex0)
+    val winW = predictOrMajority(classify(grid, rules, tnormMin = tnormMin), gex0, "score")
+    // the additive FRM sums every rule's score (grid-bounded: ≤ |x1 grid|·
+    // |x2 grid|·2·|RB| rows), in exact pico-units
+    val votes = ruleScores(grid, fused, tnormMin)
       .withColumn("si", round(col("score") * lit(1e12), 0).cast(LongType))
-      .materialized
-    val winW = predictOrMajority(winningRules(scored), gex0, "score")
-    val votes = scored.groupBy("x1", "x2", "cls", "m", "rcls")
+      .groupBy("x1", "x2", "cls", "m", "rcls")
       .agg(sum(col("si")).as("v"))
     val perCls = Window.partitionBy("x1", "x2", "cls")
       .orderBy(col("v").desc, col("rcls"))
@@ -667,8 +650,7 @@ object ChiMl {
       gex0, "v")
     def report(win: DataFrame, frm: String): DataFrame =
       binaryConfusion(win, "actual", "pred", col("m"))
-        .crossJoin(broadcast(nRules))
-        .select(lit(frm).as("frm") +: lit(tname).as("tnorm") +: col("n_rules") +: ppmMetrics: _*)
+        .select(lit(frm).as("frm") +: lit(tname).as("tnorm") +: nRules +: ppmMetrics: _*)
     report(winW, "winner").unionByName(report(winA, "additive"))
   }
 }

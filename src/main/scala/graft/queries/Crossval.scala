@@ -24,7 +24,8 @@ import org.apache.spark.sql.types._
   * count, still ≪ rows). Every train/test fan-out happens on that bounded
   * aggregate (a broadcast join with a ≤5-row model list), so k-fold CV and
   * the 4-tier learning curve each cost ONE shuffle over the fact table — not
-  * k training scans.
+  * k training scans. The ≤ 5 rule bases are collected to the driver and the
+  * held-out rows are scored row-locally against their model's base.
   */
 object Crossval {
   private val K = 5
@@ -40,14 +41,11 @@ object Crossval {
     * pruning defeats ReusedExchange — without the checkpoint the plan
     * re-scans the fact table once per consumer (measured: 8 scans). */
   private def gexAll(spark: SparkSession, dir: String): DataFrame =
-    ChiMl.labeled(spark, dir).withColumn("fold", foldExpr)
-      .groupBy("fold", "x1", "x2", "a1", "a2", "cls")
-      .agg(count(lit(1)).as("mcnt"))
-      .materialized
+    ChiMl.vectorGex(spark, dir, "fold" -> foldExpr).materialized
 
   /** Train one Chi-CS model per distinct `model` key in `trainG` and score
     * it on the matching rows of `testG` — ChiMl's R3–R10 chain with `model`
-    * as the rule-base and cost-vector key.
+    * as the rule-base, cost-vector and scoring key.
     *
     * trainG: (model, x1, x2, a1, a2, cls, mcnt); testG: (model, x1, x2,
     * cls, m). Returns (model, n_train, n_test, tp, tn, fp, fn, accuracy,
@@ -56,7 +54,7 @@ object Crossval {
     val key = Seq("model")
     val rb = ChiMl.ruleBaseFrom(trainG, costSensitive = true, tnormMin = false,
                                 rbKey = key, costKey = key)
-    val win = ChiMl.winningRules(ChiMl.ruleScores(testG, rb, key), key)
+    val win = ChiMl.classify(testG, ChiMl.held(rb, col("model")), Some("model"))
     val nTrain = trainG.groupBy("model").agg(sum("mcnt").as("n_train"))
     ChiMl.binaryConfusion(win, "cls", "rcls", col("m"), key)
       .join(broadcast(nTrain), key)

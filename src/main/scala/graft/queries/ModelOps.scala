@@ -1,12 +1,13 @@
 package graft.queries
 
 import graft.engine.Mat.MatOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.Tables
-import graft.engine.chi.{ChiCSClassifier, ChiCSModel}
+import graft.engine.chi.{ChiCSClassifier, ChiCSModel, ChiCore}
+import graft.engine.chi.ChiCore.TriPartition
 
 /** x204/x205: the MODEL LIFECYCLE operators — persistence round-trip and the
   * reference's own KEEL-file training path. Both must reproduce q42's
@@ -99,11 +100,7 @@ object ModelOps {
         .when(col("l_quantity") > 18, 1)
         .otherwise(0).as("label"))
       .materialized // fit + transform read it
-    val model = new ChiCSClassifier()
-      .setFeatureCols(Array("x1", "x2")).setLabelCol("label")
-      .setFeatureRanges(Array(1.0, 50.0, 0.0, 0.1))
-      .fit(train)
-    confusion(model.transform(train))
+    confusion(fit(train).transform(train))
   }
 
   /** x208: AUTO-DESCRIPTOR RANGES (R11's data-derived path) — no declared
@@ -145,19 +142,22 @@ object ModelOps {
     val gex = features(spark, dir)
       .groupBy("x1", "x2", "label").agg(count(lit(1)).as("w"))
       .materialized
-    // concurrent per-L fits (x215's discipline; identical outputs)
-    graft.engine.Par.all(Seq(3, 5).map { l => () =>
-      val model = new ChiCSClassifier()
-        .setFeatureCols(Array("x1", "x2")).setLabelCol("label")
-        .setFeatureRanges(Array(1.0, 50.0, 0.0, 0.1))
-        .setNumLabels(l)
-        .setWeightCol("w")
-        .fit(gex)
-      ChiMl.binaryConfusion(model.transform(gex), "label", "prediction", col("w"))
-        .select(lit(l.toLong).as("num_labels") +:
-                lit(model.rules.length.toLong).as("n_rules") +: ChiMl.accuracyGm: _*)
-    }).reduce(_ unionByName _).orderBy("num_labels")
+    variantReports(gex, "num_labels", Seq(3, 5))(l => new ChiCSClassifier()
+      .setFeatureCols(Array("x1", "x2")).setFeatureRanges(Array(1.0, 50.0, 0.0, 0.1))
+      .setNumLabels(l))
   }
+
+  /** One (variant, n_rules, accuracy, gm) row per variant `v` of `est(v)`,
+    * fitted on and scored on the multiplicity-weighted `gex` (column "w");
+    * the independent fits run concurrently (guide §2.6, graft.engine.Par). */
+  private def variantReports(gex: DataFrame, name: String, variants: Seq[Int])(
+      est: Int => ChiCSClassifier): DataFrame =
+    graft.engine.Par.all(variants.map { v => () =>
+      val model = est(v).setLabelCol("label").setWeightCol("w").fit(gex)
+      ChiMl.binaryConfusion(model.transform(gex), "label", "prediction", col("w"))
+        .select(lit(v.toLong).as(name) +:
+                lit(model.rules.length.toLong).as("n_rules") +: ChiMl.accuracyGm: _*)
+    }).reduce(_ unionByName _).orderBy(name)
 
   /** x215: WIDE-ANTECEDENT ABLATION — the estimator fitted at n = 2, 4 and
     * 6 features (prefixes of one 6-feature projection of lineitem), per
@@ -212,19 +212,8 @@ object ModelOps {
       .groupBy("x1", "x2", "x3", "x4", "x5", "x6", "label")
       .agg(count(lit(1)).as("w"))
       .materialized
-    // the three width-n fits are independent eager estimator fits off the
-    // one checkpointed aggregate — run concurrently (guide §2.6,
-    // graft.engine.Par); per-fit data/params unchanged, outputs identical
-    graft.engine.Par.all(Seq(2, 4, 6).map { n => () =>
-      val model = new ChiCSClassifier()
-        .setFeatureCols((1 to n).map(i => s"x$i").toArray).setLabelCol("label")
-        .setFeatureRanges(ranges.take(2 * n))
-        .setWeightCol("w")
-        .fit(gex)
-      ChiMl.binaryConfusion(model.transform(gex), "label", "prediction", col("w"))
-        .select(lit(n.toLong).as("n_features") +:
-                lit(model.rules.length.toLong).as("n_rules") +: ChiMl.accuracyGm: _*)
-    }).reduce(_ unionByName _).orderBy("n_features")
+    variantReports(gex, "n_features", Seq(2, 4, 6))(n => new ChiCSClassifier()
+      .setFeatureCols((1 to n).map(i => s"x$i").toArray).setFeatureRanges(ranges.take(2 * n)))
   }
 
   /** One (n_rules, confusion, accuracy, gm) row for a fitted model scored
@@ -437,14 +426,18 @@ object ModelOps {
     *
     * 100 TB: the corpus-scale work is ONE distinct-vector aggregate at
     * the (source, x1, x2, label) grain; everything after — the 18-row
-    * candidate grid × |sources| subtraction lattice, the per-model
-    * conflict resolution, the vector-grid scoring — is bounded grid work
-    * under partitioned (model, antecedent) windows. Adding a source costs
-    * one more grid slice, never another corpus pass. */
+    * candidate grid × |sources| subtraction lattice and the per-model
+    * conflict resolution under partitioned (model, antecedent) windows —
+    * is bounded grid work, and the vector-grid scoring is row-local against
+    * the per-model rule bases held on the driver (no window). Adding a
+    * source costs one more grid slice, never another corpus pass. */
   def x305(spark: SparkSession, dir: String): DataFrame = {
     val (gex, models, rb) = losoCore(spark, dir)
     x305Report(gex, models, rb)
   }
+
+  /** The x305 fuzzy grid: x1 = token count, x2 = repetition %. */
+  private val qualityParts = Array(TriPartition(10.0, 100.0), TriPartition(0.0, 100.0))
 
   /** x305's subtraction lattice up to the per-model rule bases: returns
     * (gex, models, rb) — rb carries one rule base per `lo` (every source
@@ -452,23 +445,20 @@ object ModelOps {
     * subtraction ≡ refit theorem against an independent estimator fit. */
   private[graft] def losoCore(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    import graft.engine.chi.ChiCore
-    import graft.engine.chi.ChiCore.TriPartition
-    val Q1 = TriPartition(10.0, 100.0)
-    val Q2 = TriPartition(0.0, 100.0)
+    val Array(q1, q2) = qualityParts
     // Subtraction arithmetic: Spark demotes (38,12) − (38,12) to (38,11)
     // (precision overflow → scale loss), and the downstream promotions then
     // DOUBLE-round the rw numerator — one rule's rw drifted 1e-8 from the
     // estimator's before this was pinned. Subtract at (25,12) — EXACT (the
     // sums carry ≤13 integer digits even at 10^12 docs: each term ≤ 1) —
-    // and cast back to (38,12) so the rw expression below goes through
-    // exactly the estimator's type promotions, making LOSO-by-subtraction
-    // rule-for-rule identical to refitting (Round13Spec pins it).
+    // and cast back to (38,12) so the shared tail's rw expression goes
+    // through exactly the estimator's type promotions, making LOSO-by-
+    // subtraction rule-for-rule identical to refitting (Round13Spec pins it).
     val dec0 = lit(0).cast(DecimalType(25, 12))
     val gex = qualityFeatures(spark, dir)
       .groupBy("source", "x1", "x2", "label").agg(count(lit(1)).as("m"))
-      .withColumn("a1", ChiCore.argmaxLabel(ChiCore.memberships(col("x1"), Q1)))
-      .withColumn("a2", ChiCore.argmaxLabel(ChiCore.memberships(col("x2"), Q2)))
+      .withColumn("a1", ChiCore.argmaxLabel(ChiCore.memberships(col("x1"), q1)))
+      .withColumn("a2", ChiCore.argmaxLabel(ChiCore.memberships(col("x2"), q2)))
       .materialized // the ONLY corpus-derived frame (5 consumers)
     // candidate antecedents + seeding sources: a candidate seeded only by
     // the left-out source is not generated by the LOSO fit at all.
@@ -482,17 +472,15 @@ object ModelOps {
         .agg(countDistinct(col("source")).as("n_seed_src"),
              max(col("source")).as("a_seed_src"))
         .materialized
-      val ants = seeds.select("ra1", "ra2", "rcls")
-      // exact per-(candidate, source) weight sums (cost-free base Chi)
-      val term = round(ChiCore.membershipAt(col("x1"), col("ra1"), Q1) *
-                       ChiCore.membershipAt(col("x2"), col("ra2"), Q2), 12)
-        .cast(DecimalType(18, 12)) * col("m").cast(DecimalType(19, 0))
-      val sums = gex.crossJoin(broadcast(ants))
-        .select(col("source"), col("ra1"), col("ra2"), col("rcls"),
-                col("label"), term.as("w"))
-        .groupBy("source", "ra1", "ra2", "rcls")
-        .agg(sum(when(col("label") === col("rcls"), col("w"))).as("s_match"),
-             sum(col("w")).as("s_all"))
+      // exact per-(candidate, source) weight sums (cost-free base Chi): the
+      // shared learner's sums over the global candidates, split by source
+      val sums = ChiCore.ruleWeights(
+          gex.withColumn("__ant", array(col("a1"), col("a2")))
+            .withColumnRenamed("label", "__cls").withColumnRenamed("m", "__m"),
+          Seq("x1", "x2"), qualityParts.toSeq, lit(1.0), by = Seq("source"))
+        .select(col("source"), col("__ant")(0).as("ra1"), col("__ant")(1).as("ra2"),
+                col("__cls").as("rcls"), col("w_match").as("s_match"),
+                col("w_all").as("s_all"))
         .materialized
       (seeds, sums)
     }, () =>
@@ -501,29 +489,19 @@ object ModelOps {
         .materialized)
     val tot = sums.groupBy("ra1", "ra2", "rcls")
       .agg(sum(col("s_match")).as("t_match"), sum(col("s_all")).as("t_all"))
-    val rb = tot.crossJoin(broadcast(models))
+    def minus(t: String, s: String): Column =
+      (col(t).cast(DecimalType(25, 12)) - coalesce(col(s).cast(DecimalType(25, 12)), dec0))
+        .cast(DecimalType(38, 12))
+    val lattice = tot.crossJoin(broadcast(models))
       .join(sums.withColumnRenamed("source", "lo"),
             Seq("lo", "ra1", "ra2", "rcls"), "left")
       .join(broadcast(seeds), Seq("ra1", "ra2", "rcls"))
       .filter(col("n_seed_src") > 1 || col("a_seed_src") =!= col("lo"))
-      .withColumn("w_match",
-        (col("t_match").cast(DecimalType(25, 12)) -
-          coalesce(col("s_match").cast(DecimalType(25, 12)), dec0))
-          .cast(DecimalType(38, 12)))
-      .withColumn("w_all",
-        (col("t_all").cast(DecimalType(25, 12)) -
-          coalesce(col("s_all").cast(DecimalType(25, 12)), dec0))
-          .cast(DecimalType(38, 12)))
-      .filter(col("w_all") > 0)
-      .withColumn("rw",
-        round(col("w_match") * 2 - col("w_all"), 6).cast(DoubleType) /
-          round(col("w_all"), 6).cast(DoubleType))
-      .filter(col("rw") > 0)
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("lo", "ra1", "ra2")
-          .orderBy(col("rw").desc, col("rcls"))))
-      .filter(col("rn") === 1)
-      .select(col("lo"), col("ra1"), col("ra2"), col("rcls"), col("rw"))
+      .select(col("lo"), col("ra1"), col("ra2"), col("rcls").as("__cls"),
+              minus("t_match", "s_match").as("w_match"),
+              minus("t_all", "s_all").as("w_all"))
+    val rb = ChiCore.resolveRules(lattice, Seq("lo", "ra1", "ra2"))
+      .withColumnRenamed("__cls", "rcls")
       .materialized // scoring + change-count + n_rules read it
     (gex, models, rb)
   }
@@ -531,10 +509,6 @@ object ModelOps {
   /** The x305 readout from the core frames. */
   private def x305Report(gex: DataFrame, models: DataFrame,
                          rb: DataFrame): DataFrame = {
-    import graft.engine.chi.ChiCore
-    import graft.engine.chi.ChiCore.TriPartition
-    val Q1 = TriPartition(10.0, 100.0)
-    val Q2 = TriPartition(0.0, 100.0)
     // per-model majority fallback, recomputed over the REMAINING data
     val clsMass = gex.groupBy("source", "label").agg(sum(col("m")).as("n"))
     val maj = clsMass.crossJoin(broadcast(models))
@@ -545,21 +519,17 @@ object ModelOps {
         Window.partitionBy("lo").orderBy(col("n").desc, col("label"))))
       .filter(col("rn") === 1)
       .select(col("lo"), col("label").as("maj"))
-    // score every model over the FULL corpus vector grid
+    // score every model over the FULL corpus vector grid against its rule
+    // base, held on the driver by model position (none ⇒ NULL ⇒ majority)
+    val pos = array_position(typedLit(models.collect().map(_.getString(0)).toSeq),
+                             col("lo")).cast(IntegerType)
     val vecs = gex.groupBy("x1", "x2", "label").agg(sum(col("m")).as("mm"))
-    val scoreCol = round(ChiCore.membershipAt(col("x1"), col("ra1"), Q1) *
-                         ChiCore.membershipAt(col("x2"), col("ra2"), Q2) *
-                         col("rw"), 12)
     val win = vecs.crossJoin(broadcast(models))
-      .join(broadcast(rb), Seq("lo"), "left")
-      .withColumn("score", coalesce(scoreCol, lit(-1.0)))
-      .withColumn("rn", row_number().over(
-        Window.partitionBy("lo", "x1", "x2", "label")
-          .orderBy(col("score").desc, col("rcls"))))
-      .filter(col("rn") === 1)
+      .withColumn("__win", ChiCore.winningRule(gex.sparkSession, ChiMl.held(rb, pos),
+        qualityParts, Seq(col("x1"), col("x2")), key = pos))
       .join(broadcast(maj), "lo")
       .select(col("lo"), col("label"),
-              when(col("score") > 0, col("rcls")).otherwise(col("maj"))
+              when(col("__win.score") > 0, col("__win.cls")).otherwise(col("maj"))
                 .as("pred"),
               col("mm"))
     val acc = win.groupBy("lo")

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, ListState, MapState, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues, Trigger, ValueState}
 import org.apache.spark.sql.types._
@@ -480,7 +481,9 @@ object StreamingOps {
     * so the streaming operators here run under it BY DEFAULT: a session
     * that sets `spark.sql.streaming.stateStore.providerClass` itself keeps
     * its own provider (StreamingSpec's HDFS-backed parity baseline does;
-    * identical results, asserted). */
+    * identical results, asserted), except that the transformWithState
+    * replays (x114 x134 x216 x240 x252) need this one: `runToTable` refuses
+    * them under any other session-set provider. */
   private[graft] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
@@ -506,14 +509,21 @@ object StreamingOps {
     * replay's rows alive for the life of the session. */
   private def runToTable(spark: SparkSession, streamed: DataFrame,
                          name: String, outputMode: String): DataFrame = {
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    // getOption answers Spark's default too; getAll holds explicit settings only
+    val setProvider = spark.conf.getAll.get(providerKey)
+    // checked on the streamed plan (no job runs): started, such a replay
+    // fails mid-query with STATE_STORE_MULTIPLE_COLUMN_FAMILIES
+    setProvider.filter(_ != RocksDbProvider).foreach { p =>
+      require(!streamed.queryExecution.logical.exists(_.isInstanceOf[TransformWithState]),
+        s"$name runs transformWithState, whose state needs column families: set " +
+        s"$providerKey to $RocksDbProvider or leave it unset (the session sets $p)")
+    }
     // streaming state stores are per shuffle partition; these replays carry
     // tiny keyed state, so a handful of partitions beats the batch default
     // (measured: 4 < 8 < 2 ≈ 32 on the sf0.1 replay; the value is fixed into
     // the query at start and restored for batch work after)
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // getOption answers Spark's default too; getAll holds explicit settings only
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val defaultProvider = !spark.conf.getAll.contains(providerKey)
     // SPARK_GRAFT_STREAM_PARTITIONS widens the replay at scale without
     // touching the batch default: at 100× the state shuffle itself dominates
     // and 4 partitions serialize it onto 4 of 32 cores (docs/SCALE_100x.md).
@@ -521,7 +531,7 @@ object StreamingOps {
     // pins that); only the cost moves.
     spark.conf.set("spark.sql.shuffle.partitions",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4"))
-    if (defaultProvider) spark.conf.set(providerKey, RocksDbProvider)
+    if (setProvider.isEmpty) spark.conf.set(providerKey, RocksDbProvider)
     try {
       val q = streamed.writeStream
         .format("memory").queryName(name)
@@ -539,7 +549,7 @@ object StreamingOps {
     } finally {
       spark.catalog.dropTempView(name)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
-      if (defaultProvider) spark.conf.unset(providerKey)
+      if (setProvider.isEmpty) spark.conf.unset(providerKey)
     }
   }
 

@@ -86,6 +86,48 @@ class ChiConventionSpec extends AnyFunSuite {
     assert(m(Seq(1, 1)) === ((0, 0.3)))
   }
 
+  test("winning-rule scorer: total tie order, zero-score winner, min t-norm, NULL skip, keyed bases") {
+    import graft.engine.chi.ChiCore.winningRule
+    // labels: x1 centers 0, 5, 10 (half-width 5); x2 centers 0, .5, 1 (.5)
+    val parts = Array(TriPartition(0.0, 10.0), TriPartition(0.0, 1.0))
+    def score(bases: Map[Int, Array[ChiRule]], rows: Seq[(Option[Double], Double, Int)],
+              tnormMin: Boolean = false): Seq[Option[(Seq[Int], Int, Double)]] =
+      rows.toDF("x1", "x2", "k")
+        .select(winningRule(spark, bases, parts, Seq(col("x1"), col("x2")), tnormMin,
+                            col("k")).as("w"))
+        .collect().toSeq.map(r => Option(r.getStruct(0)).map(w =>
+          (w.getSeq[Int](0), w.getInt(1), w.getDouble(2))))
+    // at x = (2.5, 0.5) every rule below scores 0.5·1·w = 0.2 once rounded to
+    // 12 dp (the 1e-13 weight excess is below the rounding): class 0 beats
+    // class 1, then antecedent (0,1) beats (1,1), whatever the array order
+    val tied = Array(ChiRule(Array(1, 1), 0, 0.4 + 1e-13), ChiRule(Array(0, 1), 1, 0.4),
+                     ChiRule(Array(0, 1), 0, 0.4), ChiRule(Array(1, 1), 1, 0.4))
+    for (rs <- Seq(tied, tied.reverse))
+      assert(score(Map(0 -> rs), Seq((Some(2.5), 0.5, 0))) === Seq(Some((Seq(0, 1), 0, 0.2))))
+    // no rule scores above 0 at x1 = 10: the scorer still returns the first
+    // rule of the total order, at score 0, while transform falls back to the
+    // majority class (1)
+    val far = Array(ChiRule(Array(1, 1), 1, 0.9), ChiRule(Array(0, 2), 0, 0.8))
+    assert(score(Map(0 -> far), Seq((Some(10.0), 1.0, 0))) === Seq(Some((Seq(0, 2), 0, 0.0))))
+    val model = new ChiCSModel("m", parts, Array(0, 1), Map(0 -> 1.0, 1 -> 1.0), far, 1)
+    model.set(model.featureCols, Array("x1", "x2")); model.set(model.predictionCol, "p")
+    assert(model.transform(Seq((10.0, 1.0)).toDF("x1", "x2")).select("p").head().getInt(0) === 1)
+    // x = (2, 0.35): A = (0,0) matches at (0.6, 0.3), D = (1,1) at (0.4, 0.7).
+    // Product: A 0.18, D 0.7·0.28 = 0.196 → D; minimum: A 0.3, D 0.7·0.4 = 0.28 → A
+    val a = ChiRule(Array(0, 0), 0, 1.0)
+    val d = ChiRule(Array(1, 1), 1, 0.7)
+    val at = Seq((Some(2.0), 0.35, 0))
+    assert(score(Map(0 -> Array(a, d)), at).map(_.map(_._2)) === Seq(Some(1)))
+    val Seq(Some((ant, cls, s))) = score(Map(0 -> Array(a, d)), at, tnormMin = true)
+    assert((ant, cls) === ((Seq(0, 0), 0)) && math.abs(s - 0.3) < 1e-12)
+    // a NULL x1 is skipped (factor 1): D scores μ2 = 0.7 times 0.7
+    val Seq(Some((_, nullCls, nullScore))) = score(Map(0 -> Array(a, d)), Seq((None, 0.35, 0)))
+    assert(nullCls === 1 && math.abs(nullScore - 0.49) < 1e-12)
+    // the integer key picks the rule base; a key with no base scores NULL
+    assert(score(Map(1 -> Array(a), 2 -> Array(d)), Seq(1, 2, 3).map(k => (Some(2.0), 0.35, k)))
+             .map(_.map(_._2)) === Seq(Some(0), Some(1), None))
+  }
+
   test("metric identities: GM and AUC from a fixed confusion matrix") {
     // tp=30, fn=10, tn=40, fp=20 → tpr=.75 tnr=!.666 gm=sqrt(.5) auc=(1+.75-1/3)/2
     val tpr = 30.0 / 40.0

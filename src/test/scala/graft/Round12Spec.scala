@@ -12,7 +12,10 @@ class Round12Spec extends AnyFunSuite {
     // the identity theorem: with one chunk, chunk-local weighting and
     // conflict resolution ARE the global computation, so max-RW fusion is
     // a no-op and the fused base must equal q41's (same 6dp output form)
-    val fused = graft.queries.ChiMl.mChunkFusedRb(spark, sfSmoke, 1)
+    import spark.implicits._
+    val fused = graft.queries.ChiMl.mChunkFusedRb(spark, sfSmoke, 1).toSeq
+      .map(r => (r.antecedent(0), r.antecedent(1), r.cls, r.weight))
+      .toDF("ra1", "ra2", "rcls", "rw")
       .select(col("ra1").cast("long"), col("ra2").cast("long"),
               col("rcls").cast("long"), round(col("rw"), 6))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

@@ -44,7 +44,9 @@ class Round14Spec extends AnyFunSuite {
       (1, 1.0, 0.0, 0, 0, 1, 6L), (1, 1.0, 0.0, 0, 0, 0, 4L),
       (2, 1.0, 0.0, 0, 0, 1, 2L), (2, 1.0, 0.0, 0, 0, 0, 8L)
     ).toDF("chunk", "x1", "x2", "a1", "a2", "cls", "mcnt")
-    val maxRb = graft.queries.ChiMl.mChunkFusedRbFrom(gex).collect()
+    val maxRb = graft.queries.ChiMl.mChunkMaxFused(gex).toSeq
+      .map(r => (r.antecedent(0), r.antecedent(1), r.cls, r.weight))
+      .toDF("ra1", "ra2", "rcls", "rw").collect()
     val aveRb = graft.queries.ChiMl.mChunkAveFusedRbFrom(gex).collect()
     assert(maxRb.length === 1 && aveRb.length === 1)
     assert(maxRb.head.getAs[Int]("rcls") === 1)

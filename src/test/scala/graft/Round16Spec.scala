@@ -64,6 +64,19 @@ class Round16Spec extends AnyFunSuite {
     assert(sibling.future.value.get.isFailure, "the sibling's job must be cancelled")
   }
 
+  test("Par thunks run under the caller's current job group, not a pool thread's stale one") {
+    val sc = spark.sparkContext
+    def groupSeenUnder(g: String): Seq[String] = {
+      sc.setJobGroup(g, s"desc-$g")
+      try graft.engine.Par.all(Seq(() => sc.getLocalProperty("spark.jobGroup.id"),
+                                   () => sc.getLocalProperty("spark.job.description")))
+      finally sc.clearJobGroup()
+    }
+    assert(groupSeenUnder("g1") === Seq("g1", "desc-g1"))
+    // the same (cached) pool threads serve the second call
+    assert(groupSeenUnder("g2") === Seq("g2", "desc-g2"))
+  }
+
   // ---------------------------------------------------------------- Mat
 
   test("Mat.materialize preserves rows and schema (local mode)") {

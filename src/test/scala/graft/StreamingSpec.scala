@@ -288,6 +288,23 @@ class StreamingSpec extends AnyFunSuite {
     }
   }
 
+  test("a transformWithState replay under a session-set HDFS provider is refused before it starts") {
+    import graft.streaming.StreamingOps
+    val providerKey = "spark.sql.streaming.stateStore.providerClass"
+    val prevProvider = spark.conf.getAll.get(providerKey)
+    spark.conf.set(providerKey,
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
+    try {
+      val e = intercept[IllegalArgumentException](StreamingOps.x114(spark, sfSmoke))
+      assert(e.getMessage.contains("x114_sink") &&
+             e.getMessage.contains(StreamingOps.RocksDbProvider), e.getMessage)
+      assert(spark.streams.active.isEmpty, "no streaming query may start")
+    } finally prevProvider match {
+      case Some(p) => spark.conf.set(providerKey, p)
+      case None => spark.conf.unset(providerKey)
+    }
+  }
+
   test("a replay leaves no memory-sink view behind, and its frame still collects") {
     def tempViews() = spark.catalog.listTables().collect().count(_.isTemporary)
     val before = tempViews()
