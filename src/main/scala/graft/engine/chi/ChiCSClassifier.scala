@@ -100,9 +100,10 @@ private[chi] trait ChiCSParams extends Params {
   * 100 TB posture of `fit`:
   *  - one pass for ranges (if not declared), one tiny agg for class counts;
   *  - rule learning is [[ChiCore.learnRules]], the learner every Chi key
-  *    shares: each example explodes only to its ≤ 2ⁿ μ>0 antecedents, one
-  *    shuffle keyed on (antecedent, class); the result (≤ Lⁿ·|C| rules) is
-  *    collected and broadcast — the only driver-side materialization.
+  *    shares: each example explodes only to its ≤ 2ⁿ μ>0 antecedents, and
+  *    one shuffle, keyed on the antecedent, sums every class and resolves
+  *    the conflicts in place; the result (≤ Lⁿ·|C| rules) is collected and
+  *    broadcast — the only driver-side materialization.
   */
 class ChiCSClassifier(override val uid: String)
     extends Estimator[ChiCSModel] with ChiCSParams with DefaultParamsWritable {
@@ -234,7 +235,7 @@ class ChiCSClassifier(override val uid: String)
     // term is a pure function of (features, cls) and DECIMAL × count is
     // exact, so the sums are digit-identical to the per-row formulation while
     // the fan-out shrinks by the duplication factor. Cached for the duration
-    // of fit — class counts, candidates, and weight sums all derive from it,
+    // of fit — class counts, the seeds and the weight terms all derive from it,
     // turning three full input scans into one.
     // A NULL/non-positive weight would be silently SWALLOWED by sum() and
     // undercount its vector, and a FRACTIONAL weight would be silently
@@ -274,13 +275,7 @@ class ChiCSClassifier(override val uid: String)
     val classes = classCounts.map(_._1)
     val costs: Map[Int, Double] =
       if ($(classCosts).nonEmpty) classes.zip($(classCosts)).toMap
-      else {
-        val minN = classCounts.map(_._2).min
-        val maxN = classCounts.map(_._2).max
-        classCounts.map { case (c, cnt) =>
-          c -> (if (cnt == minN && minN != maxN) maxN.toDouble / cnt else 1.0)
-        }.toMap
-      }
+      else ChiCore.imbalanceCosts(classCounts.toSeq)
     // DECIMAL(18,12) weight terms carry 6 integer digits; a bigger cost would
     // null out in the cast and silently corrupt the sums — reject it here
     require(costs.values.forall(c => c >= 0 && c < 1e6),
@@ -293,7 +288,8 @@ class ChiCSClassifier(override val uid: String)
     // rule base (≤ Lⁿ·|C| rules) is collected to the driver.
     val rules =
       try ChiCSModel.toRules(ChiCore.learnRules(compressed, feats.toSeq, parts.toSeq,
-                                                costExpr, nominal = nomSet).collect())
+                                                costExpr, classes.toSeq,
+                                                nominal = nomSet).collect())
       finally compressed.unpersist()
 
     val majority = classCounts.maxBy { case (c, cnt) => (cnt, -c) }._1
@@ -334,19 +330,15 @@ class ChiCSModel private[graft] (
   override def transformSchema(schema: StructType): StructType =
     schema.add($(predictionCol), IntegerType)
 
-  /** Winning rule by [[ChiCore.winningRule]], the scorer every Chi key
-    * shares (a NULL feature is skipped, as in fit); a row whose winner
-    * scores 0 gets the majority class. */
+  /** Winning class by [[ChiCore.winningClass]], the class-only entry of
+    * the scorer every Chi key shares (a NULL feature is skipped, as in
+    * fit); a row whose winner scores 0 gets the majority class. */
   override def transform(ds: Dataset[_]): DataFrame = {
     val xs = $(featureCols).toSeq.zipWithIndex.map { case (f, i) =>
       ChiCSModel.encode(f, if (i < nominalDicts.length) nominalDicts(i) else Array.empty)
     }
-    ds.toDF
-      .withColumn("__win", ChiCore.winningRule(ds.sparkSession, Map(0 -> rules),
-                                               partitions, xs))
-      .withColumn($(predictionCol),
-        coalesce(when(col("__win.score") > 0, col("__win.cls")), lit(majorityClass)))
-      .drop("__win")
+    ds.toDF.withColumn($(predictionCol),
+      ChiCore.winningClass(ds.sparkSession, Map(0 -> rules), partitions, xs, majorityClass))
   }
 
   override def write: MLWriter = new ChiCSModel.Writer(this)

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.engine.Mat.MatOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.{Window, WindowSpec}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.engine.Tables
@@ -19,13 +19,15 @@ import graft.engine.chi.ChiCore.TriPartition
   * Learning and scoring are the estimator's ([[ChiCore.learnRules]],
   * [[ChiCore.winningRule]]), adapted here to the two-feature frames.
   *
-  * 100 TB posture: the candidate antecedent set is bounded by Lⁿ·|C| = 18
-  * rows, so it is always broadcast; the only full-data shuffle is the final
-  * (antecedent, class) aggregation — the reference's single-reducer merge
-  * becomes a partial+final agg. Per-term weights are rounded to 12dp and
-  * summed as DECIMAL(38,12): exact, order-independent, shuffle-safe
-  * (SURVEY.md §7.4.2). The resolved rule base is collected to the driver
-  * and scoring is a row-local projection over it: no window, no exchange.
+  * 100 TB posture: the class counts (≤ |C| rows per cost key) are collected
+  * and priced on the driver; the learner's only shuffle is the
+  * antecedent-keyed aggregation, which sums every class and seeds the
+  * candidates in one pass and resolves conflicts on its own partitioning —
+  * the reference's single-reducer merge becomes a partial+final agg.
+  * Per-term weights are rounded to 12dp and summed as DECIMAL(38,12):
+  * exact, order-independent, shuffle-safe (SURVEY.md §7.4.2). The resolved
+  * rule base is collected to the driver and scoring is a row-local
+  * projection over it: no window, no exchange.
   */
 object ChiMl {
   private[queries] val P1 = TriPartition(1.0, 50.0)  // l_quantity
@@ -52,11 +54,6 @@ object ChiMl {
     if (tnormMin) least(m1, m2) else m1 * m2
   }
 
-  /** R3 cost of a class with count `n`: max/min class count for the
-    * minority class, 1 for the others, over the classes of `w`. */
-  private def classCost(n: Column, w: WindowSpec): Column =
-    when(n === min(n).over(w), max(n).over(w) * lit(1.0) / n).otherwise(lit(1.0))
-
   /** The distinct-feature-vector training aggregate every fit consumes:
     * (key…, x1, x2, a1, a2, cls, mcnt), each `key` a (name, column) of the
     * example. Identical examples weigh identically, so the fit works
@@ -72,37 +69,45 @@ object ChiMl {
   /** The two-feature adapter onto the shared CS-PCF learner
     * ([[ChiCore.learnRules]], R3–R7): one rule base per distinct `rbKey`
     * value of `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), with the
-    * cost vector per distinct `costKey` value, computed in the plan. Global
-    * keys pass Nil for both, the m-chunk mappers (x281/x308) key the rule
-    * base by `chunk` but keep the cost vector global, cross-validation keys
-    * both by `model`. With costSensitive=false every example weighs 1 (the
-    * BASE Chi-FRBCS, plain PCF). Returns (rbKey…, ra1, ra2, rcls, rw). The
-    * cost vector, the candidates and the weight terms all derive from
-    * `gex`, so an unmaterialized aggregate's one exchange serves all three. */
+    * cost vector per distinct `costKey` value ([[costCase]]). Global keys
+    * pass Nil for both, the m-chunk mappers (x281/x308) key the rule base
+    * by `chunk` but keep the cost vector global, cross-validation keys both
+    * by `model`. With costSensitive=false every example weighs 1 (the BASE
+    * Chi-FRBCS, plain PCF). Returns (rbKey…, ra1, ra2, rcls, rw). The class
+    * counts, the learner's terms and its seeds each read `gex`, and an
+    * unmaterialized frame is computed once per read: a `gex` that scans the
+    * corpus is passed materialized. */
   private[queries] def ruleBaseFrom(gex: DataFrame,
                                     costSensitive: Boolean,
                                     tnormMin: Boolean,
                                     rbKey: Seq[String] = Nil,
                                     costKey: Seq[String] = Nil): DataFrame = {
-    val (weighted, cost) =
-      if (!costSensitive) (gex, lit(1.0))
-      else {
-        val costs = gex.groupBy((costKey :+ "cls").map(col): _*)
-          .agg(sum(col("mcnt")).as("n"))
-          .withColumn("c", classCost(col("n"), Window.partitionBy(costKey.map(col): _*)))
-          .groupBy(costKey.map(col): _*)
-          .agg(max(when(col("cls") === 1, col("c"))).as("c1"),
-               max(when(col("cls") === 0, col("c"))).as("c0"))
-        (if (costKey.isEmpty) gex.crossJoin(broadcast(costs))
-         else gex.join(broadcast(costs), costKey),
-         when(col("__cls") === 1, col("c1")).otherwise(col("c0")))
-      }
-    val agg = weighted
+    val cost = if (costSensitive) costCase(gex, costKey) else lit(1.0)
+    val agg = gex
       .withColumn("__ant", array(col("a1"), col("a2")))
       .withColumnRenamed("cls", "__cls").withColumnRenamed("mcnt", "__m")
-    ChiCore.learnRules(agg, Seq("x1", "x2"), Seq(P1, P2), cost, tnormMin, key = rbKey)
+    ChiCore.learnRules(agg, Seq("x1", "x2"), Seq(P1, P2), cost, Seq(0, 1), tnormMin,
+                       key = rbKey)
       .select(rbKey.map(col) ++ Seq(col("__ant")(0).as("ra1"), col("__ant")(1).as("ra2"),
                                     col("__cls").as("rcls"), col("rw")): _*)
+  }
+
+  /** The R3 cost vector of `gex` per `costKey` value as a literal CASE on
+    * the learner's (costKey…, __cls): the class counts are collected once
+    * and priced by [[ChiCore.imbalanceCosts]], the estimator's own formula.
+    * Branches are emitted in key and class order, so equal counts give the
+    * same expression (and the same generated code) on every call. */
+  private def costCase(gex: DataFrame, costKey: Seq[String]): Column = {
+    val k = costKey.size
+    gex.groupBy((costKey :+ "cls").map(col): _*).agg(sum(col("mcnt"))).collect()
+      .groupBy(r => (0 until k).map(r.get)).toSeq.sortBy(_._1.mkString(","))
+      .foldLeft(when(lit(false), 0.0)) { case (acc, (kv, rows)) =>
+        val at = costKey.zip(kv).map { case (c, v) => col(c) === lit(v) }
+        val costs = ChiCore.imbalanceCosts(rows.toSeq.map(r => r.getInt(k) -> r.getLong(k + 1)))
+        costs.toSeq.sorted.foldLeft(acc) { case (a, (c, v)) =>
+          a.when((at :+ (col("__cls") === c)).reduce(_ && _), v)
+        }
+      }.otherwise(1.0)
   }
 
   /** A (…, ra1, ra2, rcls, rw) rule-base frame collected to the driver,
@@ -183,13 +188,15 @@ object ChiMl {
           (col("tp") + col("tn") + col("fp") + col("fn")), 0).cast(LongType).as("acc_ppm"),
     round(sqrt(col("tpr") * col("tnr")) * 1000000, 0).cast(LongType).as("gm_ppm"))
 
-  /** q38: class counts + cost vector (R3). */
+  /** q38: class counts + cost vector (R3), priced on the driver by the
+    * learner's own [[ChiCore.imbalanceCosts]]. */
   def q38(spark: SparkSession, dir: String): DataFrame = {
-    labeled(spark, dir).groupBy("cls").agg(count(lit(1)).as("n"))
-      .select(col("cls").cast(LongType).as("cls"), col("n"),
-              round(classCost(col("n"), Window.partitionBy()).cast(DoubleType), 6)
-                .as("cost"))
-      .orderBy("cls")
+    import spark.implicits._
+    val counts = labeled(spark, dir).groupBy("cls").agg(count(lit(1))).collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1).toSeq
+    val costs = ChiCore.imbalanceCosts(counts)
+    counts.map { case (c, n) => (c.toLong, n, costs(c)) }.toDF("cls", "n", "cost")
+      .select(col("cls"), col("n"), round(col("cost"), 6).as("cost"))
   }
 
   /** q39: raw 3-label membership values of the two attributes (R2). */
@@ -228,7 +235,8 @@ object ChiMl {
       .orderBy("actual", "predicted")
 
   def q41(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir), costSensitive = true, tnormMin = false))
+    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir).materialized, costSensitive = true,
+                             tnormMin = false))
 
   /** q42: winning-rule classification → confusion matrix (R9/R10). */
   def q42(spark: SparkSession, dir: String): DataFrame =
@@ -238,7 +246,8 @@ object ChiMl {
     * with unit costs. Same plan shape; the learned weights differ wherever
     * the cost vector tipped a conflict toward the minority class. */
   def x51(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir), costSensitive = false, tnormMin = false))
+    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir).materialized, costSensitive = false,
+                             tnormMin = false))
 
   /** x52: base-variant confusion matrix — q42 without cost weighting; read
     * against q42 it quantifies what cost-sensitivity buys on the minority
@@ -463,10 +472,12 @@ object ChiMl {
     * partial rules are fused on the driver and scoring is row-local
     * against the fused base (no window). The corpus is
     * scanned ONCE for all three m values (round 13): the FINEST (m = 16)
-    * chunk aggregate is checkpointed and the coarser legs re-chunk it by
-    * `chunk % m` — exact because every declared m divides 16, so
-    * (k mod 16) mod m ≡ k mod m, and summing the finer multiplicities is
-    * the same partial+final aggregation the direct build runs. */
+    * chunk aggregate is checkpointed and the coarser legs read it with
+    * `chunk % m` in place — exact because every declared m divides 16, so
+    * (k mod 16) mod m ≡ k mod m, and no re-aggregation is needed: each
+    * weight term is rounded before its multiplicity factor and DECIMAL ×
+    * count is distributive, so the finer multiplicities give the same
+    * weight sums, class counts and scoring grid as their merged rows. */
   def x281(spark: SparkSession, dir: String): DataFrame = {
     val gex16 = mChunkGex(spark, dir, 16).materialized
     // the three per-m reports each run an eager bounded-grid fuse off the
@@ -513,10 +524,7 @@ object ChiMl {
     * (k mod 16) mod m = k mod m when m divides 16. */
   private def rechunk(gex16: DataFrame, m: Int): DataFrame = {
     require(16 % m == 0, s"x281 re-chunking needs m | 16, got $m")
-    if (m == 16) gex16
-    else gex16.withColumn("chunk", col("chunk") % m)
-      .groupBy("chunk", "x1", "x2", "a1", "a2", "cls")
-      .agg(sum(col("mcnt")).as("mcnt"))
+    gex16.withColumn("chunk", col("chunk") % m)
   }
 
   /** The fused rule base of the m-chunk scheme (x281's core; also the
@@ -608,8 +616,8 @@ object ChiMl {
     *
     * 100 TB: the corpus is scanned ONCE — both t-norm fits, the scoring
     * grain and the majority class derive from one checkpointed
-    * distinct-vector aggregate (the q41 broadcast-candidate shape works on
-    * that grid); the winner FRM scores row-locally against the driver-held
+    * distinct-vector aggregate (the q41 one-shuffle learner works on that
+    * grid); the winner FRM scores row-locally against the driver-held
     * rule base and the additive FRM sums the grid-bounded (≤ grid·|RB|
     * rows) per-rule scores, so the whole 4-cell ablation costs one shuffle
     * over the data plus grid-sized work. */

@@ -91,8 +91,8 @@ object ModelOps {
     * pins the arithmetic; this pins the engine twin against DuckDB's
     * per-class cost-joined restatement).
     *
-    * 100 TB: rule space ≤ Lⁿ·|C| = 27 candidates, still broadcast;
-    * everything else is the q38–q42 chain. */
+    * 100 TB: rule space ≤ Lⁿ·|C| = 27 candidates, seeded in the learner's
+    * one shuffle; everything else is the q38–q42 chain. */
   def x207(spark: SparkSession, dir: String): DataFrame = {
     val train = Tables.lineitem(spark, dir).select(
       col("l_quantity").as("x1"), col("l_discount").as("x2"),
@@ -131,7 +131,7 @@ object ModelOps {
     * 100 TB: the corpus is scanned ONCE for both granularities (the x215
     * single-gex device through the estimator's weightCol); each fit then
     * works the bounded distinct-vector grid (rule space ≤ Lⁿ·|C| — 18 vs
-    * 50 candidates, both broadcast); scoring is the stateless projection
+    * 50 candidates, seeded in the learner's one shuffle); scoring is the stateless projection
     * over the same grid with multiplicity-weighted confusion sums; the
     * union is 2 rows. */
   def x206(spark: SparkSession, dir: String): DataFrame = {
@@ -248,7 +248,7 @@ object ModelOps {
     * nominal attribute, all in one agg); encoding is an in-map
     * array_position against a broadcast literal; nominal attributes add NO
     * fan-out to the neighbor explosion (exactly one nonzero label). Rule
-    * space 5·3·2 = 30 candidates, broadcast. */
+    * space 5·3·2 = 30 candidates, seeded in the learner's one shuffle. */
   def x260(spark: SparkSession, dir: String): DataFrame = {
     val train = Tables.orders(spark, dir).select(
       col("o_totalprice").as("x1"),
@@ -472,12 +472,13 @@ object ModelOps {
         .agg(countDistinct(col("source")).as("n_seed_src"),
              max(col("source")).as("a_seed_src"))
         .materialized
-      // exact per-(candidate, source) weight sums (cost-free base Chi): the
-      // shared learner's sums over the global candidates, split by source
+      // exact per-(antecedent, class, source) weight sums (cost-free base
+      // Chi): the shared learner keyed by source; the seeds join below
+      // keeps the global candidates, whichever source seeded them
       val sums = ChiCore.ruleWeights(
           gex.withColumn("__ant", array(col("a1"), col("a2")))
             .withColumnRenamed("label", "__cls").withColumnRenamed("m", "__m"),
-          Seq("x1", "x2"), qualityParts.toSeq, lit(1.0), by = Seq("source"))
+          Seq("x1", "x2"), qualityParts.toSeq, lit(1.0), Seq(0, 1), key = Seq("source"))
         .select(col("source"), col("__ant")(0).as("ra1"), col("__ant")(1).as("ra2"),
                 col("__cls").as("rcls"), col("w_match").as("s_match"),
                 col("w_all").as("s_all"))

@@ -128,6 +128,68 @@ class ChiConventionSpec extends AnyFunSuite {
              .map(_.map(_._2)) === Seq(Some(0), Some(1), None))
   }
 
+  test("class-only scoring: transform is the winning-rule struct path plus the majority policy") {
+    import graft.engine.chi.ChiCore.winningRule
+    // labels: x1 centers 0, 5, 10 (half-width 5); x2 centers 0, .5, 1 (.5)
+    val parts = Array(TriPartition(0.0, 10.0), TriPartition(0.0, 1.0))
+    val cases: Seq[(Array[ChiRule], Int, Seq[(Option[Double], Double)], Seq[Int])] = Seq(
+      // near-tie at (2.5, 0.5): class 1 leads the raw scores by 4e-13, which
+      // 12-dp rounding erases, so the tie order picks class 0
+      (Array(ChiRule(Array(1, 1), 1, 0.4 + 8e-13), ChiRule(Array(0, 1), 0, 0.4)), 1,
+       Seq((Some(2.5), 0.5)), Seq(0)),
+      // a lone raw winner of 4e-13 rounds to 0 (majority), 7e-13 to 1e-12
+      (Array(ChiRule(Array(1, 1), 1, 4e-13)), 0, Seq((Some(5.0), 0.5)), Seq(0)),
+      (Array(ChiRule(Array(1, 1), 1, 7e-13)), 0, Seq((Some(5.0), 0.5)), Seq(1)),
+      // a NULL x1 is skipped: (1,1) scores 0.7·0.7 against (0,0)'s 0.3;
+      // at (10, 1) neither rule matches
+      (Array(ChiRule(Array(0, 0), 0, 1.0), ChiRule(Array(1, 1), 1, 0.7)), 0,
+       Seq((None, 0.35), (Some(10.0), 1.0)), Seq(1, 0)),
+      (Array.empty[ChiRule], 1, Seq((Some(5.0), 0.5)), Seq(1)))
+    for ((rules, majority, rows, want) <- cases) {
+      val model = new ChiCSModel("m", parts, Array(0, 1), Map(0 -> 1.0, 1 -> 1.0), rules, majority)
+      model.set(model.featureCols, Array("x1", "x2")); model.set(model.predictionCol, "p")
+      val df = rows.toDF("x1", "x2")
+      val got = model.transform(df).select("p").collect().map(_.getInt(0)).toSeq
+      val struct = df
+        .withColumn("w", winningRule(spark, Map(0 -> rules), parts, Seq(col("x1"), col("x2"))))
+        .select(coalesce(when(col("w.score") > 0, col("w.cls")), lit(majority)))
+        .collect().map(_.getInt(0)).toSeq
+      assert(got === want)
+      assert(got === struct)
+    }
+  }
+
+  test("learner seeds: candidates come from each fully observed example at its own antecedent") {
+    // x: declared [0, 10], labels 0/1/2 centred 0, 5, 10 (half-width 5);
+    // c: nominal, codes a = 0, b = 1; three classes at unit cost.
+    val rows = Seq[(Option[Double], Option[String], Int)](
+      (Some(1.0), Some("a"), 0),  // (0,a) 0.8, (1,a) 0.2; seeds (0,a,0)
+      (Some(3.0), Some("a"), 2),  // ×3: (0,a) 0.4, (1,a) 0.6 each; seeds (1,a,2)
+      (Some(3.0), Some("a"), 2),
+      (Some(3.0), Some("a"), 2),
+      (Some(25.0), Some("a"), 2), // outside [0, 10]: μ = 0 everywhere, argmax
+                                  // label 0, no weight; seeds (0,a,2)
+      (None, Some("b"), 1),       // NULL x: 1.0 at (0,b), (1,b), (2,b); no seed
+      (Some(6.0), Some("b"), 1),  // (1,b) 0.8, (2,b) 0.2; seeds (1,b,1)
+      (Some(9.0), Some("b"), 0),  // (1,b) 0.2, (2,b) 0.8; seeds (2,b,0)
+      (Some(5.0), None, 0))       // NULL c: 1.0 at (1,a), (1,b); no seed
+    val model = new ChiCSClassifier()
+      .setFeatureCols(Array("x", "c")).setLabelCol("label")
+      .setNominalCols(Array("c")).setFeatureRanges(Array(0.0, 10.0, 0.0, 0.0))
+      .setClassCosts(Array(1.0, 1.0, 1.0))
+      .fit(rows.toDF("x", "c", "label"))
+    // (0,a): class 2 holds 1.2 of 2.0, rw = (2.4 − 2.0)/2.0 = 0.2; its only
+    //        seed is the out-of-range example, and class 0's rw is < 0.
+    // (1,a): class 2 holds 1.8 of 3.0 (the NULL-c row adds 1.0 to class 0),
+    //        rw = 0.2.
+    // (1,b): class 1 holds 1.8 of 3.0, rw = 0.2.
+    // (2,b): the seeded class 0 holds 0.8 of 2.0 (the NULL-x row adds 1.0 to
+    //        the unseeded class 1), rw < 0: no rule. (0,b): no seed, no rule.
+    val got = model.rules.map(r => (r.antecedent.toSeq, r.cls, r.weight)).toSeq
+    assert(got.map(r => (r._1, r._2)) === Seq((Seq(0, 0), 2), (Seq(1, 0), 2), (Seq(1, 1), 1)))
+    got.foreach { case (ant, _, w) => assert(math.abs(w - 0.2) < 1e-12, s"rw of $ant: $w") }
+  }
+
   test("metric identities: GM and AUC from a fixed confusion matrix") {
     // tp=30, fn=10, tn=40, fp=20 → tpr=.75 tnr=!.666 gm=sqrt(.5) auc=(1+.75-1/3)/2
     val tpr = 30.0 / 40.0

@@ -780,4 +780,28 @@ class PlanSpec extends AnyFunSuite {
     assert(scans.isEmpty,
       "x314's returned plan must not re-scan the corpus (bounded driver state)")
   }
+
+  test("ChiCore.learnRules: one shuffle learns and resolves a rule base — no broadcast, no nested-loop join") {
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
+    import org.apache.spark.sql.functions.lit
+    import graft.engine.chi.ChiCore
+    import graft.engine.chi.ChiCore.TriPartition
+    import spark.implicits._
+    val agg = Seq((1.0, 0.2, Seq(0, 0), 0, 3L), (6.0, 0.7, Seq(1, 1), 1, 2L),
+                  (9.0, 0.9, Seq(2, 2), 0, 1L), (4.0, 0.5, Seq(1, 1), 0, 1L))
+      .toDF("x1", "x2", "__ant", "__cls", "__m")
+    val rules = ChiCore.learnRules(agg, Seq("x1", "x2"),
+      Seq(TriPartition(0.0, 10.0), TriPartition(0.0, 1.0)), lit(1.0), Seq(0, 1))
+    assert(rules.collect().nonEmpty)
+    val nodes = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(rules.queryExecution.executedPlan) { case p => p }
+    val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
+    assert(shuffles == 1, s"expected one shuffle, got $shuffles:\n" +
+      rules.queryExecution.executedPlan)
+    assert(!nodes.exists(n => n.isInstanceOf[BroadcastExchangeExec] ||
+                              n.isInstanceOf[BroadcastHashJoinExec] ||
+                              n.isInstanceOf[BroadcastNestedLoopJoinExec]),
+      rules.queryExecution.executedPlan.toString)
+  }
 }
