@@ -1,8 +1,12 @@
 package graft.engine
 
+import java.io.FileNotFoundException
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Schema-checked loaders for the harness parquet tables.
   *
@@ -11,10 +15,63 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * parquet scans must stay bare `FileSourceScanExec`s so Catalyst can push
   * filters and prune columns into the scan — at 100 TB the scan is the
   * dominant cost and pushdown is the whole ballgame.
+  *
+  * Each table's schema is inferred once per JVM. A bare
+  * `spark.read.parquet(path)` launches a one-task schema-merge job
+  * (`ParquetUtils.inferSchema`) on every call, even for one file with
+  * `mergeSchema` off — about 80 ms a call before the operator's own work.
+  * The loaders cache the inferred schema and read every later call with
+  * `spark.read.schema(cached).parquet(path)`, which launches no job and
+  * opens no footer; the scan stays the same bare `FileSourceScanExec`
+  * (Spark makes a file source's data schema nullable either way).
+  *
+  * The cache can never serve a stale schema. An entry is keyed on the path
+  * and the session's explicitly set parquet confs (`spark.sql.parquet.*`,
+  * `spark.sql.legacy.parquet.*`, `spark.sql.caseSensitive`: `nanosAsLong`
+  * and `binaryAsString` change the inferred types, and streaming replays run
+  * on cloned sessions), and it is used only while the files are unchanged:
+  * the (path, length, mtime) of the file, or of each entry of a directory
+  * table's non-recursive listing, read without a Spark job. Overwriting a
+  * table in place changes that status, and the next read infers again.
   */
 object Tables {
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type Status = Seq[(String, Long, Long)]
+  private val schemas = new ConcurrentHashMap[(String, Map[String, String]), (Status, StructType)]()
+
+  private def inferenceConf(key: String): Boolean =
+    key.startsWith("spark.sql.parquet.") || key.startsWith("spark.sql.legacy.parquet.") ||
+      key == "spark.sql.caseSensitive"
+
+  /** (path, length, mtime) of the file, or of each entry of the directory;
+    * empty when the path does not exist. */
+  private def status(spark: SparkSession, path: String): Status = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val root = fs.getFileStatus(p)
+      val entries = if (root.isDirectory) fs.listStatus(p).toSeq else Seq(root)
+      entries.map(s => (s.getPath.toString, s.getLen, s.getModificationTime)).sorted
+    } catch { case _: FileNotFoundException => Nil }
+  }
+
+  /** The parquet file or directory at `path`, whose status is `files`, read
+    * with its cached schema. A missing path (or an empty directory) keeps no
+    * entry and fails as a bare read does. */
+  private def read(spark: SparkSession, path: String, files: Status): DataFrame = {
+    if (files.isEmpty) return spark.read.parquet(path)
+    val key = (path, spark.conf.getAll.filter { case (k, _) => inferenceConf(k) })
+    val schema = Option(schemas.get(key)).collect { case (`files`, s) => s }.getOrElse {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(key, (files, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    read(spark, path, status(spark, path))
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame     = t(spark, dir, "nation")
@@ -36,16 +93,31 @@ object Tables {
     *     pinned to UTC in [[Sessions]], so NTZ→instant is the identity).
     *   - TIMESTAMP(MICROS, UTC): already TimestampType; pass through.
     * Downstream queries always see an ordinary µs TimestampType column. */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = t(spark, dir, "events")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    normalizeTs(t(spark, dir, "events"))
+
+  /** The [[events]] `ts` normalization, for a frame (batch or stream) read
+    * with the events file's own schema. */
+  def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
       case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
   def documents(spark: SparkSession, dir: String): DataFrame  = t(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = t(spark, dir, "embeddings")
+  /** `<dir>/media.parquet`, if the data dir ships one (the harness dirs do
+    * not; [[graft.queries.Multimodal.mediaTable]] then derives the table). */
+  def media(spark: SparkSession, dir: String): Option[DataFrame] = {
+    val path = s"$dir/media.parquet"
+    val files = status(spark, path)
+    if (files.isEmpty) None else Some(read(spark, path, files))
+  }
+
+  /** The file schema of `<dir>/<table>.parquet`, before any normalization —
+    * what a stream replay of the table declares to `readStream`. */
+  def fileSchema(spark: SparkSession, dir: String, table: String): StructType =
+    t(spark, dir, table).schema
 
   /** Round-robin rebalance to one partition per core, for placing in front
     * of stages whose PER-ROW compute dwarfs a row's shuffle cost (interpreted

@@ -16,7 +16,7 @@ object KeelDemo {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
 
     // derive a labeled dataset from lineitem (same task as q38–q43)
-    val df = spark.read.parquet(s"$sfDir/lineitem.parquet").select(
+    val df = graft.engine.Tables.lineitem(spark, sfDir).select(
       col("l_quantity").as("qty"), col("l_discount").as("disc"),
       when(col("l_extendedprice") > 95000, "pos").otherwise("neg").as("cls"))
 

@@ -61,20 +61,19 @@ object MultimodalOps {
     * behavior byte-for-byte. */
   def mediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    val real = new org.apache.hadoop.fs.Path(s"$dir/media.parquet")
-    val fs = real.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(real))
-      return spark.read.parquet(real.toString)
-        .select(col("doc_id").cast(LongType), col("format"),
-                col("n_bytes").cast(LongType), col("content"))
-        .as[MediaRow]
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-              element_at(array(lit("jpeg"), lit("png"), lit("wav"), lit("mp4")),
-                         (col("doc_id") % 4 + 1).cast(IntegerType)).as("format"),
-              octet_length(col("text")).cast(LongType).as("n_bytes"),
-              encode(col("text"), "utf-8").cast(BinaryType).as("content"))
-      .as[MediaRow]
+    val table = Tables.media(spark, dir) match {
+      case Some(real) =>
+        real.select(col("doc_id").cast(LongType), col("format"),
+                    col("n_bytes").cast(LongType), col("content"))
+      case None =>
+        Tables.documents(spark, dir)
+          .select(col("doc_id"),
+                  element_at(array(lit("jpeg"), lit("png"), lit("wav"), lit("mp4")),
+                             (col("doc_id") % 4 + 1).cast(IntegerType)).as("format"),
+                  octet_length(col("text")).cast(LongType).as("n_bytes"),
+                  encode(col("text"), "utf-8").cast(BinaryType).as("content"))
+    }
+    table.as[MediaRow]
   }
 
   /** REAL JVM codec for the container formats the JDK ships decoders for

@@ -382,16 +382,6 @@ object StreamingOps {
       }
   }
 
-  /** The events parquet replayed as a genuine stream. The file source wants a
-    * directory, so we stage a /tmp dir holding a symlink to the (read-only)
-    * events.parquet of the requested scale factor.
-    *
-    * `readStream` demands an explicit schema, and the harness has shipped
-    * `ts` under several parquet encodings across rounds (raw NANOS → BIGINT
-    * under `nanosAsLong`; MICROS NTZ after the round-8 regeneration), so the
-    * replay borrows the batch loader's resolved schema — [[Tables.events]]
-    * already normalizes every variant to µs TimestampType — and applies the
-    * matching normalization on the stream side. */
   /** Stages `<dir>/<table>.parquet` for the file-stream source. The source
     * lists the staged dir FLAT, so a symlink to a multi-part parquet
     * DIRECTORY (the 10x soak copies) matches nothing and the replay
@@ -420,20 +410,26 @@ object StreamingOps {
     staged
   }
 
+  /** The events parquet replayed as a genuine stream. The file source wants a
+    * directory, so we stage a /tmp dir holding a symlink to the (read-only)
+    * events.parquet of the requested scale factor.
+    *
+    * `readStream` demands an explicit schema, and the harness has shipped
+    * `ts` under several parquet encodings across rounds (raw NANOS → BIGINT
+    * under `nanosAsLong`; MICROS NTZ after the round-8 regeneration). The
+    * `ts` type comes from the [[graft.engine.Tables]] loader's cached file
+    * schema (no schema-inference job per replay), and the stream side
+    * applies the batch loader's own normalization,
+    * [[graft.engine.Tables.normalizeTs]], so the replay sees the µs
+    * TimestampType column [[graft.engine.Tables.events]] does. */
   private def eventsStream(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageStreamInput("/tmp/graft_stream", dir, "events")
-    val rawType = spark.read.parquet(s"$dir/events.parquet")
-      .schema("ts").dataType
+    val rawType = graft.engine.Tables.fileSchema(spark, dir, "events")("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType), StructField("ts", rawType),
       StructField("user_id", LongType), StructField("event_type", StringType),
       StructField("value", DoubleType), StructField("props", StringType)))
-    val raw = spark.readStream.schema(schema).parquet(staged.toString)
-    rawType match {
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case TimestampNTZType => raw.withColumn("ts", col("ts").cast(TimestampType))
-      case _ => raw
-    }
+    graft.engine.Tables.normalizeTs(spark.readStream.schema(schema).parquet(staged.toString))
   }
 
   /** The documents parquet replayed as a stream (same staging trick as
@@ -1012,7 +1008,7 @@ object StreamingOps {
       .setFeatureRanges(Array(1.0, 50.0, 0.0, 0.1))
       .fit(train)
     val staged = stageStreamInput("/tmp/graft_stream_li", dir, "lineitem")
-    val schema = spark.read.parquet(s"$dir/lineitem.parquet").schema
+    val schema = graft.engine.Tables.fileSchema(spark, dir, "lineitem")
     val stream = spark.readStream.schema(schema).parquet(staged.toString)
       .select(col("l_quantity").as("x1"), col("l_discount").as("x2"),
               when(col("l_extendedprice") > 95000, 1).otherwise(0).as("label"))

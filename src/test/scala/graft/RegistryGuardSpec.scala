@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide guards — two structural invariants asserted over EVERY
   * registered query, so a future operator cannot regress them behind a
-  * log-only warning, plus two source-tree guards on the engine's
-  * configuration surface:
+  * log-only warning, plus source-tree guards on the engine's
+  * configuration surface and its table reads:
   *
   * 1. SINGLE-PARTITION WINDOWS. `WindowExec` with an empty partition spec
   *    funnels its whole input through one task ("No Partition Defined"
@@ -40,6 +40,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *    dev main lives among the operator bodies under `graft/queries/`.
   *    Anything a deployer tunes beyond these is a Spark conf they set
   *    directly.
+  *
+  * 4. ONE TABLE LOADER. Harness tables are read only through
+  *    [[graft.engine.Tables]], which infers each schema once; a bare
+  *    `spark.read.parquet` of one launches an inference job per call.
   */
 class RegistryGuardSpec extends AnyFunSuite {
   import TestSpark.{spark, sfSmoke}
@@ -142,6 +146,20 @@ class RegistryGuardSpec extends AnyFunSuite {
     assert(reads === Set("SPARK_GRAFT_SF_DIR", "SPARK_GRAFT_CPUS",
       "SPARK_GRAFT_DETAIL_OUT", "SPARK_GRAFT_STREAM_PARTITIONS",
       "SPARK_GRAFT_MICRO_RUNS"))
+  }
+
+  test("only the Tables loader reads a harness table with spark.read.parquet") {
+    // a bare read launches a schema-inference job per call; Tables caches it
+    val tables = Seq("region", "nation", "supplier", "customer", "part", "orders",
+      "lineitem", "events", "documents", "embeddings", "media").mkString("|")
+    val bare = ("""\bread\b.*\.parquet\(\s*s?"[^"]*/(?:""" + tables + """)\.parquet"""").r
+    // FullScaleSoak copies the raw source files once, before any engine read
+    val allowed = Set("FullScaleSoak.scala")
+    val offenders = mainSources("src/main/scala/graft")
+      .filterNot(f => allowed(f.getName))
+      .flatMap(f => read(f).linesIterator.filter(l => bare.findFirstIn(l).isDefined)
+        .map(l => s"${f.getName}: ${l.trim}"))
+    assert(offenders.isEmpty, s"read harness tables through graft.engine.Tables:\n${offenders.mkString("\n")}")
   }
 
   test("no main lives among the operator bodies under graft/queries") {
