@@ -68,21 +68,19 @@ object ChiMl {
 
   /** The two-feature adapter onto the shared CS-PCF learner
     * ([[ChiCore.learnRules]], R3–R7): one rule base per distinct `rbKey`
-    * value of `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), with the
-    * cost vector per distinct `costKey` value ([[costCase]]). Global keys
-    * pass Nil for both, the m-chunk mappers (x281/x308) key the rule base
-    * by `chunk` but keep the cost vector global, cross-validation keys both
-    * by `model`. With costSensitive=false every example weighs 1 (the BASE
-    * Chi-FRBCS, plain PCF). Returns (rbKey…, ra1, ra2, rcls, rw). The class
-    * counts, the learner's terms and its seeds each read `gex`, and an
-    * unmaterialized frame is computed once per read: a `gex` that scans the
-    * corpus is passed materialized. */
+    * value of `gex` (key columns ++ x1, x2, a1, a2, cls, mcnt), each
+    * example weighed by the `cost` factor on the learner's (…, __cls):
+    * [[costOf]] / [[costCase]] for the CS variant, [[unitCost]] for the
+    * BASE Chi-FRBCS (plain PCF). Global keys pass no `rbKey`, the m-chunk
+    * mappers (x281/x308) key the rule base by (mappers, chunk) but keep
+    * the cost vector global, cross-validation keys both by `model`.
+    * Returns (rbKey…, ra1, ra2, rcls, rw). The learner's terms and its
+    * seeds each read `gex`, and an unmaterialized frame is computed once
+    * per read: a `gex` that scans the corpus is passed materialized. */
   private[queries] def ruleBaseFrom(gex: DataFrame,
-                                    costSensitive: Boolean,
-                                    tnormMin: Boolean,
-                                    rbKey: Seq[String] = Nil,
-                                    costKey: Seq[String] = Nil): DataFrame = {
-    val cost = if (costSensitive) costCase(gex, costKey) else lit(1.0)
+                                    cost: Column,
+                                    tnormMin: Boolean = false,
+                                    rbKey: Seq[String] = Nil): DataFrame = {
     val agg = gex
       .withColumn("__ant", array(col("a1"), col("a2")))
       .withColumnRenamed("cls", "__cls").withColumnRenamed("mcnt", "__m")
@@ -92,23 +90,45 @@ object ChiMl {
                                     col("__cls").as("rcls"), col("rw")): _*)
   }
 
-  /** The R3 cost vector of `gex` per `costKey` value as a literal CASE on
-    * the learner's (costKey…, __cls): the class counts are collected once
-    * and priced by [[ChiCore.imbalanceCosts]], the estimator's own formula.
-    * Branches are emitted in key and class order, so equal counts give the
-    * same expression (and the same generated code) on every call. */
-  private def costCase(gex: DataFrame, costKey: Seq[String]): Column = {
+  /** The BASE Chi-FRBCS cost factor: every example weighs 1. */
+  private[queries] val unitCost: Column = lit(1.0)
+
+  /** Class counts collected to the driver: per cost-key value (in key
+    * order), its (cls, n) pairs in class order. */
+  private[graft] type ClassCounts = Seq[(Seq[Any], Seq[(Int, Long)])]
+
+  /** The class counts of `gex` per `costKey` value, in one collect of
+    * ≤ |keys|·|C| rows. */
+  private[graft] def classCounts(gex: DataFrame, costKey: Seq[String] = Nil): ClassCounts = {
     val k = costKey.size
     gex.groupBy((costKey :+ "cls").map(col): _*).agg(sum(col("mcnt"))).collect()
       .groupBy(r => (0 until k).map(r.get)).toSeq.sortBy(_._1.mkString(","))
-      .foldLeft(when(lit(false), 0.0)) { case (acc, (kv, rows)) =>
-        val at = costKey.zip(kv).map { case (c, v) => col(c) === lit(v) }
-        val costs = ChiCore.imbalanceCosts(rows.toSeq.map(r => r.getInt(k) -> r.getLong(k + 1)))
-        costs.toSeq.sorted.foldLeft(acc) { case (a, (c, v)) =>
-          a.when((at :+ (col("__cls") === c)).reduce(_ && _), v)
-        }
-      }.otherwise(1.0)
+      .map { case (kv, rows) => kv -> rows.toSeq.map(r => r.getInt(k) -> r.getLong(k + 1)).sorted }
   }
+
+  /** The R3 cost vector of collected class counts as a literal CASE on
+    * the learner's (costKey…, __cls), priced by [[ChiCore.imbalanceCosts]],
+    * the estimator's own formula. Branches are emitted in key and class
+    * order, so equal counts give the same expression (and the same
+    * generated code) on every call. */
+  private def costCase(counts: ClassCounts, costKey: Seq[String] = Nil): Column =
+    counts.foldLeft(when(lit(false), 0.0)) { case (acc, (kv, cs)) =>
+      val at = costKey.zip(kv).map { case (c, v) => col(c) === lit(v) }
+      ChiCore.imbalanceCosts(cs).toSeq.sorted.foldLeft(acc) { case (a, (c, v)) =>
+        a.when((at :+ (col("__cls") === c)).reduce(_ && _), v)
+      }
+    }.otherwise(1.0)
+
+  /** The R3 cost vector of `gex` per `costKey` value. */
+  private[queries] def costOf(gex: DataFrame, costKey: Seq[String] = Nil): Column =
+    costCase(classCounts(gex, costKey), costKey)
+
+  /** The no-match fallback class: the majority class of collected class
+    * counts, summed over their keys (tie → lowest class). Empty counts
+    * score no row, so any class serves them. */
+  private def majority(counts: ClassCounts): Int =
+    counts.flatMap(_._2).groupMapReduce(_._1)(_._2)(_ + _)
+      .minByOption { case (c, n) => (-n, c) }.fold(0)(_._1)
 
   /** A (…, ra1, ra2, rcls, rw) rule-base frame collected to the driver,
     * one array per value of the integer `key`. */
@@ -147,7 +167,7 @@ object ChiMl {
     * [[vectorGex]] — applied to the same vectors: (x1, x2, cls, m, ra1, ra2,
     * rcls, score), one row per distinct (x1, x2, cls). */
   private def classified(vg: DataFrame, costSensitive: Boolean = true): DataFrame =
-    classify(scoringGrid(vg), held(ruleBaseFrom(vg, costSensitive, tnormMin = false)))
+    classify(scoringGrid(vg), held(ruleBaseFrom(vg, if (costSensitive) costOf(vg) else unitCost)))
 
   /** THE binary confusion aggregate (R10): tp/tn/fp/fn as sums of `mass`
     * over the 0/1 `actual` and `predicted` columns, grouped by `by`, plus
@@ -162,18 +182,10 @@ object ChiMl {
       .withColumn("tnr", col("tn") * lit(1.0) / (col("tn") + col("fp")))
   }
 
-  /** The no-match fallback: (actual, pred, m) with the winner's class where
-    * its `evidence` column is positive, else the majority class of the
-    * training aggregate `gex` (tie → lowest class). */
-  private def predictOrMajority(win: DataFrame, gex: DataFrame, evidence: String): DataFrame = {
-    val maj = gex.groupBy("cls").agg(sum(col("mcnt")).as("n"))
-      .orderBy(col("n").desc, col("cls")).limit(1)
-      .select(col("cls").as("maj"))
-    win.crossJoin(broadcast(maj))
-      .select(col("cls").as("actual"),
-              when(col(evidence) > 0, col("rcls")).otherwise(col("maj")).as("pred"),
-              col("m"))
-  }
+  /** The no-match fallback: `win` gains `pred`, the winner's class where
+    * its `evidence` column is positive, else the `majority` class. */
+  private def predictOrMajority(win: DataFrame, majority: Int, evidence: String): DataFrame =
+    win.withColumn("pred", when(col(evidence) > 0, col("rcls")).otherwise(majority))
 
   /** 6-dp accuracy and GM of a [[binaryConfusion]] row. */
   private[queries] val accuracyGm: Seq[Column] = Seq(
@@ -234,9 +246,10 @@ object ChiMl {
       .agg(sum(col("m")).as("n"))
       .orderBy("actual", "predicted")
 
-  def q41(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir).materialized, costSensitive = true,
-                             tnormMin = false))
+  def q41(spark: SparkSession, dir: String): DataFrame = {
+    val vg = vectorGex(spark, dir).materialized
+    ruleBaseOut(ruleBaseFrom(vg, costOf(vg)))
+  }
 
   /** q42: winning-rule classification → confusion matrix (R9/R10). */
   def q42(spark: SparkSession, dir: String): DataFrame =
@@ -246,8 +259,7 @@ object ChiMl {
     * with unit costs. Same plan shape; the learned weights differ wherever
     * the cost vector tipped a conflict toward the minority class. */
   def x51(spark: SparkSession, dir: String): DataFrame =
-    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir).materialized, costSensitive = false,
-                             tnormMin = false))
+    ruleBaseOut(ruleBaseFrom(vectorGex(spark, dir).materialized, unitCost))
 
   /** x52: base-variant confusion matrix — q42 without cost weighting; read
     * against q42 it quantifies what cost-sensitivity buys on the minority
@@ -280,7 +292,7 @@ object ChiMl {
   def x201(spark: SparkSession, dir: String): DataFrame = {
     // one corpus scan: the rule base and the winners share one aggregate
     val vg = vectorGex(spark, dir).materialized
-    val rb = ruleBaseFrom(vg, costSensitive = true, tnormMin = false)
+    val rb = ruleBaseFrom(vg, costOf(vg))
       .select(col("ra1").as("ba1"), col("ra2").as("ba2"),
               col("rcls").as("bcls"), col("rw").as("brw"))
     val winAgg = classified(vg)
@@ -465,28 +477,22 @@ object ChiMl {
     * cost-sensitive minority protection as the mapper count grows, trading
     * minority recall (GM) for raw accuracy.
     *
-    * 100 TB: the chunk id is one map-side column; the weight aggregation
-    * is ONE (chunk, antecedent, class)-keyed partial+final agg — the
-    * paper's m single-JVM mappers become m logical key groups in the same
-    * shuffle, so m scales freely without re-planning; the ≤ m·L²·|C|
-    * partial rules are fused on the driver and scoring is row-local
-    * against the fused base (no window). The corpus is
-    * scanned ONCE for all three m values (round 13): the FINEST (m = 16)
-    * chunk aggregate is checkpointed and the coarser legs read it with
-    * `chunk % m` in place — exact because every declared m divides 16, so
-    * (k mod 16) mod m ≡ k mod m, and no re-aggregation is needed: each
-    * weight term is rounded before its multiplicity factor and DECIMAL ×
-    * count is distributive, so the finer multiplicities give the same
-    * weight sums, class counts and scoring grid as their merged rows. */
-  def x281(spark: SparkSession, dir: String): DataFrame = {
-    val gex16 = mChunkGex(spark, dir, 16).materialized
-    // the three per-m reports each run an eager bounded-grid fuse off the
-    // same checkpointed aggregate — independent work, submitted
-    // concurrently (guide §2.6, graft.engine.Par); identical outputs
-    graft.engine.Par.all(
-        Seq(1, 4, 16).map(m => () => mChunkReportFrom(rechunk(gex16, m), m)))
-      .reduce(_ unionByName _).orderBy("m")
-  }
+    * 100 TB: one plan serves all three m values ([[mChunkReport]]). The
+    * corpus is scanned ONCE: the FINEST (m = 16) chunk aggregate is
+    * checkpointed and stacked once per m with `chunk % m` — exact because
+    * every declared m divides 16, so (k mod 16) mod m ≡ k mod m, and no
+    * re-aggregation is needed: each weight term is rounded before its
+    * multiplicity factor and DECIMAL × count is distributive, so the finer
+    * multiplicities give the same weight sums, class counts and scoring
+    * grid as their merged rows. Every mapper count is a key group of ONE
+    * (mappers, chunk, antecedent)-keyed learner shuffle — the paper's m
+    * single-JVM mappers become m logical key groups, so m scales freely
+    * without re-planning; the ≤ (1 + 4 + 16)·L² partial rules are
+    * collected once and fused on the driver, and the m-independent scoring
+    * grid is scored row-locally against the m-keyed fused bases (no
+    * window) and reduced by one m-grouped confusion aggregate. */
+  def x281(spark: SparkSession, dir: String): DataFrame =
+    mChunkReport(spark, dir, mChunkMaxFused)
 
   /** x308: THE Chi-FRBCS-BigData-AVE FUSION VARIANT — x281's m-chunk
     * ablation under the paper's SECOND reducer ([P2]'s Max/Ave pair,
@@ -508,49 +514,75 @@ object ChiMl {
     * exactly the paper's stated reason for shipping the Ave reducer.
     *
     * 100 TB: identical shape to x281 — the fuse's only new work is a
-    * (antecedent, consequent)-keyed BIGINT partial+final aggregate over
-    * the ≤ m·L²·|C| partial rules, bounded and broadcast-sized at any m. */
-  def x308(spark: SparkSession, dir: String): DataFrame = {
-    val gex16 = mChunkGex(spark, dir, 16).materialized
-    // concurrent per-m reports (x281's discipline; identical outputs)
-    graft.engine.Par.all(Seq(1, 4, 16).map(m =>
-        () => mChunkReportFrom(rechunk(gex16, m), m,
-          g => held(mChunkAveFusedRbFrom(g)).getOrElse(0, Array.empty))))
-      .reduce(_ unionByName _).orderBy("m")
-  }
+    * (mappers, antecedent, consequent)-keyed BIGINT partial+final
+    * aggregate over the ≤ (1 + 4 + 16)·L² partial rules, bounded at any
+    * m. */
+  def x308(spark: SparkSession, dir: String): DataFrame =
+    mChunkReport(spark, dir, mChunkAveFused)
 
-  /** Re-chunk the finest (16-chunk) aggregate to m chunks. Exact for any
-    * m | 16: the chunk id is a mod-16 residue of the Knuth mix, and
-    * (k mod 16) mod m = k mod m when m divides 16. */
-  private def rechunk(gex16: DataFrame, m: Int): DataFrame = {
-    require(16 % m == 0, s"x281 re-chunking needs m | 16, got $m")
-    gex16.withColumn("chunk", col("chunk") % m)
-  }
+  /** x281/x308's mapper counts; each divides 16, the finest chunking. */
+  private val MapperCounts = Seq(1, 4, 16)
 
-  /** The fused rule base of the m-chunk scheme (x281's core; also the
-    * Round12Spec m=1 identity probe). */
-  private[graft] def mChunkFusedRb(spark: SparkSession, dir: String,
-                                   m: Int): Array[ChiRule] =
-    mChunkMaxFused(mChunkGex(spark, dir, m))
+  /** One copy of `df` per mapper count, keyed by `mappers`. */
+  private def perMapperCount(df: DataFrame): DataFrame =
+    df.withColumn("mappers", explode(typedLit(MapperCounts)))
+
+  /** A reducer: the partial rule bases (mappers, chunk, ra1, ra2, rcls,
+    * rw) fused into one base per mapper count. */
+  private[graft] type Fuse = DataFrame => Map[Int, Array[ChiRule]]
+
+  /** Chunk-compressed training view of m mappers: one row per DISTINCT
+    * (mappers = m, chunk, feature vector, argmax antecedent, class) with
+    * multiplicity — every downstream input of the m-chunk chain derives
+    * from this ONE aggregate. */
+  private[graft] def mChunkGex(spark: SparkSession, dir: String, m: Int): DataFrame =
+    vectorGex(spark, dir, "mappers" -> lit(m), "chunk" ->
+      (((col("l_orderkey") % 100000000L) * lit(2654435761L) +
+        col("l_linenumber") * lit(97564181L)) % lit(2147483647L) % m).cast(IntegerType))
 
   /** The CHUNK-LOCAL partial rule bases, each mapper's resolved RB: the
-    * shared first half of both fusion variants (chunk-keyed rule base, global
-    * cost vector). Returns (chunk, ra1, ra2, rcls, rw). */
-  private def mChunkPartialRb(gex: DataFrame): DataFrame =
-    ruleBaseFrom(gex, costSensitive = true, tnormMin = false, rbKey = Seq("chunk"))
+    * shared first half of both fusion variants, one base per (mappers,
+    * chunk) of `gex`, under the global cost vector priced from `counts`.
+    * Returns (mappers, chunk, ra1, ra2, rcls, rw). */
+  private[graft] def mChunkPartialRb(gex: DataFrame, counts: ClassCounts): DataFrame =
+    ruleBaseFrom(gex, costCase(counts), rbKey = Seq("mappers", "chunk"))
+
+  /** Every mapper count's fused base off the checkpointed 16-chunk
+    * aggregate: `gex16` is stacked once per m with `chunk % m` (exact for
+    * every m | 16, see [[x281]]), learned in one keyed shuffle and fused
+    * by `fuse`. */
+  private[graft] def mChunkBases(gex16: DataFrame, counts: ClassCounts,
+                                 fuse: Fuse): Map[Int, Array[ChiRule]] =
+    fuse(mChunkPartialRb(
+      perMapperCount(gex16).withColumn("chunk", col("chunk") % col("mappers")), counts))
+
+  /** The fused Max rule base of m mappers, learned on its own (the
+    * Round12Spec m=1 identity probe). */
+  private[graft] def mChunkFusedRb(spark: SparkSession, dir: String,
+                                   m: Int): Array[ChiRule] = {
+    val gex = mChunkGex(spark, dir, m)
+    mChunkMaxFused(mChunkPartialRb(gex, classCounts(gex))).getOrElse(m, Array.empty)
+  }
 
   /** The reducer's MAX-RW fusion across chunks (Chi-FRBCS-BigData-Max,
-    * [P2]): the ≤ m·L²·|C| partial rules are collected and fused on the
-    * driver by [[ChiCSModel.mergeRuleBases]] — per antecedent the single
-    * partial rule with maximum weight, tie → lowest class. */
-  private[graft] def mChunkMaxFused(gex: DataFrame): Array[ChiRule] =
-    ChiCSModel.mergeRuleBases(held(mChunkPartialRb(gex), col("chunk")).values.toSeq)
+    * [P2]): the partial rules are collected and fused on the driver by
+    * [[ChiCSModel.mergeRuleBases]] — per antecedent the single partial rule
+    * with maximum weight, tie → lowest class — one base per mapper count.
+    * A per-antecedent maximum does not depend on which chunk a rule came
+    * from, so each m's rules go in as one array. */
+  private[graft] val mChunkMaxFused: Fuse = partial =>
+    held(partial, col("mappers")).map { case (m, rs) => m -> ChiCSModel.mergeRuleBases(Seq(rs)) }
+
+  /** [[mChunkAveFusedRbFrom]] collected, one base per mapper count. */
+  private[graft] val mChunkAveFused: Fuse = partial =>
+    held(mChunkAveFusedRbFrom(partial), col("mappers"))
 
   /** The reducer's AVERAGED-RW fusion (Chi-FRBCS-BigData-Ave, [P2] — the
-    * SURVEY §2.3 Max/Ave pair's second member): per (antecedent,
+    * SURVEY §2.3 Max/Ave pair's second member): per (mappers, antecedent,
     * consequent), average the rule weight across the partial RBs that
-    * contain the rule; per antecedent keep the consequent with the
-    * maximum averaged weight, tie → lowest class.
+    * contain the rule; per (mappers, antecedent) keep the consequent with
+    * the maximum averaged weight, tie → lowest class. Returns (mappers,
+    * ra1, ra2, rcls, rw).
     *
     * Determinism protocol: each partial rw quantizes ONCE to integer
     * micro-units (round-to-0-decimals on `rw·10⁶` — the bit-stable
@@ -562,40 +594,41 @@ object ChiMl {
     * quantized average (s_micro / (cnt·10⁶), one IEEE divide both
     * engines spell identically). m = 1 degenerates to Max modulo the
     * micro quantization (Round14Spec pins report equality at sf0.001). */
-  private[graft] def mChunkAveFusedRbFrom(gex: DataFrame): DataFrame = {
-    val ave = mChunkPartialRb(gex)
+  private[graft] def mChunkAveFusedRbFrom(partial: DataFrame): DataFrame = {
+    val ave = partial
       .withColumn("rw_micro", round(col("rw") * 1000000, 0).cast(LongType))
-      .groupBy("ra1", "ra2", "rcls")
+      .groupBy("mappers", "ra1", "ra2", "rcls")
       .agg(sum(col("rw_micro")).as("s_micro"), count(lit(1)).as("cnt"))
-    val byAnt = Window.partitionBy("ra1", "ra2")
+    val byAnt = Window.partitionBy("mappers", "ra1", "ra2")
       .orderBy(expr("s_micro * (720720 DIV cnt)").desc, col("rcls"))
     ave.withColumn("fn", row_number().over(byAnt))
       .filter(col("fn") === 1)
-      .select(col("ra1"), col("ra2"), col("rcls"),
+      .select(col("mappers"), col("ra1"), col("ra2"), col("rcls"),
               (col("s_micro").cast(DoubleType) /
                 (col("cnt") * 1000000L).cast(DoubleType)).as("rw"))
   }
 
-  /** Chunk-compressed training view: one row per DISTINCT
-    * (chunk, feature vector, argmax antecedent, class) with multiplicity —
-    * every downstream input of the m-chunk chain derives from this ONE
-    * aggregate (ReusedExchange serves the other consumers). */
-  private def mChunkGex(spark: SparkSession, dir: String, m: Int): DataFrame =
-    vectorGex(spark, dir, "chunk" ->
-      (((col("l_orderkey") % 100000000L) * lit(2654435761L) +
-        col("l_linenumber") * lit(97564181L)) % lit(2147483647L) % m).cast(IntegerType))
-
-  /** One (m, n_rules, acc_ppm, gm_ppm) report row: fuse on the driver,
-    * score the full training corpus with the fused base (winning-rule,
-    * global-majority no-match fallback), reduce to micro-unit accuracy /
-    * GM. The gex argument is a (re-chunked view of the) checkpointed chunk
-    * aggregate — the only corpus-derived input of the whole chain. */
-  private def mChunkReportFrom(gex: DataFrame, m: Int,
-      fuse: DataFrame => Array[ChiRule] = mChunkMaxFused): DataFrame = {
-    val fused = fuse(gex)
-    val win = classify(scoringGrid(gex), Map(0 -> fused))
-    binaryConfusion(predictOrMajority(win, gex, "score"), "actual", "pred", col("m"))
-      .select(lit(m.toLong).as("m") +: lit(fused.length.toLong).as("n_rules") +: ppmMetrics: _*)
+  /** The (m, n_rules, acc_ppm, gm_ppm) report of every mapper count in
+    * one plan: fuse on the driver, score the m-independent scoring grid
+    * once per m against the m-keyed fused bases (winning-rule,
+    * global-majority no-match fallback) and reduce to micro-unit accuracy
+    * / GM in one m-grouped confusion aggregate. The checkpointed 16-chunk
+    * aggregate is the only corpus-derived input of the whole chain; its
+    * class counts, collected once, price the cost vector and name the
+    * majority class. */
+  private def mChunkReport(spark: SparkSession, dir: String, fuse: Fuse): DataFrame = {
+    val gex16 = mChunkGex(spark, dir, 16).materialized
+    val counts = classCounts(gex16)
+    val bases = mChunkBases(gex16, counts, fuse)
+    // literal per-m sizes, in m order: the same bases give the same code
+    val nRules = MapperCounts.foldLeft(when(lit(false), 0L)) { (acc, m) =>
+      acc.when(col("mappers") === m, bases.getOrElse(m, Array.empty).length.toLong)
+    }.otherwise(0L)
+    val grid = perMapperCount(scoringGrid(gex16))
+    val win = predictOrMajority(classify(grid, bases, Some("mappers")), majority(counts), "score")
+    binaryConfusion(win, "cls", "pred", col("m"), by = Seq("mappers"))
+      .select(col("mappers").cast(LongType).as("m") +: nRules.as("n_rules") +: ppmMetrics: _*)
+      .orderBy("m")
   }
 
   /** x285: FUZZY REASONING METHOD ABLATION — the FRBCS design grid the Chi
@@ -622,12 +655,14 @@ object ChiMl {
     * rows) per-rule scores, so the whole 4-cell ablation costs one shuffle
     * over the data plus grid-sized work. */
   def x285(spark: SparkSession, dir: String): DataFrame = {
-    // ONE corpus scan: both t-norm fits, the scoring grain and the majority
-    // class all derive from the same checkpointed vector aggregate
+    // ONE corpus scan: both t-norm fits, the scoring grain, the cost vector
+    // and the majority class all derive from the same checkpointed vector
+    // aggregate, whose class counts are collected once
     val gex0 = vectorGex(spark, dir).materialized
+    val counts = classCounts(gex0)
     // concurrent per-t-norm reports (independent eager fits off the one
     // checkpointed aggregate; identical outputs)
-    graft.engine.Par.all(Seq(false, true).map(tn => () => frmReports(gex0, tn)))
+    graft.engine.Par.all(Seq(false, true).map(tn => () => frmReports(gex0, counts, tn)))
       .reduce(_ unionByName _).orderBy("frm", "tnorm")
   }
 
@@ -637,14 +672,14 @@ object ChiMl {
     grid.crossJoin(broadcast(rb)).withColumn("score", round(matchDegree(tnormMin) * col("rw"), 12))
 
   /** Both FRM rows (winner + additive) for one t-norm. */
-  private def frmReports(gex0: DataFrame, tnormMin: Boolean): DataFrame = {
+  private def frmReports(gex0: DataFrame, counts: ClassCounts, tnormMin: Boolean): DataFrame = {
     val tname = if (tnormMin) "min" else "prod"
-    val fused = ruleBaseFrom(gex0, costSensitive = true, tnormMin = tnormMin)
-      .materialized
+    val fused = ruleBaseFrom(gex0, costCase(counts), tnormMin).materialized
     val rules = held(fused)
     val nRules = lit(rules.getOrElse(0, Array.empty).length.toLong).as("n_rules")
     val grid = scoringGrid(gex0)
-    val winW = predictOrMajority(classify(grid, rules, tnormMin = tnormMin), gex0, "score")
+    val maj = majority(counts)
+    val winW = predictOrMajority(classify(grid, rules, tnormMin = tnormMin), maj, "score")
     // the additive FRM sums every rule's score (grid-bounded: ≤ |x1 grid|·
     // |x2 grid|·2·|RB| rows), in exact pico-units
     val votes = ruleScores(grid, fused, tnormMin)
@@ -654,10 +689,9 @@ object ChiMl {
     val perCls = Window.partitionBy("x1", "x2", "cls")
       .orderBy(col("v").desc, col("rcls"))
     val winA = predictOrMajority(
-      votes.withColumn("rn", row_number().over(perCls)).filter(col("rn") === 1),
-      gex0, "v")
+      votes.withColumn("rn", row_number().over(perCls)).filter(col("rn") === 1), maj, "v")
     def report(win: DataFrame, frm: String): DataFrame =
-      binaryConfusion(win, "actual", "pred", col("m"))
+      binaryConfusion(win, "cls", "pred", col("m"))
         .select(lit(frm).as("frm") +: lit(tname).as("tnorm") +: nRules +: ppmMetrics: _*)
     report(winW, "winner").unionByName(report(winA, "additive"))
   }

@@ -52,8 +52,7 @@ object Crossval {
     * gm), one row per model. */
   private def evalModels(trainG: DataFrame, testG: DataFrame): DataFrame = {
     val key = Seq("model")
-    val rb = ChiMl.ruleBaseFrom(trainG, costSensitive = true, tnormMin = false,
-                                rbKey = key, costKey = key)
+    val rb = ChiMl.ruleBaseFrom(trainG, ChiMl.costOf(trainG, key), rbKey = key)
     val win = ChiMl.classify(testG, ChiMl.held(rb, col("model")), Some("model"))
     val nTrain = trainG.groupBy("model").agg(sum("mcnt").as("n_train"))
     ChiMl.binaryConfusion(win, "cls", "rcls", col("m"), key)

@@ -46,6 +46,47 @@ class Round12Spec extends AnyFunSuite {
       s"fused RB sizes ${rows.map(_._2).toSeq} vs candidate grid $nCandAnts")
   }
 
+  private def ruleSet(rs: Array[graft.engine.chi.ChiRule]): Set[(Seq[Int], Int, Double)] =
+    rs.map(r => (r.antecedent.toSeq, r.cls, r.weight)).toSet
+
+  test("x281's keyed fused bases equal each m's standalone Max fusion, rule for rule") {
+    import graft.engine.Mat.MatOps
+    import graft.queries.ChiMl
+    // one keyed learner over the stacked 16-chunk aggregate must fuse, per
+    // m, exactly the base a standalone m-chunk fit fuses
+    val gex16 = ChiMl.mChunkGex(spark, sfSmoke, 16).materialized
+    val keyed = ChiMl.mChunkBases(gex16, ChiMl.classCounts(gex16), ChiMl.mChunkMaxFused)
+    assert(keyed.keySet === Set(1, 4, 16))
+    for (m <- Seq(1, 4, 16))
+      assert(ruleSet(keyed(m)) === ruleSet(ChiMl.mChunkFusedRb(spark, sfSmoke, m)), s"m=$m")
+  }
+
+  test("x308's keyed fused bases equal each m's standalone Ave fusion, rule for rule") {
+    import graft.engine.Mat.MatOps
+    import graft.queries.ChiMl
+    val gex16 = ChiMl.mChunkGex(spark, sfSmoke, 16).materialized
+    val keyed = ChiMl.mChunkBases(gex16, ChiMl.classCounts(gex16), ChiMl.mChunkAveFused)
+    assert(keyed.keySet === Set(1, 4, 16))
+    for (m <- Seq(1, 4, 16)) {
+      val gex = ChiMl.mChunkGex(spark, sfSmoke, m)
+      val alone = ChiMl.mChunkAveFusedRbFrom(ChiMl.mChunkPartialRb(gex, ChiMl.classCounts(gex)))
+        .collect().map(r => (Seq(r.getAs[Int]("ra1"), r.getAs[Int]("ra2")),
+                             r.getAs[Int]("rcls"), r.getAs[Double]("rw"))).toSet
+      assert(ruleSet(keyed(m)) === alone, s"m=$m")
+    }
+  }
+
+  test("x281 at sf0.001 runs all three mapper counts in at most 12 Spark jobs") {
+    // one learner, one scorer and one confusion aggregate serve every m
+    // (three concurrent per-m chains launch 21); the first call warms the
+    // JVM's lineitem schema, whose inference is a job of its own
+    graft.queries.ChiMl.x281(spark, sfSmoke).collect()
+    val jobs = JobCount.launched(spark, "round12-x281-jobs") {
+      graft.queries.ChiMl.x281(spark, sfSmoke).collect()
+    }
+    assert(jobs <= 12, s"x281 launched $jobs Spark jobs")
+  }
+
   private val sf01 = "/root/testdata/sf0.01"
 
   test("x284 drop rule: dropped = {v | ∃ kept u<v in-cell with cos≥τ}, keepers survive") {

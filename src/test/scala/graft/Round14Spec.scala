@@ -43,11 +43,12 @@ class Round14Spec extends AnyFunSuite {
       (0, 1.0, 0.0, 0, 0, 1, 9L), (0, 1.0, 0.0, 0, 0, 0, 1L),
       (1, 1.0, 0.0, 0, 0, 1, 6L), (1, 1.0, 0.0, 0, 0, 0, 4L),
       (2, 1.0, 0.0, 0, 0, 1, 2L), (2, 1.0, 0.0, 0, 0, 0, 8L)
-    ).toDF("chunk", "x1", "x2", "a1", "a2", "cls", "mcnt")
-    val maxRb = graft.queries.ChiMl.mChunkMaxFused(gex).toSeq
+    ).toDF("chunk", "x1", "x2", "a1", "a2", "cls", "mcnt").withColumn("mappers", lit(3))
+    val partial = graft.queries.ChiMl.mChunkPartialRb(gex, graft.queries.ChiMl.classCounts(gex))
+    val maxRb = graft.queries.ChiMl.mChunkMaxFused(partial)(3).toSeq
       .map(r => (r.antecedent(0), r.antecedent(1), r.cls, r.weight))
       .toDF("ra1", "ra2", "rcls", "rw").collect()
-    val aveRb = graft.queries.ChiMl.mChunkAveFusedRbFrom(gex).collect()
+    val aveRb = graft.queries.ChiMl.mChunkAveFusedRbFrom(partial).collect()
     assert(maxRb.length === 1 && aveRb.length === 1)
     assert(maxRb.head.getAs[Int]("rcls") === 1)
     assert(aveRb.head.getAs[Int]("rcls") === 0)

@@ -98,10 +98,11 @@ class Round16Spec extends AnyFunSuite {
   }
 
   test("a second run of the Chi keys compiles no generated code") {
-    // The engine re-runs the same plans per fold, mapper count and call:
-    // every repeat must hit Spark's codegen cache. This key set needs more
-    // than Spark's default 100 entries, and x281's concurrent fits
-    // renumber AQE stages between runs.
+    // The engine re-runs the same plans per fold and call: every repeat
+    // must hit Spark's codegen cache. This key set needs more than Spark's
+    // default 100 entries, and the literals a plan is built from (x281's
+    // cost vector, per-m rule counts and majority class) must come out in
+    // the same order on every run.
     import org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val keys = Seq("q39_ml_fuzzy_membership", "q40_ml_chi_rulegen", "q41_ml_chi_rule_weights",
       "q42_ml_chi_classify", "q43_ml_metrics", "x281_chi_mchunk_ablation")

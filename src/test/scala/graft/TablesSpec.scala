@@ -1,15 +1,10 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
@@ -29,33 +24,8 @@ class TablesSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def tagged[T](tag: String)(body: => T): T = {
-    spark.sparkContext.addJobTag(tag)
-    try body finally spark.sparkContext.removeJobTag(tag)
-  }
-
-  /** The number of Spark jobs `body` launches, by job tag. The listener bus
-    * delivers events in order, so once a later marker job's start is seen,
-    * every job `body` launched has been seen too. */
-  private def jobsLaunched(tag: String)(body: => Unit): Int = {
-    val seen = new ConcurrentLinkedQueue[Set[String]]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-          .fold(Set.empty[String])(_.split(",").toSet))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      tagged(tag)(body)
-      val marker = s"$tag-marker"
-      tagged(marker)(spark.sparkContext.parallelize(Seq(1), 1).count())
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.asScala.exists(_.contains(marker)) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.asScala.exists(_.contains(marker)), "listener never saw the marker job")
-      seen.asScala.count(_.contains(tag))
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+  private def jobsLaunched(tag: String)(body: => Unit): Int =
+    JobCount.launched(spark, tag)(body)
 
   test("(a) a second lineitem read and its schema launch no Spark job") {
     // a fresh copy, so the first read below is this JVM's first of the path
